@@ -1776,32 +1776,6 @@ def q_near_dedup(spark, sf_dir):
     return carry_caches(out, exact, found)
 
 
-def _overlap_materialize(df):
-    """Materialize `df` (noop sink) on a driver thread and return the
-    thread (guide §2.6: overlap independent jobs).
-
-    The stream audit entries run a BLOCKING bounded stream whose
-    stateful stages cannot use every core; the exact-Jaccard ground
-    truth is an independent batch leg, so materializing it
-    concurrently hides its wall under the stream's. Callers persist
-    `df` first so the audit reuses the materialized result instead of
-    recomputing. Failures are swallowed: the overlap is an
-    optimization only — the audit plan still computes `df` lazily if
-    the warm-up died (the persist makes that a recompute, never a
-    wrong answer)."""
-    import threading
-
-    def _run():
-        try:
-            df.write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
-
-    t = threading.Thread(target=_run, daemon=True)
-    t.start()
-    return t
-
-
 def _near_dedup_audit(exact, found):
     """The near-dedup family's shared audit frame: `n_exact` (the
     oracle recomputes it independently), `false_pairs` (must be 0 —
@@ -7840,41 +7814,43 @@ def q_bm25_topk(spark, sf_dir):
     return textops.bm25_topk(_t(spark, sf_dir, "documents"))
 
 
+def _stream_verified_pairs(spark, source_dir, transform, schema, docs):
+    """The stream audit entries' shared skeleton: run the candidate
+    stream `transform` over the bounded `source_dir`, then verify its
+    pairs with exact Jaccard against `docs`. Returns the verified
+    pairs, which own the verifier's restricted-shingle cache.
+
+    Callers build the exact-Jaccard ground truth AFTER this returns:
+    a stream that raises then leaves no cache and no job behind."""
+    from elb_log_to_mysql_spark.streaming.neardedup import verify_candidate_pairs
+
+    cand = run_stream_to_batch(
+        spark, source_dir, transform, schema, output_mode="append"
+    )
+    return verify_candidate_pairs(cand, docs)
+
+
 @_q("stream_near_dedup")
 def q_stream_near_dedup(spark, sf_dir):
     """Streaming MinHash-LSH near-dedup: LSH bucket state streams
     candidate pairs (streaming/neardedup.py:stream_band_collisions —
-    applyInPandasWithState keyed on (band_idx, band_hash), state =
-    bucket occupants), exact-Jaccard verification joins the shingle
-    sets back from the corpus store. Audited exactly like the batch
-    `near_dedup` entry and sharing its oracle verbatim: `n_exact`
-    (DuckDB recomputes the exact threshold-0.6 pair set), `false_pairs`
-    must be 0 (verification is structural), and the 0.9 recall floor
-    (the 64/16 S-curve; measured 1.0 at sf0.001/sf0.01 for the
-    seeded-xxhash64 family too)."""
-    from elb_log_to_mysql_spark.streaming.neardedup import (
-        stream_band_collisions,
-        verify_candidate_pairs,
-    )
+    applyInPandasWithState keyed on a shard of LSH buckets, state =
+    each bucket's occupants), exact-Jaccard verification joins the
+    shingle sets back from the corpus store. Audited exactly like the
+    batch `near_dedup` entry and sharing its oracle verbatim:
+    `n_exact` (DuckDB recomputes the exact threshold-0.6 pair set),
+    `false_pairs` must be 0 (verification is structural), and the 0.9
+    recall floor (the 64/16 S-curve; measured 1.0 at sf0.001/sf0.01
+    for the seeded-xxhash64 family too)."""
+    from elb_log_to_mysql_spark.streaming.neardedup import stream_band_collisions
 
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = raw_parquet_schema(spark, path)
-    # The exact ground truth is independent of the stream: persist it
-    # and materialize on a side thread while the bounded stream runs,
-    # so its wall hides under the stream's (r16, guide §2.6). The
-    # cached pair set is small (the audit's own output volume class)
-    # and GC-scoped like every other in-query cache.
     docs = _t(spark, sf_dir, "documents")
-    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.6).persist()
-    warm = _overlap_materialize(exact)
-    cand = run_stream_to_batch(
-        spark, path, stream_band_collisions, schema, output_mode="append"
+    found = _stream_verified_pairs(
+        spark, path, stream_band_collisions, raw_parquet_schema(spark, path), docs
     )
-    warm.join()
-    found = verify_candidate_pairs(cand, docs)
-    out = _near_dedup_audit(exact, found)
-    # `found` owns the verifier's restricted-shingle cache (r16)
-    return carry_caches(unpersist_on_gc(out, exact), exact, found)
+    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.6)
+    return carry_caches(_near_dedup_audit(exact, found), exact, found)
 
 
 ORACLE_SQL["stream_near_dedup"] = ORACLE_SQL["near_dedup"]
@@ -7895,24 +7871,19 @@ def q_stream_near_dedup_join(spark, sf_dir):
     floor."""
     from elb_log_to_mysql_spark.streaming.neardedup import (
         stream_band_collisions_join,
-        verify_candidate_pairs,
     )
 
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = raw_parquet_schema(spark, path)
-    # same overlap as stream_near_dedup: the exact leg materializes
-    # on a side thread while the bounded stream runs (guide §2.6)
     docs = _t(spark, sf_dir, "documents")
-    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.6).persist()
-    warm = _overlap_materialize(exact)
-    cand = run_stream_to_batch(
-        spark, path, stream_band_collisions_join, schema, output_mode="append"
+    found = _stream_verified_pairs(
+        spark,
+        path,
+        stream_band_collisions_join,
+        raw_parquet_schema(spark, path),
+        docs,
     )
-    warm.join()
-    found = verify_candidate_pairs(cand, docs)
-    out = _near_dedup_audit(exact, found)
-    # `found` owns the verifier's restricted-shingle cache (r16)
-    return carry_caches(unpersist_on_gc(out, exact), exact, found)
+    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.6)
+    return carry_caches(_near_dedup_audit(exact, found), exact, found)
 
 
 ORACLE_SQL["stream_near_dedup_join"] = ORACLE_SQL["near_dedup"]
@@ -7941,7 +7912,6 @@ def q_stream_near_dedup_blocklist(spark, sf_dir):
     from elb_log_to_mysql_spark.streaming.neardedup import (
         hot_bucket_blocklist,
         stream_band_collisions_join,
-        verify_candidate_pairs,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -7969,20 +7939,16 @@ def q_stream_near_dedup_blocklist(spark, sf_dir):
     corpus_batch = spark.read.parquet(corpus_dir)
 
     bl = hot_bucket_blocklist(corpus_batch, max_bucket=20)
-    # overlap the exact ground truth (over the UNMODIFIED documents
-    # table — the natural-pair contract) with the bounded stream run,
-    # as in the other two stream audit entries (guide §2.6)
-    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.6).persist()
-    warm = _overlap_materialize(exact)
-    cand = run_stream_to_batch(
+    found = _stream_verified_pairs(
         spark,
         corpus_dir,
         lambda s: stream_band_collisions_join(s, blocklist=bl),
         corpus_batch.schema,
-        output_mode="append",
+        corpus_batch,
     )
-    warm.join()
-    found = verify_candidate_pairs(cand, corpus_batch)
+    # the exact ground truth is over the UNMODIFIED documents table
+    # (the natural-pair contract)
+    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.6)
     spam_stats = found.agg(
         F.sum(
             (
@@ -8004,8 +7970,7 @@ def q_stream_near_dedup_blocklist(spark, sf_dir):
             (F.coalesce("n_spam_pairs", F.lit(0)) == 0).alias("spam_blocked"),
         )
     )
-    # `found` owns the verifier's restricted-shingle cache (r16)
-    return carry_caches(unpersist_on_gc(out, exact), exact, found)
+    return carry_caches(out, exact, found)
 
 
 ORACLE_SQL["stream_near_dedup_blocklist"] = ORACLE_SQL["near_dedup"].replace(

@@ -32,21 +32,24 @@ batch operator uses. Precision therefore stays STRUCTURAL (every
 reported pair is exact-verified); recall is the LSH S-curve, same
 contract as `near_dedup`.
 
-State size: O(occupied buckets × bucket occupancy), bounded two ways:
-`max_per_bucket` — a degenerate bucket (spam cluster) stops
-accumulating state and stops emitting pairs beyond the cap, the
-streaming twin of the batch `max_bucket` skew guard — and
-`idle_timeout_ms` — a bucket untouched for that long is evicted from
-the state store (the dedup HORIZON: a new document no longer pairs
-against occupants older than the horizon), the same
-processing-time-timeout pattern as stateful.py's profile operator.
-Without a timeout, state is a pure function of the input and the
-gate checks it bit-for-bit; production continuous ingest always sets
-one.
+State layout: one state row per SHARD of buckets (`pmod` of the
+bucket key's xxhash64; see `stream_band_collisions`), each row
+holding every occupied bucket of its shard with its occupants and
+last-touch time. State size: O(occupied buckets × bucket occupancy),
+bounded two ways: `max_per_bucket` — a degenerate bucket (spam
+cluster) stops accumulating state and stops emitting pairs beyond the
+cap, the streaming twin of the batch `max_bucket` skew guard — and
+`idle_timeout_ms` — a bucket untouched for that long is pruned before
+its shard's next arrivals pair (the dedup HORIZON: a new document no
+longer pairs against occupants older than the horizon), and a shard
+untouched for that long is evicted from the state store by the
+processing-time timeout. Without a timeout, state is a pure function
+of the input and the gate checks it bit-for-bit; production
+continuous ingest always sets one.
 
-State-store provider: the operator keys state on (band_idx,
-band_hash) — O(corpus) DISTINCT groups (16 per doc), so the default
-in-heap HDFSBacked provider stops fitting long before the data does
+State-store provider: state grows with the number of occupied
+buckets — O(corpus) (16 per doc) — so the default in-heap
+HDFSBacked provider stops fitting long before the data does
 (measured: 1.6M buckets OOM an 8 GiB local JVM at the 20x probe
 scale). Set `spark.sql.streaming.stateStore.providerClass` to
 RocksDBStateStoreProvider for any real corpus — state then lives
@@ -116,10 +119,6 @@ def band_rows(
         *[F.col(c) for c in carry],
     )
 
-BUCKET_STATE_SCHEMA = T.StructType(
-    [T.StructField("doc_ids", T.ArrayType(T.LongType()))]
-)
-
 # Sharded state layout (r16): one state row per SHARD of buckets —
 # parallel arrays keyed positionally, bucket i spanning
 # doc_ids_flat[offset_i : offset_i + counts[i]] with
@@ -144,79 +143,28 @@ PAIR_OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def make_bucket_update_fn(
-    max_per_bucket: int = 1000, idle_timeout_ms: int | None = None
-):
-    """Per-bucket state update: emit (smaller_id, larger_id) for every
-    (remembered occupant, new arrival) pair, then remember the
-    arrival. Batch rows are processed in doc_id order so the emitted
-    set is a pure function of the input corpus, not of Arrow batch
-    ordering. With `idle_timeout_ms`, a bucket idle that long is
-    dropped from the state store (emitting nothing — a dedup bucket
-    has no final aggregate to flush), bounding state to buckets
-    touched within the horizon."""
-
-    def _update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # horizon passed: forget the bucket; nothing to emit
-            state.remove()
-            return
-        seen: list[int] = list(state.get[0]) if state.exists else []
-        # set mirror for O(1) redelivery checks; the list keeps the
-        # ordered state representation (a list-only membership test is
-        # O(occupancy) per arrival -> O(max_per_bucket^2) per batch on
-        # a degenerate bucket)
-        seen_set: set[int] = set(seen)
-        out_a: list[int] = []
-        out_b: list[int] = []
-        for pdf in batches:
-            for doc_id in sorted(int(d) for d in pdf["doc_id"]):
-                if doc_id in seen_set:
-                    continue  # redelivered input: exactly-once emission
-                if len(seen) >= max_per_bucket:
-                    break  # skew guard: degenerate bucket stops pairing
-                for other in seen:
-                    lo, hi = (other, doc_id) if other < doc_id else (doc_id, other)
-                    out_a.append(lo)
-                    out_b.append(hi)
-                seen.append(doc_id)
-                seen_set.add(doc_id)
-        state.update((seen,))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        if out_a:
-            yield pd.DataFrame({"doc_id_a": out_a, "doc_id_b": out_b})
-
-    return _update
-
-
 def make_shard_update_fn(
     max_per_bucket: int = 1000, idle_timeout_ms: int | None = None
 ):
-    """Sharded twin of `make_bucket_update_fn` (r16, guide §4): state
-    is keyed on a SHARD of buckets instead of one bucket, so a
-    micro-batch pays one Python callback + state (de)serialization
-    per shard (~thousands) rather than per bucket (~O(corpus) — at
-    sf0.1, 76.5k groups each paying the boundary crossing was the
-    stream leg's dominant cost). Bucket identity stays the exact
-    (band_idx, band_hash) pair, carried as DATA columns: pairs are
-    emitted per true bucket with the identical per-bucket logic
-    (doc_id order, exactly-once redelivery set, max_per_bucket cap),
-    so the emitted candidate set is bit-equal to the per-bucket
-    operator's.
+    """Shard state update: state is keyed on a SHARD of LSH buckets,
+    so a micro-batch pays one Python callback + state
+    (de)serialization per shard (~thousands) rather than per bucket
+    (~O(corpus) — at sf0.1, 76.5k groups each paying the boundary
+    crossing was the stream leg's dominant cost). Bucket identity
+    stays the exact (band_idx, band_hash) pair, carried as DATA
+    columns. Per bucket, each new arrival (in doc_id order over the
+    whole micro-batch) emits (smaller_id, larger_id) against every
+    remembered occupant and is then remembered; a redelivered doc_id
+    emits nothing (exactly-once), and a bucket holding
+    `max_per_bucket` occupants stops pairing (skew guard).
 
-    Idle horizon stays per BUCKET: each bucket's last-touch
-    processing time is stored in state, and any bucket idle longer
-    than `idle_timeout_ms` is pruned at the next shard invocation
-    BEFORE arrivals are processed — a re-arrival therefore starts a
-    fresh bucket and never pairs against occupants older than the
-    horizon, exactly the fine-grained eviction semantics (the bytes
-    just linger until the shard is next touched; the shard-level
-    timeout reclaims fully idle shards)."""
+    Idle horizon is per BUCKET: each bucket's last-touch processing
+    time is stored in state, and any bucket idle longer than
+    `idle_timeout_ms` is pruned at the next shard invocation BEFORE
+    arrivals are processed — a re-arrival therefore starts a fresh
+    bucket and never pairs against occupants older than the horizon
+    (the bytes linger until the shard is next touched; the
+    shard-level timeout reclaims fully idle shards)."""
 
     def _update(
         key: tuple,
@@ -310,7 +258,6 @@ def stream_band_collisions(
     bands: int = 16,
     max_per_bucket: int = 1000,
     idle_timeout_ms: int | None = None,
-    state_shards: int | None = None,
 ) -> DataFrame:
     """Streaming LSH candidate pairs over a documents stream.
 
@@ -320,18 +267,16 @@ def stream_band_collisions(
     shingle sets anyway). `idle_timeout_ms` bounds bucket state to
     the dedup horizon (see module docstring).
 
-    State is sharded (r16): the stateful operator groups on
-    `pmod(xxhash64(band_idx, band_hash), state_shards)` and each
-    state row holds ALL of its shard's buckets, so a micro-batch pays
-    O(shards) Python callbacks instead of O(buckets) — the guide §4
-    boundary-crossing cost, measured dominant at 76.5k bucket groups.
-    Bucket semantics (pair emission, skew cap, per-bucket idle
-    horizon) are unchanged — see `make_shard_update_fn`. The default
-    shard count scales with the cluster (64 x defaultParallelism,
-    floor 1024): enough shards that state rows stay small and every
-    state partition has work, while the per-callback overhead is
-    amortized over ~dozens of buckets. `state_shards=0` selects the
-    legacy per-bucket keying (one state row per bucket)."""
+    State is sharded: the stateful operator groups on
+    `pmod(xxhash64(band_idx, band_hash), shards)` and each state row
+    holds ALL of its shard's buckets, so a micro-batch pays O(shards)
+    Python callbacks instead of O(buckets) — the boundary-crossing
+    cost, measured dominant at 76.5k bucket groups. Pair emission,
+    skew cap and per-bucket idle horizon are described at
+    `make_shard_update_fn`. The shard count scales with the cluster
+    (64 x defaultParallelism, floor 1024): enough shards that state
+    rows stay small and every state partition has work, while the
+    per-callback overhead is amortized over ~dozens of buckets."""
     banded = band_rows(
         documents,
         id_col=id_col,
@@ -340,32 +285,21 @@ def stream_band_collisions(
         num_hashes=num_hashes,
         bands=bands,
     )
-    timeout_conf = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    if state_shards == 0:
-        return banded.groupBy("band_idx", "band_hash").applyInPandasWithState(
-            make_bucket_update_fn(max_per_bucket, idle_timeout_ms),
-            outputStructType=PAIR_OUTPUT_SCHEMA,
-            stateStructType=BUCKET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
-    if state_shards is None:
-        parallelism = documents.sparkSession.sparkContext.defaultParallelism
-        state_shards = max(64 * parallelism, 1024)
+    parallelism = documents.sparkSession.sparkContext.defaultParallelism
+    shards = max(64 * parallelism, 1024)
     sharded = banded.withColumn(
-        "_shard",
-        F.pmod(F.xxhash64("band_idx", "band_hash"), F.lit(int(state_shards))),
+        "_shard", F.pmod(F.xxhash64("band_idx", "band_hash"), F.lit(shards))
     )
     return sharded.groupBy("_shard").applyInPandasWithState(
         make_shard_update_fn(max_per_bucket, idle_timeout_ms),
         outputStructType=PAIR_OUTPUT_SCHEMA,
         stateStructType=SHARD_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=timeout_conf,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if idle_timeout_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
     )
 
 
@@ -437,7 +371,7 @@ def stream_band_collisions_join(
 ) -> DataFrame:
     """JVM-only streaming LSH candidate pairs: a symmetric
     stream-stream SELF-JOIN on (band_idx, band_hash) instead of the
-    per-bucket Python stateful operator.
+    sharded Python stateful operator.
 
     Spark's stream-stream inner join keeps each side's arrivals in
     the state store (RocksDB under the engine default) and probes the

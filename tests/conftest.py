@@ -3,6 +3,7 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -10,6 +11,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from elb_log_to_mysql_spark.session import build_session  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
 
 
 @pytest.fixture(scope="session")
@@ -22,3 +27,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="module")
+def con():
+    """DuckDB connection with one view per test table at SF_DIR — the
+    oracle side of the registry checks."""
+    c = duckdb.connect()
+    for t in TABLES:
+        c.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    return c

@@ -1,0 +1,50 @@
+"""The three stream near-dedup audit entries (queries.py), run end to
+end against their DuckDB oracles, and their failure path: a stream
+that raises leaves no thread, cache or persisted RDD behind."""
+
+from __future__ import annotations
+
+import threading
+
+import pytest
+
+from elb_log_to_mysql_spark import queries
+from elb_log_to_mysql_spark.queries import ORACLE_SQL, QUERIES
+
+STREAM_AUDITS = [
+    "stream_near_dedup",
+    "stream_near_dedup_join",
+    "stream_near_dedup_blocklist",
+]
+
+
+@pytest.mark.parametrize("name", STREAM_AUDITS)
+def test_stream_audit_row_equals_oracle(spark, sf_dir, con, name):
+    out = QUERIES[name](spark, sf_dir)
+    want = con.execute(ORACLE_SQL[name])
+    assert out.columns == [d[0] for d in want.description]
+    got = [tuple(r) for r in out.collect()]
+    assert len(got) == 1
+    assert got == want.fetchall()
+
+
+def test_stream_audit_failure_leaves_nothing_behind(spark, sf_dir, monkeypatch):
+    def _stream_fails(*args, **kwargs):
+        raise RuntimeError("stream failed")
+
+    monkeypatch.setattr(queries, "run_stream_to_batch", _stream_fails)
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    threads_before = set(threading.enumerate())
+    rdds_before = jsc.getPersistentRDDs().size()
+    cached_before = cache.cachedData().size()
+
+    with pytest.raises(RuntimeError, match="stream failed"):
+        QUERIES["stream_near_dedup"](spark, sf_dir)
+
+    started = [
+        t for t in threading.enumerate() if t not in threads_before and t.is_alive()
+    ]
+    assert started == []
+    assert jsc.getPersistentRDDs().size() == rdds_before
+    assert cache.cachedData().size() == cached_before

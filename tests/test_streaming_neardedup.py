@@ -1,10 +1,10 @@
 """Streaming MinHash-LSH near-dedup (streaming/neardedup.py).
 
 Pins the three properties the oracle can't see directly: the stateful
-bucket operator emits exactly the candidate set a relational band
+shard operator emits exactly the candidate set a relational band
 self-join over the same expressions produces; bucket state carries
-across micro-batches (with redelivery dedup and the skew cap); and
-verification keeps precision structural.
+across micro-batches (with redelivery dedup, the skew cap and the
+per-bucket idle horizon); and verification keeps precision structural.
 """
 
 from __future__ import annotations
@@ -112,61 +112,6 @@ class _FakeState:
 
     def update(self, v):
         self._v = v
-
-
-def _run_update(fn, state, doc_ids):
-    out = list(fn((0, 0), iter([pd.DataFrame({"doc_id": doc_ids})]), state))
-    if not out:
-        return []
-    pdf = pd.concat(out)
-    return list(zip(pdf["doc_id_a"], pdf["doc_id_b"]))
-
-
-def test_bucket_state_across_batches_and_redelivery():
-    fn = neardedup.make_bucket_update_fn(max_per_bucket=3)
-    st = _FakeState()
-    # batch 1: docs 5, 2 (processed in sorted order: 2 then 5)
-    assert _run_update(fn, st, [5, 2]) == [(2, 5)]
-    # batch 2: doc 1 pairs against BOTH remembered occupants
-    assert sorted(_run_update(fn, st, [1])) == [(1, 2), (1, 5)]
-    # redelivery of doc 2 (exactly-once): no new pairs, no state growth
-    assert _run_update(fn, st, [2]) == []
-    assert list(st.get[0]) == [2, 5, 1]
-    # skew cap: bucket is full (3) -> new doc neither pairs nor joins
-    assert _run_update(fn, st, [9]) == []
-    assert list(st.get[0]) == [2, 5, 1]
-
-
-def test_bucket_idle_timeout_evicts_state():
-    """A timed-out bucket is removed (nothing emitted); after
-    eviction a re-arrival starts a fresh bucket — the dedup horizon."""
-    fn = neardedup.make_bucket_update_fn(max_per_bucket=10, idle_timeout_ms=1000)
-
-    class _TimeoutState(_FakeState):
-        def __init__(self):
-            super().__init__()
-            self.removed = False
-            self.timeout_set = None
-
-        def remove(self):
-            self._v = None
-            self.removed = True
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_set = ms
-
-    st = _TimeoutState()
-    assert _run_update(fn, st, [1, 2]) == [(1, 2)]
-    assert st.timeout_set == 1000
-    # horizon passes
-    st.hasTimedOut = True
-    assert list(fn((0, 0), iter([]), st)) == []
-    assert st.removed and not st.exists
-    # re-arrival after eviction: fresh bucket, no pairing against
-    # the forgotten occupants
-    st.hasTimedOut = False
-    assert _run_update(fn, st, [3]) == []
-    assert list(st.get[0]) == [3]
 
 
 def test_stream_join_variant_equals_twin(spark, sf_dir):
@@ -527,9 +472,9 @@ class _FakeShardState(_FakeState):
 
 
 def test_shard_update_fn_matches_bucket_semantics():
-    """The sharded update fn must reproduce the per-bucket operator's
-    semantics exactly — per-bucket pairing in doc_id order, redelivery
-    dedup, the skew cap — with several buckets riding one state row."""
+    """Bucket semantics of the shard update fn, with several buckets
+    riding one state row: per-bucket pairing in doc_id order across
+    micro-batches, redelivery dedup, the skew cap."""
     fn = neardedup.make_shard_update_fn(max_per_bucket=3)
     st = _FakeShardState()
     # two buckets in one shard; bucket (0,7): docs 5,2 -> (2,5);
@@ -580,3 +525,9 @@ def test_shard_update_fn_per_bucket_idle_horizon():
     st.hasTimedOut = True
     assert list(fn((0,), iter([]), st)) == []
     assert st.removed and not st.exists
+    # re-arrival after the removal, inside what was (0,7)'s horizon:
+    # a fresh bucket that pairs with nothing (not with forgotten doc 2)
+    # and is the only occupant in state
+    st.hasTimedOut = False
+    assert _run_shard_update(fn, st, [(0, 7, 6)], now_ms=1300) == []
+    assert st.get == ([0], [7], [1], [6], [1300])

@@ -15,7 +15,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from elb_log_to_mysql_spark.queries import ORACLE_SQL, QUERIES  # noqa: E402
 
@@ -35,7 +36,8 @@ def first_sentence(doc: str | None) -> str:
     return s[:160] + ("…" if len(s) > 160 else "")
 
 
-def main() -> None:
+def render() -> str:
+    """REGISTRY.md's full text for the currently registered queries."""
     lines = [
         "# REGISTRY — every registered query (generated by "
         "tools/registry_catalog.py)",
@@ -62,10 +64,13 @@ def main() -> None:
             else "exact"
         )
         lines.append(f"| {name} | {kind} | {first_sentence(doc)} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "REGISTRY.md")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    out = os.path.join(REPO, "REGISTRY.md")
     with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+        fh.write(render())
     print(f"wrote {out} ({len(QUERIES)} entries)")
 
 
