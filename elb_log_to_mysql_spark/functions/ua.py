@@ -9,8 +9,7 @@ and compiled by :mod:`elb_log_to_mysql_spark.functions.uap`):
 - :func:`ua_browser_family_expr` / :func:`ua_os_family_expr` — the
   database compiled into a pure column-expression ``when``/``rlike``
   ladder. Stays inside whole-stage codegen (no Python at all) and is
-  the default/scale path: at 100 TB a vectorized JVM expression beats
-  even an Arrow UDF.
+  the default of ``parse_alb_lines``.
 - :func:`classify_ua_rows` — Arrow-batched mapInPandas stage running
   the exact uap-core resolution algorithm per string: the installed
   ``user_agents`` wrapper when importable, else the vendored
@@ -21,6 +20,9 @@ and compiled by :mod:`elb_log_to_mysql_spark.functions.uap`):
   ever sits in a projection, which closes the concurrent-planning
   codegen-fallback race class engine-wide (see
   functions/vectorops.py module docstring).
+- :func:`classify_ua_join` — that stage over the DISTINCT agents,
+  broadcast-joined back; how both ALB file ingests (batch
+  ``read_alb_logs`` and the stream ingest) classify.
 
 The ladder, the evaluator, and the oracle-side DuckDB CASE
 compilation agree by construction — including the database's generic
@@ -211,54 +213,3 @@ def classify_ua_join(
         .select(*cols)
     )
 
-
-# ---------------------------------------------------------------------------
-# stats-driven strategy chooser (VERDICT r9 item 6)
-# ---------------------------------------------------------------------------
-
-#: rows fed to the auto-strategy probe. A `limit` keeps the probe job
-#: bounded regardless of input size; 20k rows is enough to see the
-#: duplication factor of any real log corpus (thousands of distinct
-#: agents against millions of rows) while costing a single sub-second
-#: prefix scan.
-UA_PROBE_ROWS = 20_000
-
-
-def choose_ua_strategy(
-    sample_rows: int,
-    sample_distinct: int,
-    *,
-    min_rows: int = 5_000,
-    dup_factor: float = 8.0,
-) -> str:
-    """Pick "expr" (in-plan CASE ladder) vs "join" (dimension-ize the
-    classification) from sampled corpus statistics — the same
-    stats-not-vibes shape as operators/dedup.choose_jaccard_strategy.
-
-    The economics the two thresholds encode:
-
-    - Below `min_rows` the ladder wins outright: its one-time
-      ~600-arm analysis cost is paid once and the per-row regex work
-      is small in absolute terms, while the join path must still pay
-      a distinct aggregation + broadcast exchange (fixed overhead the
-      tiny input can't amortize).
-    - Above it, the join wins exactly when the duplication factor
-      rows/distinct is high: the ~300-regex walk then runs once per
-      DISTINCT agent instead of once per row (the r9 streaming-ingest
-      fix, SCALE.md round-9: 13.9k -> 18.3k rows/s at ~40k rows per
-      micro-batch over ~50 agents, dup factor ~800). `dup_factor=8`
-      puts the crossover conservatively: at <8x compression the
-      broadcast probe + Python evaluator per distinct agent no longer
-      clearly beats the codegen ladder, so prefer the zero-Python
-      plan.
-
-    A prefix sample UNDER-estimates the global duplication factor
-    (distinct count saturates with corpus size while rows grow), so a
-    capped probe can only err toward "expr" — the conservative,
-    always-correct plan. Pure function; tests pin both selections.
-    """
-    if sample_rows < min_rows:
-        return "expr"
-    if sample_distinct * dup_factor <= sample_rows:
-        return "join"
-    return "expr"

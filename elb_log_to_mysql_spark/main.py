@@ -113,7 +113,8 @@ def main(argv: list[str] | None = None) -> int:
         if url is None:
             raise SystemExit("--stream requires DB_* env config")
         stream_alb_to_jdbc(
-            spark, path, url, table=args.table, checkpoint=args.checkpoint
+            spark, path, url, table=args.table, checkpoint=args.checkpoint,
+            user=os.getenv("DB_USER"), password=os.getenv("DB_PASS"),
         )
         return 0
     n = run_etl(spark, path, url, table=args.table)

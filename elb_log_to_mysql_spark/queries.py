@@ -4283,10 +4283,11 @@ def q_elb_parse(spark, sf_dir):
 
 @_q("elb_parse_ua_join", _ELB_PARSE_ORACLE)
 def q_elb_parse_ua_join(spark, sf_dir):
-    """The SAME flagship pipeline through the streaming micro-batch
-    shape (streaming/ingest.py): parse with deferred UA columns,
-    persist the parsed frame, classify the DISTINCT agent strings
-    with the Arrow evaluator and broadcast-join the families back
+    """The SAME flagship pipeline through the ingest shape (batch
+    sources/alb.py:read_alb_logs and the streaming/ingest.py
+    micro-batch): parse with deferred UA columns, persist the parsed
+    frame, classify the DISTINCT agent strings with the Arrow
+    evaluator and broadcast-join the families back
     (functions/ua.py:classify_ua_join — the dimension-join strategy
     that fixed the r8 ingest throughput dip, SCALE.md round-9).
     Sharing elb_parse's oracle makes ladder ≡ dimension-join a
@@ -4306,26 +4307,6 @@ def q_elb_parse_ua_join(spark, sf_dir):
     return unpersist_on_gc(
         _elb_parse_rollup(classify_ua_join(parsed)), parsed
     )
-
-
-@_q("elb_parse_ua_auto", _ELB_PARSE_ORACLE)
-def q_elb_parse_ua_auto(spark, sf_dir):
-    """The flagship pipeline through ua_strategy="auto" (VERDICT r9
-    item 6): parse_alb_lines probes the input (bounded count +
-    approx-distinct over the first UA_PROBE_ROWS agents,
-    functions/ua.py:choose_ua_strategy) and picks the CASE ladder or
-    the dimension join from the measured duplication factor. The
-    synthetic corpus is 5000 rows over 3 distinct agents (dup factor
-    ~1667x), so the chooser selects the dimension join here — sharing
-    elb_parse's oracle makes probe + decision + chosen plan one
-    driver-certified identity; the decision table itself and the
-    ladder selection on low-duplication input are pinned by
-    tests/test_alb_parse.py."""
-    lines = _synthetic_alb_lines(spark)
-    parsed = parse_alb_lines(
-        lines, source_file=F.lit("synthetic://alb"), ua_strategy="auto"
-    )
-    return _elb_parse_rollup(parsed)
 
 
 @_q(
@@ -4382,32 +4363,7 @@ def q_elb_url_stats(spark, sf_dir):
     log-analytics query shape: scan-heavy, one narrow-key shuffle."""
     from pyspark.sql import Window
 
-    methods = F.array(F.lit("GET"), F.lit("POST"), F.lit("PUT"))
-    uas = F.array(
-        F.lit("Mozilla/5.0 (Windows NT 10.0; Win64; x64) Chrome/136.0.0.0 Safari/537.36"),
-        F.lit("Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7) Version/17.4 Safari/605.1.15"),
-        F.lit("-"),
-    )
-    statuses = F.array(F.lit("200"), F.lit("404"), F.lit("500"), F.lit("-"))
-    n = F.col("id")
-    line = F.format_string(
-        'h2 2025-05-26T%02d:%02d:%02d.000123Z app/demo/x 10.0.%d.%d:443 10.1.0.1:80 '
-        '0.001 0.0%d 0.000 %s 200 %d 10%d "%s https://example.com/api/item/%d HTTP/2.0" '
-        '"%s" TLS_AES_128_GCM_SHA256 TLSv1.3 arn:xxx',
-        (n % 24).cast("int"),
-        (n % 60).cast("int"),
-        ((n * 7) % 60).cast("int"),
-        (n % 256).cast("int"),
-        ((n * 3) % 256).cast("int"),
-        (n % 10).cast("int"),
-        statuses[(n % 4).cast("int")],
-        (n % 1000).cast("int"),
-        (n % 89).cast("int"),
-        methods[(n % 3).cast("int")],
-        (n % 50).cast("int"),
-        uas[(n % 3).cast("int")],
-    )
-    lines = spark.range(0, 5000).select(line.alias("value"))
+    lines = _synthetic_alb_lines(spark)
     parsed = parse_alb_lines(lines, source_file=F.lit("synthetic://alb"))
 
     w_rank = Window.partitionBy("requested_path").orderBy(

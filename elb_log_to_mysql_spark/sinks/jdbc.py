@@ -12,8 +12,7 @@ exercised end-to-end in tests against Apache Derby embedded (its
 driver ships in Spark's own jars — tests/test_sinks_jdbc.py): write,
 read-back, and the idempotent delete-then-append flow. Against a real
 cluster, pass a jdbc:mysql:// URL and the mysql-connector-j jar via
-spark.jars; a collect-side sqlite3 fallback also exists for
-driver-only environments.
+spark.jars.
 """
 
 from __future__ import annotations
@@ -223,71 +222,8 @@ def write_jdbc_idempotent(
     return files
 
 
-def write_sqlite_fallback(df: DataFrame, db_path: str, table: str = DEFAULT_TABLE) -> int:
-    """Sandbox sink: round-trip the DataFrame into sqlite3 via Arrow.
-
-    Collects in Arrow batches — test-scale only; it exists so the sink
-    schema mapping and append semantics are exercised without a JDBC
-    driver jar. Returns rows written.
-    """
-    import sqlite3
-
-    pdf = df.toPandas()
-    with sqlite3.connect(db_path) as con:
-        pdf.to_sql(table, con, if_exists="append", index=False)
-    return len(pdf)
-
-
 def distinct_source_files(df: DataFrame, source_col: str = "log_source_file") -> list[str]:
     """The batch's lineage keys — one per ingested file, so the list is
     small (it is the unit of re-ingest) and safe to collect."""
     return [r[0] for r in df.select(source_col).distinct().collect()]
 
-
-def write_idempotent(
-    df: DataFrame,
-    delete_files,
-    append,
-    source_col: str = "log_source_file",
-) -> list[str]:
-    """File-scoped replace: delete-then-append keyed on lineage.
-
-    The reference's append-only `to_sql` duplicates every row on
-    re-run (etl:155). Re-ingest is always file-scoped (a log file is
-    re-delivered or re-parsed), so idempotence = delete the rows of
-    exactly this batch's `log_source_file` values, then append the
-    batch. `delete_files(files)` and `append(df)` are sink callables:
-    JDBC DELETE + df.write.jdbc in production (wrap both in one
-    transaction where the DB allows), sqlite in the sandbox.
-
-    Returns the replaced file list (for audit logging).
-    """
-    files = distinct_source_files(df, source_col)
-    delete_files(files)
-    append(df)
-    return files
-
-
-def write_sqlite_idempotent(
-    df: DataFrame,
-    db_path: str,
-    table: str = DEFAULT_TABLE,
-    source_col: str = "log_source_file",
-) -> list[str]:
-    """Sandbox twin of the JDBC delete-then-append flow (one sqlite
-    transaction: a failed append rolls the delete back)."""
-    import sqlite3
-
-    pdf = df.toPandas()
-    files = sorted(pdf[source_col].dropna().unique().tolist())
-    with sqlite3.connect(db_path) as con:
-        exists = con.execute(
-            "SELECT name FROM sqlite_master WHERE type='table' AND name=?", (table,)
-        ).fetchone()
-        if exists and files:
-            marks = ",".join("?" * len(files))
-            con.execute(
-                f"DELETE FROM {table} WHERE {source_col} IN ({marks})", files
-            )
-        pdf.to_sql(table, con, if_exists="append", index=False)
-    return files

@@ -23,8 +23,10 @@ declarative column-expression chain:
   session timezone, so the result is host-TZ independent.
 - P6-P11,P13: pure column expressions (substring_index, safe casts,
   parse_url, arithmetic) — all inside whole-stage codegen.
-- P12: UA families via regex-ladder expressions (default) or the
-  exact-parity pandas UDF when ``user_agents`` is available.
+- P12: UA families. ``parse_alb_lines`` defaults to the regex-ladder
+  expressions (or the exact-parity per-row stage when ``user_agents``
+  is available); the file ingests (``read_alb_logs`` and the stream
+  ingest) classify the distinct agents and broadcast-join them back.
 - P16: lineage column via ``input_file_name()``.
 
 Every stage is lazy; Catalyst prunes the discarded token columns, so
@@ -40,8 +42,6 @@ from pyspark.sql import functions as F
 from elb_log_to_mysql_spark.functions.casts import safe_float, safe_int
 from elb_log_to_mysql_spark.functions.ua import (
     HAVE_USER_AGENTS,
-    UA_PROBE_ROWS,
-    choose_ua_strategy,
     classify_ua_join,
     classify_ua_rows,
     ua_browser_family_expr,
@@ -86,25 +86,17 @@ def parse_alb_lines(
     etl:68, etl:82; counters ride the existing job, no second scan).
 
     `ua_strategy`: how the UA families are computed. "expr" (default)
-    is the in-plan compiled CASE ladder — zero Python, right for a
-    one-shot batch scan. "join" dimension-izes classification: the
-    uap database is evaluated once per DISTINCT agent string and
-    broadcast-joined back (functions/ua.py:classify_ua_join) — the
-    scale shape when distinct agents ≪ rows (batch DataFrames only).
-    "defer" emits NULL family columns and leaves classification to
-    the caller (classify_ua_join on the returned frame) — for callers
-    that persist the parsed batch first so the parse chain
-    materializes exactly once under a multi-pass sink; the streaming
-    ingest does this per micro-batch (streaming/ingest.py). "auto"
-    resolves to "expr" or "join" from a bounded probe of the input
-    (functions/ua.py:choose_ua_strategy — first UA_PROBE_ROWS agent
-    strings, count + approx distinct): small or low-duplication
-    inputs keep the zero-Python ladder, high-duplication corpora
-    (the normal log-data shape) get the dimension join. Streaming
-    frames can't be eagerly aggregated, so "auto" falls back to
-    "expr" there — foreachBatch callers hand in batch frames and get
-    the real chooser.
+    is the in-plan compiled CASE ladder — zero Python, and the cheapest
+    plan for small in-memory inputs and for queries that never read
+    the UA columns (they prune it). "defer" emits NULL family columns
+    and leaves classification to the caller (classify_ua_join on the
+    returned frame): the shape of both file ingests, read_alb_logs and
+    streaming/ingest.py, where agents repeat across many rows.
     """
+    if ua_strategy not in ("expr", "defer"):
+        raise ValueError(
+            f"ua_strategy must be 'expr' or 'defer', not {ua_strategy!r}"
+        )
     if exact_ua is None:
         exact_ua = HAVE_USER_AGENTS
     elif exact_ua and not HAVE_USER_AGENTS:
@@ -146,25 +138,6 @@ def parse_alb_lines(
         "^[0-9-]+$"
     )
 
-    if ua_strategy == "auto":
-        # Probe BEFORE the observation is attached: Observation
-        # values come from the first completed action on the observed
-        # plan, and the bounded probe job must not consume the census.
-        if lines.isStreaming:
-            ua_strategy = "expr"
-        else:
-            stats = (
-                t.filter(arity_ok)
-                .select("user_agent")
-                .limit(UA_PROBE_ROWS)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.approx_count_distinct("user_agent").alias("d"),
-                )
-                .collect()[0]
-            )
-            ua_strategy = choose_ua_strategy(stats["n"], stats["d"])
-
     if observation is not None:
         ts_ok = _parse_timestamp(F.col("raw_timestamp")).isNotNull()
         t = t.observe(
@@ -195,10 +168,10 @@ def parse_alb_lines(
         F.coalesce(F.parse_url(url, F.lit("PATH")), F.lit("")),
     ).otherwise(url)
 
-    if ua_strategy in ("join", "defer") or exact_ua:
-        # classified after projection (join/defer: over the distinct
-        # agents; exact_ua: per row as its own mapInPandas stage —
-        # never a PythonUDF expression inside this projection);
+    if ua_strategy == "defer" or exact_ua:
+        # classified after projection (defer: by the caller; exact_ua:
+        # per row as its own mapInPandas stage — never a PythonUDF
+        # expression inside this projection);
         # placeholders keep the select's column order stable
         browser = F.lit(None).cast("string")
         os_fam = F.lit(None).cast("string")
@@ -234,25 +207,19 @@ def parse_alb_lines(
 
     # P4 drop-row policy: unparseable timestamp drops the record.
     out = out.filter(F.col("log_timestamp").isNotNull()).select(*ELB_LOG_COLUMNS)
-    if ua_strategy == "join":
-        out = classify_ua_join(out, prefer_wrapper=bool(exact_ua))
-    elif exact_ua and ua_strategy != "defer":
+    if exact_ua and ua_strategy != "defer":
         # exact-parity per-row evaluator (the reference's code path)
         # as a mapInPandas stage over the projected frame; works for
         # batch and streaming plans alike.
         # ACCEPTED COST (ADVICE r13): the stage round-trips all 13
         # projected columns through Arrow, where the old scalar UDF
         # serialized only user_agent_full — roughly 2-3x the bytes
-        # (the UA string is the widest column of the 13). The
-        # alternatives are worse here: a key-join-back adds a full
-        # shuffle of the wide frame on a synthetic row key (streaming
-        # needs stateful ids), and the distinct-agent broadcast join
-        # is exactly what the probe ALREADY routes to when agent
-        # duplication makes it cheap (ua_strategy == "join" with
-        # prefer_wrapper=exact_ua above) — this branch only fires in
-        # the low-duplication regime where distinct ~= rows and the
-        # join degenerates, or under streaming. An Arrow round-trip
-        # bounded at ~3x one column beats a wide shuffle.
+        # (the UA string is the widest column of the 13). A key-join
+        # back would add a full shuffle of the wide frame on a
+        # synthetic row key (streaming needs stateful ids); callers
+        # whose agents repeat take the distinct-agent join instead
+        # (ua_strategy="defer" + classify_ua_join, as read_alb_logs
+        # does).
         out = classify_ua_rows(
             out.drop("ua_browser_family", "ua_os_family"),
             "user_agent_full",
@@ -270,9 +237,20 @@ def read_alb_logs(
     ``spark.read.text`` handles listing (paginated), decompression and
     the multi-file union; works identically for ``s3a://bucket/prefix/*.gz``
     given hadoop-aws on the classpath.
+
+    UA families come from the distinct-agent broadcast join
+    (functions/ua.py:classify_ua_join), the same classification the
+    stream ingest runs per micro-batch: agent strings repeat across
+    the rows of a log bucket, so the uap walk runs once per distinct
+    agent instead of once per row.
     """
+    if exact_ua is None:
+        exact_ua = HAVE_USER_AGENTS
     lines = spark.read.text(paths if isinstance(paths, list) else [paths])
-    return parse_alb_lines(lines, exact_ua=exact_ua)
+    return classify_ua_join(
+        parse_alb_lines(lines, exact_ua=exact_ua, ua_strategy="defer"),
+        prefer_wrapper=exact_ua,
+    )
 
 
 def read_alb_logs_stream(

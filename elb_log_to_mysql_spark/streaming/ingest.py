@@ -40,38 +40,44 @@ def stream_alb_to_jdbc(
     checkpoint: str | None = None,
     sink_connections: int = 4,
     available_now: bool = True,
+    user: str | None = None,
+    password: str | None = None,
 ):
     """Continuous ALB-log → JDBC ingest. With `available_now` the call
     drains everything currently in `source_dir` and returns (bounded
     test/backfill mode); otherwise it returns the running query for
-    the caller to manage."""
+    the caller to manage. `user`/`password` authenticate both the
+    sink's DELETE and its append (a JDBC URL from
+    main.mysql_url_from_env carries no credentials)."""
     lines = spark.readStream.text(source_dir)
 
     # The parse chain runs INSIDE foreachBatch (input_file_name()
     # still resolves there — the micro-batch is a plain file-source
     # DataFrame), parsed ONCE into a persisted frame: the idempotent
     # sink makes two passes (lineage-key distinct + write) and UA
-    # classification makes two more (distinct agents + probe), so an
+    # classification makes two more (distinct agents + join), so an
     # unpersisted plan would re-run from_csv 3-4x per batch (visible
     # as 2-3x numInputRows in streaming progress). Classification
     # takes the dimension-join strategy off the persisted frame: the
     # ~300-regex uap walk runs once per DISTINCT agent per batch
     # instead of per row, and the micro-batch plan carries a
     # broadcast join instead of a ~600-arm CASE that Catalyst
-    # re-analyzes every trigger. Same 13-col output either way
-    # (pinned by tests/test_alb_parse.py's join-parity test).
+    # re-analyzes every trigger. It is the classification batch
+    # read_alb_logs runs, over the same 13 columns.
     def sink(batch_df, _batch_id: int) -> None:
         parsed = parse_alb_lines(batch_df, ua_strategy="defer").persist()
         try:
             write_jdbc_idempotent(
-                # prefer_wrapper tracks the batch default (alb.py:99):
-                # when the user_agents wrapper is installed, streamed
-                # family names must match batch output exactly.
+                # prefer_wrapper tracks read_alb_logs: when the
+                # user_agents wrapper is installed, streamed family
+                # names must match batch output exactly.
                 classify_ua_join(parsed, prefer_wrapper=HAVE_USER_AGENTS),
                 url,
                 table=table,
                 driver=driver,
                 num_partitions=sink_connections,
+                user=user,
+                password=password,
             )
         finally:
             parsed.unpersist()

@@ -282,102 +282,6 @@ def stream_stream_click_purchase_join(
     )
 
 
-def stream_ingest_alb_idempotent(
-    spark: SparkSession,
-    source_glob: str,
-    db_path: str,
-    checkpoint_dir: str,
-    table: str = "elb_log_data",
-) -> None:
-    """Continuous ALB ingest with an idempotent sink: readStream.text
-    over the log directory -> the full parse chain -> foreachBatch
-    delete-then-append keyed by `log_source_file`.
-
-    Two exactly-once layers, each sufficient alone:
-    - the checkpoint makes Structured Streaming skip already-committed
-      source files on restart;
-    - the sink's file-scoped replace makes even a checkpoint LOSS (full
-      replay) converge to the same table state instead of duplicating —
-      the failure mode the reference's append-only `to_sql` hits on any
-      rerun (etl_elb_log_to_mysql.py:155).
-
-    Bounded here with Trigger.AvailableNow; a production deployment
-    keeps the identical plan on a continuous trigger with the JDBC
-    twin of the sink (sinks/jdbc.py:write_idempotent).
-    """
-    from pyspark.sql import functions as F
-
-    from elb_log_to_mysql_spark.sinks.jdbc import write_sqlite_idempotent
-    from elb_log_to_mysql_spark.sources.alb import parse_alb_lines
-
-    lines = spark.readStream.text(source_glob)
-    parsed = parse_alb_lines(lines, source_file=F.input_file_name())
-
-    def sink(batch_df, _batch_id: int) -> None:
-        write_sqlite_idempotent(batch_df, db_path, table)
-
-    q = (
-        parsed.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_ingest_jdbc(
-    spark: SparkSession,
-    source_glob: str,
-    url: str,
-    checkpoint_dir: str,
-    table: str = "elb_log_data",
-    driver: str | None = None,
-    user: str | None = None,
-    password: str | None = None,
-) -> None:
-    """The reference pipeline as a continuous stream against a REAL
-    JDBC database: readStream.text over the log directory -> full
-    parse chain -> foreachBatch file-scoped delete-then-append
-    (sinks/jdbc.py:write_jdbc_idempotent).
-
-    This is the complete replacement for the reference's batch loop
-    (etl:53-160: list S3, parse each file, to_sql append) with both of
-    its defects fixed: new files are picked up incrementally via the
-    checkpoint instead of a full relisting, and re-ingest (or
-    checkpoint loss + replay) converges instead of duplicating.
-
-    foreachBatch is the right sink shape for JDBC: per micro-batch
-    one driver-side DELETE over the batch's lineage keys, then the
-    parallel partition-wise append — the exactly-once contract is the
-    sink's idempotency, not a transaction spanning executors. Bounded
-    with Trigger.AvailableNow here; production uses the identical
-    plan on a processingTime trigger.
-    """
-    from pyspark.sql import functions as F
-
-    from elb_log_to_mysql_spark.sinks.jdbc import write_jdbc_idempotent
-    from elb_log_to_mysql_spark.sources.alb import parse_alb_lines
-
-    lines = spark.readStream.text(source_glob)
-    parsed = parse_alb_lines(lines, source_file=F.input_file_name())
-
-    def sink(batch_df, _batch_id: int) -> None:
-        kwargs = {}
-        if user is not None:
-            kwargs["user"] = user
-        if password is not None:
-            kwargs["password"] = password
-        write_jdbc_idempotent(batch_df, url, table=table, driver=driver, **kwargs)
-
-    q = (
-        parsed.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def ensure_event_time(df, col: str = "ts"):
     """Normalize the event-time column for any physical layout
     (int64-nanos, TIMESTAMP_NTZ, native TIMESTAMP). Streaming plans

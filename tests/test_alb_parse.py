@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -304,9 +305,10 @@ def test_main_env_url_assembly(monkeypatch):
 
 
 def test_ua_join_strategy_matches_expr_ladder(spark):
-    """ua_strategy="join" (distinct agents -> evaluator -> broadcast
-    join, the streaming micro-batch shape) must emit byte-identical
-    rows to the default in-plan CASE ladder — including the blank
+    """classify_ua_join over the deferred parse (distinct agents ->
+    evaluator -> broadcast join, the shape of read_alb_logs and of the
+    stream ingest's micro-batch) must emit byte-identical rows to the
+    default in-plan CASE ladder — including the blank
     sentinel ("-" -> Unknown), generic $n capture tails, and plain
     "Other" fallbacks. The two compilations of the same vendored
     database are certified equal by the ua_classify gate; this pins
@@ -331,24 +333,11 @@ def test_ua_join_strategy_matches_expr_ladder(spark):
                 "Safari/605.1.15"),                 # Safari / Mac OS X
     ]
     df = spark.createDataFrame([(ln,) for ln in lines], "value string")
+    from elb_log_to_mysql_spark.functions.ua import classify_ua_join
+
     expr_rows = sorted(
         parse_alb_lines(df, source_file=F.lit("t.gz")).collect()
     )
-    join_rows = sorted(
-        parse_alb_lines(
-            df, source_file=F.lit("t.gz"), ua_strategy="join"
-        ).collect()
-    )
-    assert join_rows == expr_rows
-    assert len(join_rows) == len(lines)
-    fams = {r.user_agent_full: r.ua_browser_family for r in join_rows}
-    assert fams["-"] == "Unknown"
-
-    # the streaming micro-batch shape: parse once with deferred
-    # (NULL) family columns, persist, classify over the persisted
-    # frame — identical rows again
-    from elb_log_to_mysql_spark.functions.ua import classify_ua_join
-
     deferred = parse_alb_lines(
         df, source_file=F.lit("t.gz"), ua_strategy="defer"
     )
@@ -356,6 +345,14 @@ def test_ua_join_strategy_matches_expr_ladder(spark):
         F.col("ua_browser_family").isNotNull()
         | F.col("ua_os_family").isNotNull()
     ).count() == 0
+    join_rows = sorted(classify_ua_join(deferred).collect())
+    assert join_rows == expr_rows
+    assert len(join_rows) == len(lines)
+    fams = {r.user_agent_full: r.ua_browser_family for r in join_rows}
+    assert fams["-"] == "Unknown"
+
+    # the streaming micro-batch shape: classify over the persisted
+    # deferred frame — identical rows again
     persisted = deferred.persist()
     try:
         defer_rows = sorted(classify_ua_join(persisted).collect())
@@ -377,6 +374,20 @@ def test_ua_join_strategy_matches_expr_ladder(spark):
     assert sorted(exact_df.collect()) == expr_rows
 
 
+def _assert_ua_join_plan(out) -> None:
+    """UA families arrive via a broadcast join, exactly one Python eval
+    runs (the evaluator over the DISTINCT agents), and the rlike
+    ladder is absent. The ladder renders ~300 RLIKE arms in the
+    formatted plan; the arity guard and the URL scheme test render a
+    few per scan of the input."""
+    from elb_log_to_mysql_spark.plans.inspect import formatted_plan, plan_report
+
+    rep = plan_report(out)
+    assert rep["broadcast_joins"] >= 1
+    assert rep["python_evals"] == 1
+    assert formatted_plan(out).lower().count("rlike") < 30
+
+
 def test_ua_join_plan_shape(spark):
     """The streaming micro-batch shape's PLAN contract: UA families
     arrive via a BROADCAST join against the distinct-agent lookup
@@ -384,105 +395,43 @@ def test_ua_join_plan_shape(spark):
     ~600-arm regex CASE ladder is absent — the property that fixed
     the r8 ingest throughput dip (SCALE.md round-9)."""
     from elb_log_to_mysql_spark.functions.ua import classify_ua_join
-    from elb_log_to_mysql_spark.plans.inspect import formatted_plan, plan_report
+    from elb_log_to_mysql_spark.plans.inspect import plan_report
 
     df = spark.createDataFrame([(ln,) for ln in [GOLDEN]], "value string")
     out = classify_ua_join(
         parse_alb_lines(df, source_file=F.lit("t.gz"), ua_strategy="defer")
     )
     out.collect()
+    _assert_ua_join_plan(out)
     rep = plan_report(out)
-    assert rep["broadcast_joins"] >= 1
     assert rep["sortmerge_joins"] == 0 and rep["shuffled_hash_joins"] == 0
-    # the ladder compiles to a CASE of rlike arms; the join plan
-    # must carry none of it (one regex remains in the arity guard)
-    plan = formatted_plan(out)
-    assert plan.count("rlike") <= 2
-    # exactly one Python/Arrow eval (the evaluator over DISTINCT agents)
-    assert rep["python_evals"] == 1
 
 
-def test_ua_strategy_chooser_selections():
-    """Pin the pure chooser's decision table (VERDICT r9 item 6):
-    tiny inputs and low-duplication corpora keep the codegen ladder;
-    a high duplication factor (rows >> distinct agents — the normal
-    log shape) dimension-izes. Boundary cases pin the exact
-    thresholds so a future retune is a deliberate diff."""
-    from elb_log_to_mysql_spark.functions.ua import choose_ua_strategy
-
-    # below min_rows: always the ladder, even at extreme duplication
-    assert choose_ua_strategy(100, 2) == "expr"
-    assert choose_ua_strategy(4_999, 1) == "expr"
-    # at/above min_rows: duplication factor decides
-    assert choose_ua_strategy(20_000, 50) == "join"       # dup 400x
-    assert choose_ua_strategy(20_000, 2_500) == "join"    # dup 8x exactly
-    assert choose_ua_strategy(20_000, 2_501) == "expr"    # dup <8x
-    assert choose_ua_strategy(20_000, 20_000) == "expr"   # all-unique
+def test_ua_strategy_rejects_removed_values(spark):
+    """ua_strategy accepts only "expr" and "defer"; any other value
+    raises instead of silently taking one of them."""
+    df = spark.createDataFrame([(GOLDEN,)], "value string")
+    for removed in ("join", "auto"):
+        with pytest.raises(ValueError, match="ua_strategy"):
+            parse_alb_lines(df, ua_strategy=removed)
 
 
-def test_ua_strategy_auto_resolves_both_ways(spark):
-    """ua_strategy="auto" end-to-end: a high-duplication batch gets
-    the dimension join (broadcast join in the plan), an all-unique
-    batch keeps the in-plan ladder (no joins at all); both emit the
-    same 13-col schema and correct families."""
-    from elb_log_to_mysql_spark.plans.inspect import plan_report
+def test_read_alb_logs_plan_shape(spark, tmp_path):
+    """Batch read_alb_logs classifies like the stream ingest: the
+    families arrive via a broadcast join against the distinct-agent
+    lookup (one Python eval, over the distinct agents) and the
+    ~600-arm rlike ladder is absent from the plan."""
+    import gzip
 
-    def with_ua(ua: str) -> str:
-        return GOLDEN.replace(
-            "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 "
-            "(KHTML, like Gecko) Chrome/136.0.0.0 Safari/537.36",
-            ua,
-        )
+    from elb_log_to_mysql_spark.sources.alb import read_alb_logs
 
-    # 6000 rows over 3 agents: dup factor 2000x -> join
-    dup_lines = [with_ua(f"curl/8.{i % 3}.0") for i in range(6_000)]
-    df = spark.createDataFrame([(ln,) for ln in dup_lines], "value string")
-    out = parse_alb_lines(df, source_file=F.lit("t.gz"), ua_strategy="auto")
-    out.collect()
-    rep = plan_report(out)
-    assert rep["broadcast_joins"] >= 1
-    assert rep["python_evals"] == 1
-
-    # 6000 rows, every agent unique: dup factor 1x -> ladder
-    # (approx_count_distinct has ~2% error; 1x vs the 8x threshold
-    # leaves two orders of magnitude of margin)
-    uniq_lines = [with_ua(f"agent-{i}/1.0") for i in range(6_000)]
-    df = spark.createDataFrame([(ln,) for ln in uniq_lines], "value string")
-    out = parse_alb_lines(df, source_file=F.lit("t.gz"), ua_strategy="auto")
+    for f in range(2):
+        with gzip.open(tmp_path / f"f{f}.log.gz", "wt") as fh:
+            fh.write((GOLDEN + "\n") * 3)
+    out = read_alb_logs(spark, str(tmp_path / "*.log.gz"))
     rows = out.collect()
-    rep = plan_report(out)
-    assert rep["broadcast_joins"] == 0
-    assert rep["python_evals"] == 0
-    assert len(rows) == 6_000
-    assert all(r.ua_browser_family is not None for r in rows)
-
-
-def test_ua_auto_probe_does_not_consume_observation(spark):
-    """The auto-strategy probe runs its own bounded job BEFORE the
-    census Observation attaches (alb.py): an Observation yields its
-    values from the first completed action on the observed plan, so a
-    probe that ran on the observed frame would satisfy the Observation
-    with the probe's partial counts. Pin that the census still reports
-    the FULL parse when ua_strategy="auto"."""
-    from pyspark.sql import Observation
-
-    good = (
-        'h2 2025-05-26T10:00:00.000123Z app/x/y 1.2.3.4:5678 5.6.7.8:80 '
-        '0.001 0.020 0.000 200 200 100 2000 "GET https://ex.com/p HTTP/2.0" '
-        '"UA" CIPHER TLSv1.3 arn'
-    )
-    bad_ts = good.replace("2025-05-26T10:00:00.000123Z", "badtimestamp")
-    lines = spark.createDataFrame(
-        [(good,), (good,), (bad_ts,), ("only this",)], "value string"
-    )
-    obs = Observation("alb_census_auto")
-    out = parse_alb_lines(
-        lines, source_file=F.lit("test"), observation=obs, ua_strategy="auto"
-    )
-    assert out.count() == 2
-    assert obs.get == {
-        "n_lines": 4,
-        "n_arity_dropped": 1,
-        "n_ts_dropped": 1,
-        "n_emitted": 2,
+    assert len(rows) == 6
+    assert {(r.ua_browser_family, r.ua_os_family) for r in rows} == {
+        ("Chrome", "Windows")
     }
+    _assert_ua_join_plan(out)

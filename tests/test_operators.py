@@ -432,20 +432,6 @@ def test_filter_project_pushdown(spark, sf_dir):
     assert "l_returnflag" not in read_schema
 
 
-def test_sqlite_sink_roundtrip(spark, tmp_path):
-    from elb_log_to_mysql_spark.sinks.jdbc import write_sqlite_fallback
-    import sqlite3
-
-    df = spark.range(5).select(
-        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
-    )
-    db = str(tmp_path / "t.db")
-    n = write_sqlite_fallback(df, db, table="t")
-    assert n == 5
-    with sqlite3.connect(db) as con:
-        assert con.execute("select count(*), sum(v) from t").fetchone() == (5, 20.0)
-
-
 def test_streaming_matches_batch_windows(spark, sf_dir):
     import os
 
@@ -510,27 +496,6 @@ def test_multimodal_features_unit_norm(spark):
     for v in feats.values():
         assert len(v) == 8
         assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-5
-
-
-def test_idempotent_sink_replaces_reingested_file(spark, tmp_path):
-    """Re-ingesting a file replaces its rows instead of duplicating
-    them (the reference's append-only to_sql duplicates — etl:155)."""
-    import sqlite3
-
-    from elb_log_to_mysql_spark.sinks.jdbc import write_sqlite_idempotent
-
-    db = str(tmp_path / "sink.db")
-    batch1 = spark.createDataFrame(
-        [(1, "a.gz"), (2, "a.gz"), (3, "b.gz")], "k long, log_source_file string"
-    )
-    write_sqlite_idempotent(batch1, db, table="t")
-    # re-deliver a.gz with corrected contents (one row instead of two)
-    batch2 = spark.createDataFrame([(9, "a.gz")], "k long, log_source_file string")
-    replaced = write_sqlite_idempotent(batch2, db, table="t")
-    assert replaced == ["a.gz"]
-    with sqlite3.connect(db) as con:
-        rows = sorted(con.execute("SELECT k, log_source_file FROM t").fetchall())
-    assert rows == [(3, "b.gz"), (9, "a.gz")]
 
 
 def test_salted_agg_equals_plain_agg_any_config(spark, sf_dir):

@@ -2,15 +2,15 @@
 
 Runs `df.write.format("jdbc")` against Apache Derby embedded — the
 driver is part of Spark's bundled jars, so this is the genuine JDBC
-code path (DriverManager, JdbcUtils type mapping, batched inserts),
-not the sqlite fallback. MySQL in production differs only by URL +
-driver jar.
+code path (DriverManager, JdbcUtils type mapping, batched inserts).
+MySQL in production differs only by URL + driver jar.
 """
 
 from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from elb_log_to_mysql_spark.sinks.jdbc import (
@@ -106,7 +106,7 @@ def test_stream_ingest_jdbc_exactly_once_and_incremental(spark, tmp_path):
     late-arriving file is picked up incrementally."""
     import gzip
 
-    from elb_log_to_mysql_spark.streaming.windows import stream_ingest_jdbc
+    from elb_log_to_mysql_spark.streaming.ingest import stream_alb_to_jdbc
 
     line = (
         "h2 2025-05-26T10:00:{sec:02d}Z app/x/y 10.0.0.{i}:443 10.1.1.1:80 "
@@ -125,18 +125,27 @@ def test_stream_ingest_jdbc_exactly_once_and_incremental(spark, tmp_path):
     def rows() -> int:
         return _read_back(spark, url, "elb_log_data").count()
 
-    stream_ingest_jdbc(spark, str(src), url, str(tmp_path / "ck1"), driver=DERBY_DRIVER)
+    stream_alb_to_jdbc(
+        spark, str(src), url, driver=DERBY_DRIVER,
+        checkpoint=str(tmp_path / "ck1"),
+    )
     assert rows() == 10
     # checkpoint LOSS: full replay through a fresh checkpoint must
     # converge to the same table state via the file-scoped replace
-    stream_ingest_jdbc(spark, str(src), url, str(tmp_path / "ck2"), driver=DERBY_DRIVER)
+    stream_alb_to_jdbc(
+        spark, str(src), url, driver=DERBY_DRIVER,
+        checkpoint=str(tmp_path / "ck2"),
+    )
     assert rows() == 10
     # late third file: original checkpoint skips committed files,
     # ingests only the new one
     with gzip.open(src / "f2.log.gz", "wt") as fh:
         for i in range(3):
             fh.write(line.format(sec=i, i=i) + "\n")
-    stream_ingest_jdbc(spark, str(src), url, str(tmp_path / "ck1"), driver=DERBY_DRIVER)
+    stream_alb_to_jdbc(
+        spark, str(src), url, driver=DERBY_DRIVER,
+        checkpoint=str(tmp_path / "ck1"),
+    )
     assert rows() == 13
     # lineage column preserved through the stream: one row-set per file
     per_file = (
@@ -235,3 +244,103 @@ def test_streaming_ingest_picks_up_only_new_files(spark, tmp_path):
         .collect()
     }
     assert per_file == {"f0.log": 30, "f1.log": 12}
+
+
+def _gzip_logs(src, n_files: int, n_lines: int) -> None:
+    import gzip
+
+    line = (
+        "h2 2025-05-26T12:00:{s:02d}.000123Z app/x/y 10.0.0.{i}:443 10.1.1.1:80 "
+        '0.001 0.020 0.000 200 200 {i} 2000 "GET https://ex.com/r/{f} HTTP/2.0" '
+        '"Mozilla/5.0 (X11; Linux x86_64) Firefox/127.0" CIPHER TLSv1.3 arn'
+    )
+    src.mkdir()
+    for f in range(n_files):
+        with gzip.open(src / f"f{f}.log.gz", "wt") as fh:
+            for i in range(n_lines):
+                fh.write(line.format(s=i % 60, i=i, f=f) + "\n")
+
+
+def test_main_stream_forwards_db_credentials(spark, tmp_path, monkeypatch):
+    """`main --stream` authenticates with DB_USER/DB_PASS like batch
+    run_etl does: the URL from mysql_url_from_env carries no
+    credentials, so the stream sink must receive them. A
+    password-protected MySQL rejects a sink that drops them."""
+    from elb_log_to_mysql_spark import main as main_mod
+    from elb_log_to_mysql_spark.streaming import ingest
+
+    src = tmp_path / "logs"
+    _gzip_logs(src, n_files=2, n_lines=4)
+    url = _derby_url()
+    seen = []
+    real = ingest.write_jdbc_idempotent
+
+    def recording(df, url, **kwargs):
+        seen.append(kwargs)
+        return real(df, url, **kwargs)
+
+    monkeypatch.setattr(ingest, "write_jdbc_idempotent", recording)
+    monkeypatch.setattr(main_mod, "build_session", lambda **_: spark)
+    monkeypatch.setattr(main_mod, "mysql_url_from_env", lambda: url)
+    for k, v in {"DB_HOST": "localhost", "DB_NAME": "logs",
+                 "DB_USER": "etl_user", "DB_PASS": "s3cret",
+                 "LOG_PATH": str(src)}.items():
+        monkeypatch.setenv(k, v)
+
+    assert main_mod.main(["--stream", "--checkpoint", str(tmp_path / "ck")]) == 0
+    assert seen and all(
+        (kw.get("user"), kw.get("password")) == ("etl_user", "s3cret")
+        for kw in seen
+    )
+    back = (
+        spark.read.format("jdbc")
+        .options(url=url, dbtable="elb_log_data", user="etl_user",
+                 password="s3cret")
+        .load()
+    )
+    assert back.count() == 8
+
+
+def test_stream_ingest_crash_after_write_before_commit(spark, tmp_path, monkeypatch):
+    """Crash between the sink write and the checkpoint commit: the
+    first micro-batch lands its rows in Derby, then foreachBatch
+    raises, so the batch is never committed. A restart on the same
+    checkpoint re-runs that batch; the file-scoped delete-then-append
+    must leave exactly the table one clean ingest produces."""
+    from elb_log_to_mysql_spark.streaming import ingest
+    from elb_log_to_mysql_spark.streaming.ingest import stream_alb_to_jdbc
+
+    src = tmp_path / "logs"
+    _gzip_logs(src, n_files=3, n_lines=6)
+    url = _derby_url()
+    ckpt = str(tmp_path / "ck")
+    real = ingest.write_jdbc_idempotent
+    calls = []
+
+    def write_then_crash(df, url, **kwargs):
+        files = real(df, url, **kwargs)
+        calls.append(files)
+        if len(calls) == 1:
+            raise RuntimeError("crash before the checkpoint commit")
+        return files
+
+    monkeypatch.setattr(ingest, "write_jdbc_idempotent", write_then_crash)
+    with pytest.raises(Exception, match="crash before the checkpoint commit"):
+        stream_alb_to_jdbc(spark, str(src), url, driver=DERBY_DRIVER, checkpoint=ckpt)
+    # the crashed batch did write: a replay without the file-scoped
+    # replace would duplicate these rows
+    assert len(calls) == 1
+    assert _read_back(spark, url, "elb_log_data").count() == 18
+
+    monkeypatch.setattr(ingest, "write_jdbc_idempotent", real)
+    stream_alb_to_jdbc(spark, str(src), url, driver=DERBY_DRIVER, checkpoint=ckpt)
+
+    clean_url = _derby_url()
+    stream_alb_to_jdbc(
+        spark, str(src), clean_url, driver=DERBY_DRIVER,
+        checkpoint=str(tmp_path / "ck_clean"),
+    )
+    got = sorted(_read_back(spark, url, "elb_log_data").collect())
+    want = sorted(_read_back(spark, clean_url, "elb_log_data").collect())
+    assert len(want) == 18
+    assert got == want

@@ -125,48 +125,6 @@ def test_stateful_stream_restart_resumes_state(spark, tmp_path):
     assert second[3].n_events == 1
 
 
-def test_stream_ingest_idempotent_sink(spark, tmp_path):
-    """Streaming ingest end-to-end: gz files -> parse -> sqlite via
-    foreachBatch. Replay WITHOUT the checkpoint (worst case: state
-    lost) must converge, not duplicate; new files still append."""
-    import gzip
-    import sqlite3
-
-    from elb_log_to_mysql_spark.streaming.windows import stream_ingest_alb_idempotent
-
-    line = (
-        "h2 2025-05-26T10:00:{sec:02d}Z app/x/y 10.0.0.{i}:443 10.1.1.1:80 "
-        '0.001 0.020 0.000 200 200 100 2000 "GET https://ex.com/p HTTP/2.0" '
-        '"Mozilla/5.0 (X11; Linux x86_64) Firefox/127.0" CIPHER TLSv1.3 arn'
-    )
-    src = tmp_path / "logs"
-    src.mkdir()
-    for f in range(2):
-        with gzip.open(src / f"f{f}.log.gz", "wt") as fh:
-            for i in range(5):
-                fh.write(line.format(sec=i, i=i) + "\n")
-
-    db = str(tmp_path / "sink.db")
-
-    def rows() -> int:
-        with sqlite3.connect(db) as con:
-            return con.execute("SELECT COUNT(*) FROM elb_log_data").fetchone()[0]
-
-    stream_ingest_alb_idempotent(spark, str(src), db, str(tmp_path / "ck1"))
-    assert rows() == 10
-    # full replay with a FRESH checkpoint: every file reprocessed,
-    # sink must replace rather than duplicate
-    stream_ingest_alb_idempotent(spark, str(src), db, str(tmp_path / "ck2"))
-    assert rows() == 10
-    # late-arriving third file: incremental append via the original
-    # checkpoint (files f0/f1 skipped by the committed log)
-    with gzip.open(src / "f2.log.gz", "wt") as fh:
-        for i in range(3):
-            fh.write(line.format(sec=i, i=i) + "\n")
-    stream_ingest_alb_idempotent(spark, str(src), db, str(tmp_path / "ck1"))
-    assert rows() == 13
-
-
 def test_stateful_idle_timeout_evicts_and_flushes():
     """The timeout branch must emit the key's final profile and REMOVE
     its state (bounded store). Driven directly with a fake GroupState:
