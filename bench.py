@@ -5,6 +5,10 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": <sf>,
    "v2": {"metric": ..., "value": ..., "queries": {...}}}
 
+A block whose cells raised carries an "errors" map and a null
+"value", and the run exits 1: a total of the cells that ran is not a
+faster run.
+
 The primary metric is the FROZEN 42-query set (comparable to
 BASELINE.md's 35.88 s row across every round). The nested "v2" block
 is the adopted headline-v2 extension (VERDICT r13 item 6): one
@@ -27,7 +31,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from elb_log_to_mysql_spark.queries import QUERIES  # noqa: E402
 from elb_log_to_mysql_spark.session import build_session  # noqa: E402
@@ -149,9 +154,14 @@ OVERRIDES = {
 }
 
 
-def main() -> None:
+def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # Python workers import the package from this checkout too; they
+    # inherit the environment of the JVM the session starts.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = build_session(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -161,11 +171,11 @@ def main() -> None:
     try:
         # JVM / codegen / parquet footer caches
         materialize(QUERIES["hash_agg"](spark, sf_dir))
-        # Python UDF workers: the first Arrow-UDF stage forks 32
-        # workers that each import pandas/numpy (~10s one-time); pay it
-        # here so no measured query carries the startup instead of its
-        # own cost. Workers are reused afterwards
-        # (spark.python.worker.reuse).
+        # Python UDF workers: the first Arrow-UDF stage forks one
+        # worker per core, each importing pandas/numpy (~10s
+        # one-time); pay it here so no measured query carries the
+        # startup instead of its own cost. Workers are reused
+        # afterwards (spark.python.worker.reuse).
         from pyspark.sql import functions as F
         from elb_log_to_mysql_spark.functions.vectorops import (
             with_pairwise_cosine,
@@ -214,14 +224,14 @@ def main() -> None:
 
     record = {
         "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
+        "value": None if errors else round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
         "runs": n_runs,
         "v2": {
             "metric": "headline_v2_plus5_total_wall",
-            "value": round(sum(v2_timings.values()), 3),
+            "value": None if v2_errors else round(sum(v2_timings.values()), 3),
             "unit": "sec",
             "queries": v2_timings,
         },
@@ -232,7 +242,8 @@ def main() -> None:
         record["v2"]["errors"] = v2_errors
     print(json.dumps(record))
     spark.stop()
+    return 1 if errors or v2_errors else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

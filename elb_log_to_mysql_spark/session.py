@@ -6,8 +6,12 @@ We instead build an explicit, tuned SparkSession once and pass it around.
 
 Scale posture (local[N] here, 1000-executor cluster in production):
 - AQE on: runtime coalescing of shuffle partitions, skew-join split.
-- shuffle.partitions sized for the local test box; on a real cluster
-  AQE's coalescing makes a high initial value safe.
+- Batch shuffles start at DEFAULT_SHUFFLE_PARTITIONS (32) and AQE
+  coalesces them at runtime, so a high initial value is safe on any
+  box. Streams get no AQE: `run_stream_to_batch` starts each stream
+  at one shuffle partition per core instead.
+- The master defaults to local[<cores>] ($SPARK_GRAFT_CPUS, else the
+  cores this process may run on).
 - Arrow enabled so the few Pandas UDFs batch via Arrow, never per-row.
 - Session timezone pinned to UTC: all timestamp->string rendering is
   deterministic and independent of the host TZ (the reference instead
@@ -26,6 +30,11 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+# Initial partitions of a batch shuffle; AQE coalesces them at runtime.
+# Kept fixed rather than sized from the cores: at local[4], setting it
+# to 4 sped up the streams but slowed the batch operators
+# (corpus_pipeline 3.4 -> 4.1 s, slower in 4/4 interleaved pairs), so
+# only streams follow the core count (streaming/windows.py).
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # Stateful-streaming state lives off-heap/on-disk by default: the
@@ -62,13 +71,21 @@ ROCKSDB_TUNING = (
 )
 
 
+def host_cpus() -> int:
+    """Cores this process may run on: the default local[N] width."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not Linux
+        return os.cpu_count() or 1
+
+
 def build_session(
     app_name: str = "elb-log-to-mysql-spark",
     master: str | None = None,
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elb_log_to_mysql_spark.functions.numeric import DET_DECIMAL
+from elb_log_to_mysql_spark.session import scoped_conf
 
 
 def tumbling_counts(
@@ -182,8 +183,16 @@ def run_stream_to_batch(
         # The micro-batch file scans consult the nanos conf at
         # execution; this bounded run finishes inside the scope, and
         # the caller's conf is restored after (harmless for non-NANOS
-        # sources).
-        with nanos_as_long(spark):
+        # sources). The stream runs at one shuffle partition per core,
+        # not the batch default: Spark applies no AQE coalescing to
+        # streams, and the count is locked into the checkpoint, so
+        # every extra partition is one more state store committed per
+        # micro-batch for the life of the query.
+        with nanos_as_long(spark), scoped_conf(
+            spark,
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
+        ):
             stream = spark.readStream.schema(schema).parquet(source_dir)
             writer = transform(stream).writeStream
             if parquet_sink_dir is not None:

@@ -10,6 +10,7 @@ import pytest
 
 from elb_log_to_mysql_spark import queries
 from elb_log_to_mysql_spark.queries import ORACLE_SQL, QUERIES
+from elb_log_to_mysql_spark.session import scoped_conf
 
 STREAM_AUDITS = [
     "stream_near_dedup",
@@ -18,12 +19,25 @@ STREAM_AUDITS = [
 ]
 
 
-@pytest.mark.parametrize("name", STREAM_AUDITS)
-def test_stream_audit_row_equals_oracle(spark, sf_dir, con, name):
-    out = QUERIES[name](spark, sf_dir)
+# (name, batch shuffle partitions): None keeps the session's count;
+# with "32" the stream runs at one partition per core while the
+# exact-Jaccard leg and the verifier run at 32.
+AUDIT_CASES = [
+    pytest.param(name, parts, id=name if parts is None else f"{name}-{parts}")
+    for parts in (None, "32")
+    for name in STREAM_AUDITS
+]
+
+
+@pytest.mark.parametrize("name,batch_partitions", AUDIT_CASES)
+def test_stream_audit_row_equals_oracle(spark, sf_dir, con, name, batch_partitions):
+    """The audit row equals its oracle whatever the partition counts."""
+    partitions = batch_partitions or spark.conf.get("spark.sql.shuffle.partitions")
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", partitions):
+        out = QUERIES[name](spark, sf_dir)
+        got = [tuple(r) for r in out.collect()]
     want = con.execute(ORACLE_SQL[name])
     assert out.columns == [d[0] for d in want.description]
-    got = [tuple(r) for r in out.collect()]
     assert len(got) == 1
     assert got == want.fetchall()
 

@@ -9,11 +9,14 @@ finalizes anything mid-stream.
 from __future__ import annotations
 
 import datetime as dt
+import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
-from elb_log_to_mysql_spark.streaming.windows import tumbling_counts
+from elb_log_to_mysql_spark.session import scoped_conf
+from elb_log_to_mysql_spark.streaming.windows import run_stream_to_batch, tumbling_counts
 
 BASE = dt.datetime(2024, 3, 1, 10, 0, 0)
 
@@ -280,3 +283,73 @@ def test_stream_funnel_equals_batch_funnel(spark, tmp_path):
     assert {r["step_name"]: r["n_users"] for r in batch} == {
         "view": 2, "click": 1, "purchase": 1,
     }
+
+
+def _state_partitions_listener(spark, into: list):
+    """Register a listener that appends each progress's per-operator
+    state partition counts to `into`."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class _StatePartitions(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            into.append([o.numShufflePartitions for o in event.progress.stateOperators])
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    return listener
+
+
+def _write_ids(spark, path):
+    spark.range(100).selectExpr("id", "id % 5 AS k").coalesce(1).write.parquet(path)
+
+
+def test_bounded_stream_state_follows_cores(spark, tmp_path):
+    """A bounded stream runs one state partition per core whatever the
+    session's batch shuffle count, and hands the caller's value back."""
+    src = str(tmp_path / "ids")
+    _write_ids(spark, src)
+    progress: list = []
+    listener = _state_partitions_listener(spark, progress)
+    try:
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", "3"):
+            out = run_stream_to_batch(
+                spark, src, lambda s: s.groupBy().count(), "id long, k long"
+            )
+            assert [tuple(r) for r in out.collect()] == [(100,)]
+            deadline = time.time() + 30  # listener calls are asynchronous
+            while not progress and time.time() < deadline:
+                time.sleep(0.1)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.streams.removeListener(listener)
+    cores = spark.sparkContext.defaultParallelism
+    assert progress and all(p == [cores] for p in progress)
+
+
+def test_failing_stream_restores_shuffle_partitions(spark, tmp_path):
+    """A stream whose transform raises at execution propagates the
+    error and leaves the session's shuffle partition count as it was."""
+    @F.udf("long")
+    def _explode(v):
+        raise ValueError(f"transform failed on {v}")
+
+    src = str(tmp_path / "ids")
+    _write_ids(spark, src)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "3"):
+        with pytest.raises(Exception, match="transform failed on"):
+            run_stream_to_batch(
+                spark,
+                src,
+                lambda s: s.select(_explode("id").alias("k")).groupBy("k").count(),
+                "id long, k long",
+            )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"

@@ -226,7 +226,7 @@ def main() -> None:
         t.join()
     concurrent = time.perf_counter() - t0
     cpu1 = _jvm_cpu_seconds(spark)
-    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_cores = spark.sparkContext.defaultParallelism
     jvm_cpu_util = (
         round((cpu1 - cpu0) / (concurrent * n_cores), 3)
         if cpu0 is not None and cpu1 is not None
