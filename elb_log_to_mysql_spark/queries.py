@@ -1780,10 +1780,9 @@ def _near_dedup_audit(exact, found):
     """The near-dedup family's shared audit frame: `n_exact` (the
     oracle recomputes it independently), `false_pairs` (must be 0 —
     precision is structural), and the 0.9 recall floor. ONE
-    definition, reused by `near_dedup`, `stream_near_dedup`, and
-    `stream_near_dedup_join` (all three share
-    ORACLE_SQL["near_dedup"]), so a change to the audit contract can
-    never silently diverge between the batch and stream entries."""
+    definition, reused by `near_dedup` and `stream_near_dedup` (both
+    share ORACLE_SQL["near_dedup"]), so a change to the audit contract
+    can never silently diverge between the batch and stream entries."""
     # ONE pass over `found` (r15, guide §2.4): the former left-join +
     # separate found-count formulation consumed the found pipeline in
     # two plan branches; the full-outer join derives n_exact / n_hit /
@@ -7788,12 +7787,13 @@ def _stream_verified_pairs(spark, source_dir, transform, schema, docs):
 
 @_q("stream_near_dedup")
 def q_stream_near_dedup(spark, sf_dir):
-    """Streaming MinHash-LSH near-dedup: LSH bucket state streams
-    candidate pairs (streaming/neardedup.py:stream_band_collisions —
-    applyInPandasWithState keyed on a shard of LSH buckets, state =
-    each bucket's occupants), exact-Jaccard verification joins the
-    shingle sets back from the corpus store. Audited exactly like the
-    batch `near_dedup` entry and sharing its oracle verbatim:
+    """Streaming MinHash-LSH near-dedup: a symmetric stream-stream
+    self-join on the LSH band key streams candidate pairs
+    (streaming/neardedup.py:stream_band_collisions — each side's band
+    rows in RocksDB join state, zero Python in the stateful path),
+    exact-Jaccard verification joins the shingle sets back from the
+    corpus store. Audited exactly like the batch `near_dedup` entry
+    and sharing its oracle verbatim:
     `n_exact` (DuckDB recomputes the exact threshold-0.6 pair set),
     `false_pairs` must be 0 (verification is structural), and the 0.9
     recall floor (the 64/16 S-curve; measured 1.0 at sf0.001/sf0.01
@@ -7812,44 +7812,11 @@ def q_stream_near_dedup(spark, sf_dir):
 ORACLE_SQL["stream_near_dedup"] = ORACLE_SQL["near_dedup"]
 
 
-@_q("stream_near_dedup_join")
-def q_stream_near_dedup_join(spark, sf_dir):
-    """The SCALE variant of streaming near-dedup (streaming/
-    neardedup.py:stream_band_collisions_join): candidate pairs from a
-    symmetric stream-stream SELF-JOIN on the LSH band key — the
-    "new arrival pairs against remembered occupants" recurrence
-    executed entirely in the JVM's join state machinery (RocksDB
-    state, zero Python in the stateful path; the 20x probe measured
-    1.6x the batch twin's wall vs 2.0x for the applyInPandasWithState
-    variant). Same Arrow-vectorized band_rows upstream, same
-    exact-Jaccard verification downstream, same oracle as near_dedup:
-    n_exact recomputed by DuckDB, false_pairs must be 0, 0.9 recall
-    floor."""
-    from elb_log_to_mysql_spark.streaming.neardedup import (
-        stream_band_collisions_join,
-    )
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    docs = _t(spark, sf_dir, "documents")
-    found = _stream_verified_pairs(
-        spark,
-        path,
-        stream_band_collisions_join,
-        raw_parquet_schema(spark, path),
-        docs,
-    )
-    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.6)
-    return carry_caches(_near_dedup_audit(exact, found), exact, found)
-
-
-ORACLE_SQL["stream_near_dedup_join"] = ORACLE_SQL["near_dedup"]
-
-
 @_q("stream_near_dedup_blocklist")
 def q_stream_near_dedup_blocklist(spark, sf_dir):
-    """The static skew guard of the streaming join variant,
-    gate-certified (streaming/neardedup.py:hot_bucket_blocklist +
-    stream_band_collisions_join; the guard's band config rides IN the
+    """The static skew guard of streaming near-dedup, gate-certified
+    (streaming/neardedup.py:hot_bucket_blocklist +
+    stream_band_collisions; the guard's band config rides IN the
     blocklist frame as literal columns since round 12, so it survives
     the land-to-storage/refresh-on-a-cadence flow). The corpus is the
     documents table plus an in-plan 50-wide spam cluster (one novel
@@ -7867,7 +7834,7 @@ def q_stream_near_dedup_blocklist(spark, sf_dir):
 
     from elb_log_to_mysql_spark.streaming.neardedup import (
         hot_bucket_blocklist,
-        stream_band_collisions_join,
+        stream_band_collisions,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -7898,7 +7865,7 @@ def q_stream_near_dedup_blocklist(spark, sf_dir):
     found = _stream_verified_pairs(
         spark,
         corpus_dir,
-        lambda s: stream_band_collisions_join(s, blocklist=bl),
+        lambda s: stream_band_collisions(s, blocklist=bl),
         corpus_batch.schema,
         corpus_batch,
     )

@@ -49,9 +49,11 @@ ROCKSDB_STATE_STORE = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
-# RocksDB commit tuning (r15, guide §1/§5 — measured on the
-# stream_near_dedup stateful stage at sf0.1, 76.5k bucket groups / 32
-# state partitions):
+# RocksDB commit tuning (r15, guide §1/§5 — measured on
+# stream_near_dedup's stateful stage at sf0.1 with 32 state partitions,
+# under the per-bucket Python state layout the stream-stream band
+# join has since replaced; both reasons below are properties of the
+# provider, not of that layout):
 # - changelog checkpointing: commit uploads the per-batch changelog
 #   instead of a full SST snapshot per partition per micro-batch.
 #   Measured commitTimeMs (summed) 12-18 s -> 2-4 s, stream wall

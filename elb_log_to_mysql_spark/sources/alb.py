@@ -251,16 +251,3 @@ def read_alb_logs(
         parse_alb_lines(lines, exact_ua=exact_ua, ua_strategy="defer"),
         prefer_wrapper=exact_ua,
     )
-
-
-def read_alb_logs_stream(
-    spark: SparkSession, path: str, exact_ua: bool | None = None
-) -> DataFrame:
-    """Continuous ingest: same parse chain under Structured Streaming.
-
-    The expression pipeline is identical — only the source node changes
-    (readStream.text watches the directory for new .gz drops, the
-    natural replacement for the reference's cron-style batch rerun).
-    """
-    lines = spark.readStream.text(path)
-    return parse_alb_lines(lines, exact_ua=exact_ua)

@@ -155,96 +155,6 @@ def stream_cdc_apply(events, split: str) -> DataFrame:
     )
 
 
-def stream_cdc_apply_tws(events, split: str, state_ttl_ms: int | None = None) -> DataFrame:
-    """The CDC fold on Spark 4's transformWithState API — the modern
-    successor to applyInPandasWithState used by `stream_cdc_apply`
-    (whose fold logic this REUSES verbatim via make_cdc_update_fn; the
-    two entries must stay bit-equal and share cdc_apply's oracle).
-
-    What the new API adds at scale: named state variables fetched
-    from the state store PER KEY ON DEMAND (getValueState) instead of
-    one monolithic state row passed through the function protocol,
-    optional per-state TTL (`state_ttl_ms` — the engine evicts
-    expired keys without user timer code; at 100 TB a keyspace that
-    grows forever needs exactly this), and an API contract that
-    REQUIRES the RocksDB state-store provider — which session.py
-    already defaults (ROCKSDB_STATE_STORE), so the engine runs this
-    operator with zero extra configuration.
-
-    RUNTIME REQUIREMENT: transformWithState's Python state server
-    speaks protobuf — the `protobuf` package must be installed on the
-    driver and workers (`pip install protobuf`). The build sandbox
-    lacks it, so the equivalence test (tests/test_streaming_neardedup
-    .py) skips there and this entry is NOT in the oracle registry;
-    the fold itself is the SAME make_cdc_update_fn the registered
-    stream_cdc_apply certifies — only the thin state-adapter below is
-    exercised solely where protobuf exists."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    split_us = int(
-        datetime.strptime(split, "%Y-%m-%d")
-        .replace(tzinfo=timezone.utc)
-        .timestamp()
-        * 1_000_000
-    )
-    fold = make_cdc_update_fn(split_us)
-
-    class _CdcProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "cdc", CDC_STATE_SCHEMA, ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            # adapt the named ValueState to the GroupState duck-type
-            # the shared fold expects (exists/get/update) — one fold
-            # implementation, two engine APIs, bit-equal results
-            state = self._state
-
-            class _S:
-                hasTimedOut = False
-                exists = state.exists()
-                get = tuple(state.get()) if state.exists() else None
-
-                @staticmethod
-                def update(v):
-                    state.update(tuple(v))
-
-            yield from fold(key, rows, _S)
-
-        def close(self) -> None:
-            pass
-
-    keyed = events.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        event_time_micros_col(events, "ts", "ts_us"),
-    )
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        _CdcProcessor(),
-        outputStructType=CDC_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode=_tws_time_mode(state_ttl_ms),
-    )
-
-
-def _tws_time_mode(state_ttl_ms: int | None) -> str:
-    """TTL-configured state is only legal under a clock: Spark rejects
-    ttlDurationMs with timeMode="None" at query start
-    (STATEFUL_PROCESSOR_CANNOT_ASSIGN_TTL_IN_NO_TTL_MODE), so the time
-    mode follows the TTL request. Non-positive TTLs are rejected here
-    rather than at query start."""
-    if state_ttl_ms is None:
-        return "None"
-    if state_ttl_ms <= 0:
-        raise ValueError(f"state_ttl_ms must be positive, got {state_ttl_ms}")
-    return "ProcessingTime"
-
-
 def latest_cdc_rows(emissions: DataFrame) -> DataFrame:
     """Reduce an update-mode CDC emission table (one row per touched
     key per micro-batch) to each key's FINAL merged row: max_by over

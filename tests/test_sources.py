@@ -91,42 +91,56 @@ def test_partitioned_parquet_prunes(spark, sf_dir, tmp_path):
 
 
 def test_alb_streaming_matches_batch(spark, tmp_path):
-    """The reference pipeline under Structured Streaming: dropping gz
-    files into a watched dir yields exactly the batch parse of the
-    same files (same expression chain, only the source node differs)."""
-    import uuid
+    """The reference pipeline under Structured Streaming: gz files
+    drained by the stream ingest (stream_alb_to_jdbc) land in Derby
+    exactly as the batch read of the same files parses them — every
+    column, UA families included (both classify through
+    classify_ua_join)."""
+    import collections
 
+    from elb_log_to_mysql_spark.schema import ELB_LOG_COLUMNS
+    from elb_log_to_mysql_spark.streaming.ingest import stream_alb_to_jdbc
+
+    agents = [
+        "Mozilla/5.0 (X11; Linux x86_64) Firefox/127.0",
+        "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 "
+        "(KHTML, like Gecko) Chrome/126.0.0.0 Safari/537.36",
+        "Mozilla/5.0 (iPhone; CPU iPhone OS 17_5 like Mac OS X) "
+        "AppleWebKit/605.1.15 (KHTML, like Gecko) Version/17.5 "
+        "Mobile/15E148 Safari/604.1",
+        "curl/8.5.0",
+        "-",
+    ]
     src = tmp_path / "stream_in"
     src.mkdir()
     for f in range(2):
         with gzip.open(src / f"drop{f}.log.gz", "wt") as fh:
             for i in range(20):
-                fh.write(
-                    LINE_TMPL.format(sec=i, i=i, status=200 if i % 3 else 301) + "\n"
-                )
+                line = LINE_TMPL.format(sec=i, i=i, status=200 if i % 3 else 301)
+                fh.write(line.replace(agents[0], agents[(i + f) % len(agents)]) + "\n")
 
-    from elb_log_to_mysql_spark.sources.alb import read_alb_logs_stream
-
-    name = f"alb_{uuid.uuid4().hex[:8]}"
-    q = (
-        read_alb_logs_stream(spark, str(src))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    url = f"jdbc:derby:{tmp_path}/derby_db;create=true"
+    driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+    stream_alb_to_jdbc(
+        spark, str(src), url, driver=driver, checkpoint=str(tmp_path / "ck")
     )
-    q.awaitTermination(120)
-    streamed = spark.sql(
-        f"SELECT client_ip, http_method, elb_status_code, requested_path FROM {name}"
-    ).collect()
-    batch = (
-        read_alb_logs(spark, str(src / "*.log.gz"))
-        .select("client_ip", "http_method", "elb_status_code", "requested_path")
+    landed = (
+        spark.read.format("jdbc")
+        .option("url", url)
+        .option("dbtable", "elb_log_data")
+        .option("driver", driver)
+        .load()
+        .select(*ELB_LOG_COLUMNS)
         .collect()
     )
-    assert len(streamed) == 40
-    assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
+    batch = read_alb_logs(spark, str(src / "*.log.gz")).select(*ELB_LOG_COLUMNS)
+    want = batch.collect()
+    assert len(landed) == 40
+    assert collections.Counter(map(tuple, landed)) == collections.Counter(
+        map(tuple, want)
+    )
+    families = {r.ua_browser_family for r in want}
+    assert len(families) >= 3  # the agents really classify differently
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):

@@ -1,4 +1,4 @@
-"""The three stream near-dedup audit entries (queries.py), run end to
+"""The two stream near-dedup audit entries (queries.py), run end to
 end against their DuckDB oracles, and their failure path: a stream
 that raises leaves no thread, cache or persisted RDD behind."""
 
@@ -14,7 +14,6 @@ from elb_log_to_mysql_spark.session import scoped_conf
 
 STREAM_AUDITS = [
     "stream_near_dedup",
-    "stream_near_dedup_join",
     "stream_near_dedup_blocklist",
 ]
 

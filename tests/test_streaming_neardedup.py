@@ -1,10 +1,12 @@
-"""Streaming MinHash-LSH near-dedup (streaming/neardedup.py).
+"""Streaming MinHash-LSH near-dedup (streaming/neardedup.py) and the
+streaming CDC fold (streaming/cdc.py).
 
-Pins the three properties the oracle can't see directly: the stateful
-shard operator emits exactly the candidate set a relational band
-self-join over the same expressions produces; bucket state carries
-across micro-batches (with redelivery dedup, the skew cap and the
-per-bucket idle horizon); and verification keeps precision structural.
+Pins the properties the oracle can't see directly: the stream-stream
+band self-join emits exactly the candidate set a relational band
+self-join over the same expressions produces, also when the corpus
+arrives over several micro-batches (candidate state carried across
+batches); the watermark horizon and the static blocklist bound it;
+and verification keeps precision structural.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from elb_log_to_mysql_spark.streaming.windows import run_stream_to_batch
 
 
 def _batch_twin_candidates(docs):
-    """Relational twin of the stateful operator: the SAME band_rows
+    """Relational twin of the streaming join: the SAME band_rows
     builder (shingle/signature/band pipeline) run in batch mode,
     candidates from a band self-join."""
     banded = neardedup.band_rows(docs)
@@ -37,6 +39,9 @@ def _batch_twin_candidates(docs):
 
 
 def test_stream_candidates_equal_batch_join(spark, sf_dir):
+    """The stream-stream self-join must produce exactly the relational
+    twin's candidate set (it IS the same join, with arrivals staged
+    through the state store)."""
     path = os.path.join(sf_dir, "documents.parquet")
     schema = raw_parquet_schema(spark, path)
     cand = run_stream_to_batch(
@@ -95,49 +100,52 @@ def test_verified_pairs_match_exact_set(spark, sf_dir):
     assert len(found & exact) >= 0.9 * len(exact)  # recall floor
 
 
-class _FakeState:
-    """Minimal GroupState stand-in for driving the update fn directly."""
+def test_stream_candidates_carry_across_micro_batches(spark, sf_dir, tmp_path):
+    """The corpus arrives as three files, one per micro-batch: band
+    rows of earlier batches stay in join state, so a document in a
+    later file still pairs with its near-duplicate in an earlier one,
+    and the deduplicated candidate set equals the batch twin's."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    src = str(tmp_path / "docs_split")
+    for k in range(3):
+        docs.filter(F.col("doc_id") % 3 == k).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 3
 
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-def test_stream_join_variant_equals_twin(spark, sf_dir):
-    """The JVM stream-stream self-join variant must produce exactly
-    the relational twin's candidate set (it IS the same join, with
-    arrivals staged through the state store)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    from elb_log_to_mysql_spark.sources.tables import raw_parquet_schema as rps
-
-    cand = run_stream_to_batch(
-        spark, path, neardedup.stream_band_collisions_join, rps(spark, path),
-        output_mode="append",
-    ).dropDuplicates(["doc_id_a", "doc_id_b"])
-    docs = load_table(spark, sf_dir, "documents")
+    name = "neardedup_cross_batch_test"
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    q = (
+        neardedup.stream_band_collisions(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert max(p["batchId"] for p in q.recentProgress) >= 2
+    got = {
+        (r.doc_id_a, r.doc_id_b)
+        for r in spark.table(name).dropDuplicates().collect()
+    }
     twin = _batch_twin_candidates(docs)
-    s = {(r.doc_id_a, r.doc_id_b) for r in cand.collect()}
-    b = {(r.doc_id_a, r.doc_id_b) for r in twin.collect()}
-    assert s == b and len(s) > 0
+    want = {(r.doc_id_a, r.doc_id_b) for r in twin.collect()}
+    assert got == want
+    # pairs whose documents sit in different files, so in different
+    # micro-batches
+    assert any(a % 3 != b % 3 for a, b in got)
 
 
 def test_stream_join_watermark_horizon_bounds_pairs(spark, tmp_path):
     """With event_time + horizon, the watermarked join pairs only
     documents whose ingest times are within the horizon — the dedup
-    horizon the stateful variant expresses as idle_timeout_ms, here
-    enforced by the time-range join condition (which is also what
-    lets Spark evict band-row state older than the watermark)."""
+    horizon, enforced by the time-range join condition (which is also
+    what lets Spark evict band-row state older than the watermark)."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1, 10, 0, 0)
@@ -164,7 +172,7 @@ def test_stream_join_watermark_horizon_bounds_pairs(spark, tmp_path):
     cand = run_stream_to_batch(
         spark,
         src,
-        lambda s: neardedup.stream_band_collisions_join(
+        lambda s: neardedup.stream_band_collisions(
             s, event_time="ingest_ts", horizon="1 hour"
         ),
         schema,
@@ -178,7 +186,7 @@ def test_stream_join_watermark_horizon_bounds_pairs(spark, tmp_path):
 
 def test_hot_bucket_blocklist_guards_join_variant(spark, tmp_path):
     """A degenerate bucket (spam cluster) must be excludable from the
-    join variant via the static blocklist: with max_bucket below the
+    streaming join via the static blocklist: with max_bucket below the
     cluster size the blocklist names its band keys, the anti-join
     drops those band rows, and the spam docs stop pairing — while an
     unrelated normal pair still surfaces."""
@@ -199,7 +207,7 @@ def test_hot_bucket_blocklist_guards_join_variant(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="band config"):
-        neardedup.stream_band_collisions_join(docs, bands=32, blocklist=bl)
+        neardedup.stream_band_collisions(docs, bands=32, blocklist=bl)
 
     # the guard must survive the production flow — blocklist landed to
     # storage and re-read on a refresh cadence (ADVICE r11: a Python
@@ -208,12 +216,12 @@ def test_hot_bucket_blocklist_guards_join_variant(spark, tmp_path):
     bl.write.mode("overwrite").parquet(bl_path)
     bl_rt = spark.read.parquet(bl_path)
     with pytest.raises(ValueError, match="band config"):
-        neardedup.stream_band_collisions_join(docs, bands=32, blocklist=bl_rt)
+        neardedup.stream_band_collisions(docs, bands=32, blocklist=bl_rt)
 
     # and a frame WITHOUT the config columns (hand-built key list) is
     # rejected up front rather than trusted blindly
     with pytest.raises(ValueError, match="band-config columns"):
-        neardedup.stream_band_collisions_join(
+        neardedup.stream_band_collisions(
             docs, blocklist=bl_rt.select("band_idx", "band_hash")
         )
 
@@ -221,7 +229,7 @@ def test_hot_bucket_blocklist_guards_join_variant(spark, tmp_path):
     cand = run_stream_to_batch(
         spark,
         src,
-        lambda s: neardedup.stream_band_collisions_join(s, blocklist=bl),
+        lambda s: neardedup.stream_band_collisions(s, blocklist=bl),
         schema,
         output_mode="append",
     ).dropDuplicates(["doc_id_a", "doc_id_b"])
@@ -301,104 +309,23 @@ def test_stream_cdc_multi_microbatch_equals_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_stream_cdc_tws_equals_batch(spark, sf_dir):
-    """transformWithState twin of stream_cdc_apply: same fold, new
-    stateful API (named ValueState, TTL-capable, RocksDB-required) —
-    must reduce to exactly the batch cdc_apply merge. Skips where the
-    protobuf package (the tws state-server protocol) is absent."""
-    import importlib.util
-    import os
+class _FakeState:
+    """Minimal GroupState stand-in for driving the update fn directly."""
 
-    import pytest
+    def __init__(self):
+        self._v = None
+        self.hasTimedOut = False
 
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        has_protobuf = False
-    if not has_protobuf:
-        pytest.skip("transformWithState needs the protobuf package")
+    @property
+    def exists(self):
+        return self._v is not None
 
-    from elb_log_to_mysql_spark.operators import analytics
-    from elb_log_to_mysql_spark.streaming.cdc import (
-        latest_cdc_rows,
-        stream_cdc_apply_tws,
-    )
+    @property
+    def get(self):
+        return self._v
 
-    path = os.path.join(sf_dir, "events.parquet")
-    emissions = run_stream_to_batch(
-        spark, path, lambda s: stream_cdc_apply_tws(s, "2024-01-20"),
-        raw_parquet_schema(spark, path), output_mode="update",
-    )
-    got = {
-        r.user_id: (r.state, r.action, r.in_snapshot)
-        for r in latest_cdc_rows(emissions).collect()
-    }
-    events = load_table(spark, sf_dir, "events")
-    want = {
-        r.user_id: (r.state, r.action, r.in_snapshot)
-        for r in analytics.cdc_apply(events, "2024-01-20").collect()
-    }
-    assert got == want
-
-
-def test_tws_time_mode_follows_ttl():
-    """ADVICE r11: TTL-configured state requires a clock — the tws
-    wrapper must pick ProcessingTime whenever a TTL is requested
-    (timeMode="None" + ttlDurationMs fails at query start with
-    STATEFUL_PROCESSOR_CANNOT_ASSIGN_TTL_IN_NO_TTL_MODE) and reject
-    nonsense TTLs up front. Pure-Python, so it runs even where the
-    protobuf-backed query itself cannot."""
-    import pytest
-
-    from elb_log_to_mysql_spark.streaming.cdc import _tws_time_mode
-
-    assert _tws_time_mode(None) == "None"
-    assert _tws_time_mode(60_000) == "ProcessingTime"
-    with pytest.raises(ValueError):
-        _tws_time_mode(0)
-    with pytest.raises(ValueError):
-        _tws_time_mode(-5)
-
-
-def test_stream_cdc_tws_ttl_equals_batch(spark, sf_dir):
-    """The TTL-configured branch of stream_cdc_apply_tws (timeMode=
-    ProcessingTime): with a TTL far longer than the run, results must
-    still equal the batch cdc_apply merge. Protobuf-gated like its
-    no-TTL twin above."""
-    import importlib.util
-    import os
-
-    import pytest
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        pytest.skip("transformWithState needs the protobuf package")
-
-    from elb_log_to_mysql_spark.operators import analytics
-    from elb_log_to_mysql_spark.streaming.cdc import (
-        latest_cdc_rows,
-        stream_cdc_apply_tws,
-    )
-
-    path = os.path.join(sf_dir, "events.parquet")
-    emissions = run_stream_to_batch(
-        spark, path,
-        lambda s: stream_cdc_apply_tws(s, "2024-01-20", state_ttl_ms=3_600_000),
-        raw_parquet_schema(spark, path), output_mode="update",
-    )
-    got = {
-        r.user_id: (r.state, r.action, r.in_snapshot)
-        for r in latest_cdc_rows(emissions).collect()
-    }
-    events = load_table(spark, sf_dir, "events")
-    want = {
-        r.user_id: (r.state, r.action, r.in_snapshot)
-        for r in analytics.cdc_apply(events, "2024-01-20").collect()
-    }
-    assert got == want
+    def update(self, v):
+        self._v = v
 
 
 def test_stream_cdc_fold_is_batch_boundary_invariant():
@@ -440,94 +367,3 @@ def test_stream_cdc_fold_is_batch_boundary_invariant():
     final = pd.concat(rows).iloc[-1].to_dict()
     assert final["action"] == "update" and final["state"] == "signup"
     assert final["in_snapshot"]
-
-
-def _run_shard_update(fn, state, rows, now_ms=0):
-    """rows: list of (band_idx, band_hash, doc_id)."""
-    state.now_ms = now_ms
-    pdf = pd.DataFrame(rows, columns=["band_idx", "band_hash", "doc_id"])
-    out = list(fn((0,), iter([pdf]), state))
-    if not out:
-        return []
-    cat = pd.concat(out)
-    return sorted(zip(cat["doc_id_a"], cat["doc_id_b"]))
-
-
-class _FakeShardState(_FakeState):
-    def __init__(self):
-        super().__init__()
-        self.now_ms = 0
-        self.removed = False
-        self.timeout_set = None
-
-    def getCurrentProcessingTimeMs(self):
-        return self.now_ms
-
-    def remove(self):
-        self._v = None
-        self.removed = True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_set = ms
-
-
-def test_shard_update_fn_matches_bucket_semantics():
-    """Bucket semantics of the shard update fn, with several buckets
-    riding one state row: per-bucket pairing in doc_id order across
-    micro-batches, redelivery dedup, the skew cap."""
-    fn = neardedup.make_shard_update_fn(max_per_bucket=3)
-    st = _FakeShardState()
-    # two buckets in one shard; bucket (0,7): docs 5,2 -> (2,5);
-    # bucket (1,9): doc 4 alone -> nothing
-    assert _run_shard_update(fn, st, [(0, 7, 5), (1, 9, 4), (0, 7, 2)]) == [
-        (2, 5)
-    ]
-    # batch 2: doc 1 into (0,7) pairs against both; doc 6 into (1,9)
-    # pairs against 4 — and bucket isolation holds (no cross pairs)
-    assert _run_shard_update(fn, st, [(0, 7, 1), (1, 9, 6)]) == [
-        (1, 2),
-        (1, 5),
-        (4, 6),
-    ]
-    # redelivery: no new pairs, no state growth
-    assert _run_shard_update(fn, st, [(0, 7, 2)]) == []
-    # skew cap: bucket (0,7) is full (3) -> new doc neither pairs nor joins
-    assert _run_shard_update(fn, st, [(0, 7, 9)]) == []
-    # state layout: both buckets present with their occupants
-    band_idxs, band_hashes, counts, flat, touch = st.get
-    got = {}
-    pos = 0
-    for bi, bh, n in zip(band_idxs, band_hashes, counts):
-        got[(bi, bh)] = list(flat[pos : pos + n])
-        pos += n
-    assert got == {(0, 7): [2, 5, 1], (1, 9): [4, 6]}
-    assert touch == [0, 0]  # no timeout -> pure-function state
-
-
-def test_shard_update_fn_per_bucket_idle_horizon():
-    """With idle_timeout_ms, each BUCKET is pruned independently at
-    the shard's next touch: a stale bucket's occupants never pair
-    against a re-arrival, while a fresh bucket in the same shard keeps
-    its state — the fine-grained eviction semantics."""
-    fn = neardedup.make_shard_update_fn(max_per_bucket=10, idle_timeout_ms=1000)
-    st = _FakeShardState()
-    assert _run_shard_update(fn, st, [(0, 7, 1), (1, 9, 3)], now_ms=0) == []
-    assert st.timeout_set == 1000
-    # t=500: bucket (1,9) touched again (stays fresh)
-    assert _run_shard_update(fn, st, [(1, 9, 4)], now_ms=500) == [(3, 4)]
-    # t=1200: (0,7) is idle > 1000 -> pruned before pairing: doc 2
-    # starts a FRESH bucket (no pair against forgotten doc 1);
-    # (1,9) is 700ms idle -> keeps state, doc 5 pairs against 3 and 4
-    assert _run_shard_update(
-        fn, st, [(0, 7, 2), (1, 9, 5)], now_ms=1200
-    ) == [(3, 5), (4, 5)]
-    # shard-level timeout: a fully idle shard is removed outright
-    st.hasTimedOut = True
-    assert list(fn((0,), iter([]), st)) == []
-    assert st.removed and not st.exists
-    # re-arrival after the removal, inside what was (0,7)'s horizon:
-    # a fresh bucket that pairs with nothing (not with forgotten doc 2)
-    # and is the only occupant in state
-    st.hasTimedOut = False
-    assert _run_shard_update(fn, st, [(0, 7, 6)], now_ms=1300) == []
-    assert st.get == ([0], [7], [1], [6], [1300])

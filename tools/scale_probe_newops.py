@@ -3,7 +3,7 @@ compaction_bins, stats_pruning, bm25_topk, cdc_apply,
 stream_near_dedup.
 
 Replicates the sf0.1 tables Nx (tools/scale_sweep.replicate — clone-
-dense by construction, the adversarial case for the LSH bucket state)
+dense by construction, the adversarial case for the LSH band join state)
 and checks each operator engine-vs-engine at the larger size:
 correctness invariants that need no DuckDB twin, then wall time.
 
@@ -18,14 +18,13 @@ Checks:
   repeats the term), so the SAME terms stay selected.
 - cdc_apply: actions partition the keyspace; in_snapshot == (action
   != 'delete'); snapshot size equals a direct last-writer-wins count.
-- stream_near_dedup: streamed candidate set == the relational band
-  self-join twin (the stateful-operator-equals-join property at
-  scale), plus the stream's wall time — the honest cost of the
-  interpreted JVM minhash vs the batch path's Arrow kernel. The
-  stream runs on the RocksDB state store (see the session conf
-  below): the in-heap HDFSBacked provider OOMs at factor>=20 with
-  the default local heap, and RocksDB is the production setting for
-  million-bucket state anyway.
+- stream_near_dedup: streamed candidate set (the stream-stream band
+  self-join) == the relational band self-join twin at scale, plus
+  the stream's wall time against the twin's. The stream runs on the
+  RocksDB state store (see the session conf below): the in-heap
+  HDFSBacked provider OOMs at factor>=20 with the default local
+  heap, and RocksDB is the production setting for million-row join
+  state anyway.
 
 Usage: python tools/scale_probe_newops.py [factor] [out.json]
 """
@@ -58,8 +57,8 @@ def main() -> None:
     out_dir = f"/tmp/scale_sweep_{factor}x"
 
     # The HDFSBacked (in-JVM-heap) state store OOMs the default 8g
-    # local JVM at factor>=20: 100k docs x 16 bands = 1.6M stateful
-    # bucket groups, and the heap holds every maintained version. The
+    # local JVM at factor>=20: 100k docs x 16 bands = 1.6M band rows
+    # of join state, and the heap holds every maintained version. The
     # production configuration for large stateful streams is RocksDB
     # (state lives off-heap/on-disk, bounded by native block cache) —
     # which is exactly the knob a 100 TB deployment sets, so the probe
@@ -177,8 +176,8 @@ def main() -> None:
     # probe's 7.1x stream-vs-twin gap was the bounded harness's
     # memory sink single-threadedly ingesting the ~16.7M raw pair
     # emissions into the driver, not the operator: with a distributed
-    # sink the stateful variant runs 2.0x the batch twin and the
-    # JVM stream-stream join variant 1.6x (round-11 measurement).
+    # sink the stream-stream join runs 1.6x the batch twin (round-11
+    # measurement).
     path = os.path.join(out_dir, "documents.parquet")
     schema = raw_parquet_schema(spark, path)
 
@@ -200,11 +199,6 @@ def main() -> None:
     # one scan: the count both times the dedup and populates the cache
     # the sym-diff below reuses
     n_stream, w_stream2 = timed(cand.count)
-    jcand, w_join = timed(
-        lambda: run_to_parquet(
-            neardedup.stream_band_collisions_join
-        ).dropDuplicates(["doc_id_a", "doc_id_b"]).count()
-    )
 
     def twin():
         # the SAME band_rows builder the stream path uses (round-11:
@@ -231,14 +225,11 @@ def main() -> None:
     )
     report["stream_near_dedup"] = {
         "stream_wall_s": round(w_stream + w_stream2, 2),
-        "stream_join_variant_wall_s": round(w_join, 2),
         "twin_wall_s": w_twin,
         "stream_over_twin": round((w_stream + w_stream2) / w_twin, 2)
         if w_twin
         else None,
-        "join_over_twin": round(w_join / w_twin, 2) if w_twin else None,
         "candidates": n_stream,
-        "join_candidates": jcand,
         "twin_candidates": n_twin,
         "stream_equals_twin": sym_diff == 0,
         "sink": "parquet (production shape; memory-sink harness cost excluded)",
