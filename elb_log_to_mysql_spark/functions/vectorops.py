@@ -160,10 +160,9 @@ def simhash_fp_batch(th: pd.Series) -> np.ndarray:
     """SimHash fingerprints over a batch of int64 token-hash arrays.
 
     Per row: bit b of the fingerprint is set iff more tokens have bit
-    b set than clear (vote_b = sum(±1) > 0) — identical semantics to
-    the explode+aggregate formulation (operators/dedup.py:
-    simhash_fingerprints_agg, equality-tested), but computed map-side
-    per Arrow batch: unpack the (total_tokens, 64) bit matrix once,
+    b set than clear (vote_b = sum(±1) > 0) — the semantics of an
+    explode+aggregate formulation (not implemented here, and not
+    compared by any test), but computed map-side per Arrow batch: unpack the (total_tokens, 64) bit matrix once,
     segment-sum with np.add.reduceat, threshold. No explode, no
     shuffle — the fingerprint never leaves the scan stage.
 

@@ -1030,8 +1030,8 @@ def simhash_fingerprints(
     stage with NO explode and NO shuffle: at 100 TB the alternative
     (explode to one row per token, 64-column hash aggregate) shuffles
     64 ints per doc and pays a token-count-sized exchange input.
-    Equality with that formulation is pinned by
-    tests (simhash_fingerprints_agg is the JVM-pure twin).
+    No test compares the kernel with that formulation; the simhash
+    tests check the pairs these fingerprints produce.
     """
     from elb_log_to_mysql_spark.functions.vectorops import with_simhash_fp
 
@@ -1043,42 +1043,13 @@ def simhash_fingerprints(
                 "th"
             ),
         )
-        # token-less docs carry no signal; the agg twin drops them via
-        # explode, so the kernel path must too
+        # token-less docs carry no signal (an explode-based tally
+        # would drop them too)
         .filter(F.size("th") > 0)
     )
     # the vote tally is its own mapInPandas stage (never a PythonUDF
     # expression); the token-hash array dies inside it
     return with_simhash_fp(th, "th", drop=("th",)).select("doc_id", "fp")
-
-
-def simhash_fingerprints_agg(
-    documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """JVM-pure twin of simhash_fingerprints: explode + one 64-column
-    hash aggregate (partial agg combines votes map-side, the shuffle
-    carries 64 ints per doc). Kept as the no-Python-workers fallback
-    and as the equality oracle for the vectorized kernel."""
-    tok = ensure_min_partitions(documents).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_tokens(F.col(text_col))).alias("token"),
-    ).withColumn("h", F.xxhash64("token"))
-
-    def mask(b: int) -> Column:
-        return F.shiftleft(F.lit(1).cast("long"), b)
-
-    votes = tok.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.col("h").bitwiseAND(mask(b)) != 0, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(64)
-        ]
-    )
-    fp = F.lit(0).cast("long")
-    for b in range(64):
-        fp = fp + F.when(F.col(f"v{b}") > 0, mask(b)).otherwise(F.lit(0).cast("long"))
-    return votes.select("doc_id", fp.alias("fp"))
 
 
 def simhash_near_pairs(

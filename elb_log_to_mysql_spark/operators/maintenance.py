@@ -16,7 +16,7 @@ Scale design:
   (the unit a real compactor rewrites); the cumulative-size window
   is per-partition, so the job parallelizes across partitions and
   never needs a global sort.
-- The stats index derives a global clustered position with the same
+- The stats report derives a global clustered position with the same
   two-pass bucketed prefix-sum trick as pipeline.py's shuffle_index
   (coarse range bucket -> broadcast offsets -> local window): no
   single-partition window at any size, and the block ids equal the
@@ -111,34 +111,6 @@ def _clustered_position(
     )
 
 
-def block_stats_index(
-    df: DataFrame,
-    cluster_col: str,
-    tiebreak_col: str,
-    stat_cols: list[str],
-    block_rows: int = 512,
-) -> DataFrame:
-    """Per-block min/max statistics over a `cluster_col`-clustered
-    layout — the queryable form of the stats a writer would persist
-    per file/row-group after OPTIMIZE ... SORT BY cluster_col.
-
-    Rows are assigned to fixed-size blocks by their global clustered
-    position (two-pass prefix sum, bucketed by year of the cluster
-    column — see _clustered_position); each block row carries
-    n_rows plus min/max of every stat column.
-    """
-    pos = _clustered_position(
-        df, F.year(cluster_col).cast("long"), [cluster_col, tiebreak_col]
-    )
-    blocked = pos.withColumn(
-        "block_id", F.floor(F.col("_pos") / F.lit(block_rows)).cast("long")
-    )
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in stat_cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    return blocked.groupBy("block_id").agg(*aggs)
-
-
 def stats_prune_report(
     df: DataFrame,
     cluster_col: str,
@@ -148,7 +120,7 @@ def stats_prune_report(
     block_rows: int = 512,
 ) -> DataFrame:
     """Data-skipping effectiveness report for a half-open range
-    predicate `lo <= cluster_col < hi` against the block-stats index.
+    predicate `lo <= cluster_col < hi` against per-block min/max statistics.
 
     A block is KEPT iff its [min, max] interval can intersect the
     predicate range (max >= lo AND min < hi) — the same test a

@@ -71,15 +71,15 @@ def binary_metadata(documents: DataFrame) -> DataFrame:
     )
 
 
-def media_metadata(media: DataFrame, id_pattern: str = r"doc_(\d+)\.bin") -> DataFrame:
-    """Metadata profile over a `binaryFile` ingest (sources/formats.py:
-    read_media_dir): id recovered from the file name, byte length and
-    sha2 digest of the raw content — all JVM expressions, content never
-    leaves the executor. The dir-scan twin of `binary_metadata`."""
+def media_metadata(media: DataFrame) -> DataFrame:
+    """Metadata profile over a (doc_id, payload) `binaryFile` ingest
+    (sources/formats.py:read_media_dir): byte length and sha2 digest
+    of the raw content — all JVM expressions, content never leaves the
+    executor. The dir-scan twin of `binary_metadata`."""
     return media.select(
-        F.regexp_extract(F.col("path"), id_pattern, 1).cast("long").alias("doc_id"),
-        F.octet_length(F.col("content")).cast("long").alias("byte_len"),
-        F.sha2(F.col("content"), 256).alias("sha"),
+        "doc_id",
+        F.octet_length(F.col("payload")).cast("long").alias("byte_len"),
+        F.sha2(F.col("payload"), 256).alias("sha"),
     )
 
 

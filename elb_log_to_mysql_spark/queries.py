@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elb_log_to_mysql_spark.functions.numeric import DAVG_SQL, DSUM_SQL, dsum
+from elb_log_to_mysql_spark.functions.vectorops import with_unit_norm
 from elb_log_to_mysql_spark.operators import advanced, analytics, asof, dedup, relational
 from elb_log_to_mysql_spark.operators import multimodal, sessionize, similarity, skew
 from elb_log_to_mysql_spark.operators import textops, tpch, windows
@@ -39,7 +40,12 @@ from elb_log_to_mysql_spark.sources.tables import (
     load_tables,
     raw_parquet_schema,
 )
-from elb_log_to_mysql_spark.streaming.windows import run_stream_to_batch, tumbling_counts
+from elb_log_to_mysql_spark.streaming.windows import (
+    ensure_event_time,
+    event_time_micros,
+    run_stream_to_batch,
+    tumbling_counts,
+)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -2011,29 +2017,76 @@ _ANN_RECALL_ORACLE = """
 """
 
 
-def _ann_recall_audit(exact, approx, floor: float):
-    """Corpus-level ANN recall audit: exact top-k set size (oracle
-    recomputes it independently in DuckDB) + a recall floor the
-    approximate result must meet. Both inputs are (query_id,
-    neighbor_id) sets; the join and aggregation stay in one plan —
-    no driver-side set math."""
-    joined = exact.join(
-        approx.select("query_id", "neighbor_id", F.lit(1).alias("f")),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return joined.agg(
-        F.countDistinct("query_id").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.sum(F.coalesce("f", F.lit(0))).alias("n_hit"),
-    ).select(
-        "n_queries",
-        "n_exact",
-        (
-            (F.col("n_exact") == 0)
-            | (F.col("n_hit") >= F.lit(floor) * F.col("n_exact"))
-        ).alias("recall_floor_met"),
-    )
+def _ann_audit(corpus, queries, approx, *extras, required=None, keep=()):
+    """The ANN entries' shared audit row: the exact brute-force top-10
+    of `queries` over `corpus` (the oracle recomputes its set size
+    independently in DuckDB) and `approx`'s 0.95 recall floor against
+    it: n_queries / n_exact / recall_floor_met. Then, in order:
+
+    - `required`: {column: fixed-config top-k} tripwires, each TRUE
+      when that leg FAILS the same floor (the derived path is
+      necessary, not merely harmless);
+    - `extras`: single-row frames (cross-joined) or named columns.
+
+    Joins and aggregates stay in one plan — no driver-side set math.
+    Every top-k frame, plus `keep`, is carried so the operators'
+    GC-scoped caches live until the row executes."""
+    required = required or {}
+    exact = similarity.similarity_topk_bruteforce(corpus, queries, k=10)
+    ids = exact.select("query_id", "neighbor_id")
+
+    def recall(found):
+        joined = ids.join(
+            found.select("query_id", "neighbor_id", F.lit(1).alias("f")),
+            ["query_id", "neighbor_id"],
+            "left",
+        )
+        return joined.agg(
+            F.countDistinct("query_id").alias("n_queries"),
+            F.count(F.lit(1)).alias("n_exact"),
+            F.sum(F.coalesce("f", F.lit(0))).alias("n_hit"),
+        ).select(
+            "n_queries",
+            "n_exact",
+            (
+                (F.col("n_exact") == 0)
+                | (F.col("n_hit") >= F.lit(0.95) * F.col("n_exact"))
+            ).alias("recall_floor_met"),
+        )
+
+    out = recall(approx)
+    cols = list(out.columns)
+    tripwires = [
+        recall(fixed).select((~F.col("recall_floor_met")).alias(name))
+        for name, fixed in required.items()
+    ]
+    for x in (*tripwires, *extras):
+        if isinstance(x, DataFrame):
+            out = out.crossJoin(F.broadcast(x))
+            cols += x.columns
+        else:
+            cols.append(x)
+    return carry_caches(out.select(*cols), exact, approx, *required.values(), *keep)
+
+
+# Index artifacts (IVF centroids, PQ codebooks) trained ONCE per
+# corpus: offline in production, memoized here per (kind, key).
+_TRAINERS = {
+    "ivf": similarity.train_ivf_centroids,
+    "pq": similarity.train_pq_codebooks,
+    # normalized space: similarity_topk_ivf_auto's index contract
+    "ivf_norm": lambda emb: similarity.train_ivf_centroids(
+        with_unit_norm(emb.select(F.col("embedding").alias("_v")), "_v"),
+        vec_col="_nv",
+    ),
+}
+_TRAINED: dict[tuple, object] = {}
+
+
+def _trained(kind: str, key, emb):
+    if (kind, key) not in _TRAINED:
+        _TRAINED[(kind, key)] = _TRAINERS[kind](emb)
+    return _TRAINED[(kind, key)]
 
 
 @_q("similarity_topk_lsh", _ANN_RECALL_ORACLE)
@@ -2046,14 +2099,8 @@ def q_similarity_topk_lsh(spark, sf_dir):
     checks (the oracle recomputes the ground-truth neighbor set)."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    exact = similarity.similarity_topk_bruteforce(emb, q, k=10)
-    approx = similarity.similarity_topk_lsh(
-        emb, q, k=10, n_planes=3, n_tables=24
-    )
-    out = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), approx, floor=0.95
-    )
-    return carry_caches(out, exact, approx)
+    approx = similarity.similarity_topk_lsh(emb, q, k=10, n_planes=3, n_tables=24)
+    return _ann_audit(emb, q, approx)
 
 
 @_q(
@@ -2074,9 +2121,6 @@ def q_embedding_near_dup(spark, sf_dir):
     )
 
 
-_IVF_CENTROIDS: dict[str, object] = {}
-
-
 @_q("similarity_topk_ivf", _ANN_RECALL_ORACLE)
 def q_similarity_topk_ivf(spark, sf_dir):
     """IVF ANN recall audit vs the brute-force exact top-k. The
@@ -2087,19 +2131,10 @@ def q_similarity_topk_ivf(spark, sf_dir):
     per query); the driver-checked floor is 0.95."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = similarity.train_ivf_centroids(emb)
-    exact = similarity.similarity_topk_bruteforce(emb, q, k=10)
     approx = similarity.similarity_topk_ivf(
-        emb, q, k=10, nprobe=12, centroids=_IVF_CENTROIDS[sf_dir]
+        emb, q, k=10, nprobe=12, centroids=_trained("ivf", sf_dir, emb)
     )
-    out = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), approx, floor=0.95
-    )
-    return carry_caches(out, exact, approx)
-
-
-_PQ_CODEBOOKS: dict[str, object] = {}
+    return _ann_audit(emb, q, approx)
 
 
 @_q("similarity_topk_pq", _ANN_RECALL_ORACLE)
@@ -2115,16 +2150,10 @@ def q_similarity_topk_pq(spark, sf_dir):
     driver-checked floor is 0.95."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    if sf_dir not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[sf_dir] = similarity.train_pq_codebooks(emb)
-    exact = similarity.similarity_topk_bruteforce(emb, q, k=10)
     approx = similarity.similarity_topk_pq(
-        emb, q, k=10, codebooks=_PQ_CODEBOOKS[sf_dir]
+        emb, q, k=10, codebooks=_trained("pq", sf_dir, emb)
     )
-    out = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), approx, floor=0.95
-    )
-    return carry_caches(out, exact, approx)
+    return _ann_audit(emb, q, approx)
 
 
 @_q("similarity_topk_ivfpq", _ANN_RECALL_ORACLE)
@@ -2142,23 +2171,15 @@ def q_similarity_topk_ivfpq(spark, sf_dir):
     driver-checked floor is 0.95."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = similarity.train_ivf_centroids(emb)
-    if sf_dir not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[sf_dir] = similarity.train_pq_codebooks(emb)
-    exact = similarity.similarity_topk_bruteforce(emb, q, k=10)
     approx = similarity.similarity_topk_ivfpq(
         emb,
         q,
         k=10,
         nprobe=12,
-        centroids=_IVF_CENTROIDS[sf_dir],
-        codebooks=_PQ_CODEBOOKS[sf_dir],
+        centroids=_trained("ivf", sf_dir, emb),
+        codebooks=_trained("pq", sf_dir, emb),
     )
-    out = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), approx, floor=0.95
-    )
-    return carry_caches(out, exact, approx)
+    return _ann_audit(emb, q, approx)
 
 
 _ANN_DENSE_ORACLE = """
@@ -2212,16 +2233,44 @@ def q_ann_rerank_auto(spark, sf_dir):
     q = dense.filter(
         ((F.col("vec_id") % 100) == 0) & (F.col("vec_id") < 2000)
     )
-    if sf_dir not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[sf_dir] = similarity.train_pq_codebooks(emb)
-    exact = similarity.similarity_topk_bruteforce(dense, q, k=10)
     approx = similarity.similarity_topk_pq(
-        dense, q, k=10, rerank_factor=None, codebooks=_PQ_CODEBOOKS[sf_dir]
+        dense, q, k=10, rerank_factor=None, codebooks=_trained("pq", sf_dir, emb)
     )
-    out = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), approx, floor=0.95
+    return _ann_audit(dense, q, approx)
+
+
+def _dense_corpus(spark, emb, copies: int, stride: int, jitter: float):
+    """Cluster-dense ANN corpus, mirrored verbatim in the DuckDB
+    oracles: `copies` noisy copies per base vector, each element
+    shifted by a hash-deterministic offset in +-`jitter` (xxhash64 of
+    vec_id, copy, element), copy ids permuted by x`stride` mod
+    `copies`. 0.05 -> theta ~ 19deg clusters, the LSH geometry; 0.02
+    -> ~8deg, tight enough for the IVF prune's phase-1 bound to bite;
+    0.90 scatters a vector's copies across IVF cells. Returns (corpus,
+    queries): copy 0 of the first 20 base vectors."""
+    ids = spark.range(copies).select(F.col("id").cast("int").alias("copy"))
+    dense = emb.crossJoin(F.broadcast(ids)).select(
+        (F.col("vec_id") * copies + (F.col("copy") * stride) % copies).alias(
+            "vec_id"
+        ),
+        F.transform(
+            "embedding",
+            lambda x, i: x
+            + F.lit(jitter)
+            * (
+                F.pmod(
+                    F.xxhash64(F.col("vec_id"), F.col("copy"), i),
+                    F.lit(2048),
+                )
+                / F.lit(1024.0)
+                - F.lit(1.0)
+            ),
+        ).alias("embedding"),
     )
-    return carry_caches(out, exact, approx)
+    q = dense.filter(
+        ((F.col("vec_id") % copies) == 0) & (F.col("vec_id") < 20 * copies)
+    )
+    return dense, q
 
 
 _ANN_NOISY_ORACLE = """
@@ -2291,52 +2340,19 @@ def q_ann_band_auto(spark, sf_dir):
     are the BASE corpus's memoized artifacts — the production shape,
     where the index is trained before the noisy dup-flood arrives."""
     emb = _t(spark, sf_dir, "embeddings")
-    copies = spark.range(100).select(F.col("id").cast("int").alias("copy"))
-    dense = emb.crossJoin(F.broadcast(copies)).select(
-        (F.col("vec_id") * 100 + (F.col("copy") * 37) % 100).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x
-            + F.lit(0.05)
-            * (
-                F.pmod(
-                    F.xxhash64(F.col("vec_id"), F.col("copy"), i),
-                    F.lit(2048),
-                )
-                / F.lit(1024.0)
-                - F.lit(1.0)
-            ),
-        ).alias("embedding"),
-    )
-    q = dense.filter(
-        ((F.col("vec_id") % 100) == 0) & (F.col("vec_id") < 2000)
-    )
-    if sf_dir not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[sf_dir] = similarity.train_pq_codebooks(emb)
-    cb = _PQ_CODEBOOKS[sf_dir]
-    exact = similarity.similarity_topk_bruteforce(dense, q, k=10)
+    dense, q = _dense_corpus(spark, emb, 100, 37, 0.05)
+    cb = _trained("pq", sf_dir, emb)
     banded, adm = similarity.similarity_topk_pq(
         dense, q, k=10, rerank_factor=None, codebooks=cb, with_stats=True
     )
     fixed = similarity.similarity_topk_pq(
         dense, q, k=10, rerank_factor=4, codebooks=cb
     )
-    exact_ids = exact.select("query_id", "neighbor_id")
-    floor_row = _ann_recall_audit(exact_ids, banded, floor=0.95)
-    fixed_row = _ann_recall_audit(exact_ids, fixed, floor=0.95).select(
-        (~F.col("recall_floor_met")).alias("band_required")
-    )
     adm_row = adm.agg(
         (F.sum("cut_admitted") > 0).alias("cut_active"),
         (F.sum("cap_dropped") > 0).alias("cap_hit"),
     )
-    out = floor_row.crossJoin(F.broadcast(fixed_row)).crossJoin(
-        F.broadcast(adm_row)
-    )
-    return carry_caches(out, exact, banded, fixed)
-
-
-_IVF_CENTROIDS_NORM: dict[str, object] = {}
+    return _ann_audit(dense, q, banded, adm_row, required={"band_required": fixed})
 
 _ANN_SCATTER_ORACLE = """
     WITH dense AS (
@@ -2388,74 +2404,14 @@ def q_ann_nprobe_auto(spark, sf_dir):
     index contract), the production shape where the index predates
     the flood."""
     emb = _t(spark, sf_dir, "embeddings")
-    copies = spark.range(100).select(F.col("id").cast("int").alias("copy"))
-    dense = emb.crossJoin(F.broadcast(copies)).select(
-        (F.col("vec_id") * 100 + (F.col("copy") * 37) % 100).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x
-            + F.lit(0.90)
-            * (
-                F.pmod(
-                    F.xxhash64(F.col("vec_id"), F.col("copy"), i),
-                    F.lit(2048),
-                )
-                / F.lit(1024.0)
-                - F.lit(1.0)
-            ),
-        ).alias("embedding"),
-    )
-    q = dense.filter(
-        ((F.col("vec_id") % 100) == 0) & (F.col("vec_id") < 2000)
-    )
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = similarity.train_ivf_centroids(emb)
-    if sf_dir not in _IVF_CENTROIDS_NORM:
-        from elb_log_to_mysql_spark.functions.vectorops import with_unit_norm
-
-        _IVF_CENTROIDS_NORM[sf_dir] = similarity.train_ivf_centroids(
-            with_unit_norm(emb.select(F.col("embedding").alias("_v")), "_v"),
-            vec_col="_nv",
-        )
-    exact = similarity.similarity_topk_bruteforce(dense, q, k=10)
+    dense, q = _dense_corpus(spark, emb, 100, 37, 0.90)
     derived = similarity.similarity_topk_ivf_auto(
-        dense, q, k=10, centroids=_IVF_CENTROIDS_NORM[sf_dir]
+        dense, q, k=10, centroids=_trained("ivf_norm", sf_dir, emb)
     )
     fixed = similarity.similarity_topk_ivf(
-        dense, q, k=10, nprobe=12, centroids=_IVF_CENTROIDS[sf_dir]
+        dense, q, k=10, nprobe=12, centroids=_trained("ivf", sf_dir, emb)
     )
-    exact_ids = exact.select("query_id", "neighbor_id")
-    floor_row = _ann_recall_audit(exact_ids, derived, floor=0.95)
-    fixed_row = _ann_recall_audit(exact_ids, fixed, floor=0.95).select(
-        (~F.col("recall_floor_met")).alias("nprobe_auto_required")
-    )
-    out = floor_row.crossJoin(F.broadcast(fixed_row))
-    return carry_caches(out, exact, derived, fixed)
-
-
-def _dense_corpus_25(spark, emb, jitter: float = 0.05):
-    """Cluster-dense ANN corpus: 25 noisy copies per base vector
-    (hash-deterministic +-jitter; 0.05 -> theta ~ 19deg clusters, the
-    LSH geometry; 0.02 -> ~8deg, tight enough for the IVF prune's
-    phase-1 bound to bite) — mirrored verbatim in the DuckDB oracles
-    (ann_lsh_auto, ann_index_persist)."""
-    copies = spark.range(25).select(F.col("id").cast("int").alias("copy"))
-    return emb.crossJoin(F.broadcast(copies)).select(
-        (F.col("vec_id") * 25 + (F.col("copy") * 7) % 25).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x
-            + F.lit(jitter)
-            * (
-                F.pmod(
-                    F.xxhash64(F.col("vec_id"), F.col("copy"), i),
-                    F.lit(2048),
-                )
-                / F.lit(1024.0)
-                - F.lit(1.0)
-            ),
-        ).alias("embedding"),
-    )
+    return _ann_audit(dense, q, derived, required={"nprobe_auto_required": fixed})
 
 
 _ANN_LSH_AUTO_ORACLE = """
@@ -2524,8 +2480,7 @@ def q_ann_lsh_auto(spark, sf_dir):
     (counts are construction-invariant) and recomputes the exact
     neighbor-set counts."""
     emb = _t(spark, sf_dir, "embeddings")
-    dense = _dense_corpus_25(spark, emb)
-    q = dense.filter(((F.col("vec_id") % 25) == 0) & (F.col("vec_id") < 500))
+    dense, q = _dense_corpus(spark, emb, 25, 7, 0.05)
     # Coverage law (tools/lsh_scale_probe.py): each query must see
     # >= k cluster siblings in the sample, so the required rate is
     # safety*k/cluster_size = 2*10/25 = 0.8 of the corpus — at this
@@ -2551,33 +2506,29 @@ def q_ann_lsh_auto(spark, sf_dir):
         base_params = similarity.derive_lsh_params(
             emb, emb.filter(F.col("vec_id") < 20), k=10, floor=0.95
         )
-    exact = similarity.similarity_topk_bruteforce(dense, q, k=10)
     derived, dstats = similarity.similarity_topk_lsh_auto(
         dense, q, k=10, with_stats=True, params=params
     )
     fixed, fstats = similarity.similarity_topk_lsh(
         dense, q, k=10, n_planes=3, n_tables=24, with_stats=True
     )
-    floor_row = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), derived, floor=0.95
-    )
     cost_row = (
         dstats.agg(F.sum("candidates").alias("_d"))
         .crossJoin(F.broadcast(fstats.agg(F.sum("candidates").alias("_f"))))
         .select((F.col("_d") < F.col("_f")).alias("derived_cheaper"))
     )
-    out = floor_row.crossJoin(F.broadcast(cost_row)).select(
-        "n_queries",
-        "n_exact",
-        "recall_floor_met",
+    return _ann_audit(
+        dense,
+        q,
+        derived,
         F.lit(params["method"] == "lsh").alias("lsh_branch"),
-        "derived_cheaper",
+        cost_row,
         F.lit(
             similarity.lsh_scan_fraction(params["p_rand"], 3, 24) >= 1.0
         ).alias("fixed_scan_unsound"),
         F.lit(base_params["method"] == "brute").alias("base_refuses"),
+        keep=(fixed,),
     )
-    return carry_caches(out, exact, derived, fixed)
 
 
 _IVF_INDEX: dict[str, dict] = {}
@@ -2586,7 +2537,7 @@ _IVF_INDEX: dict[str, dict] = {}
 def _ivf_index_for(spark, sf_dir, emb):
     """Memoized build_ivf_index per sf_dir (the production shape: the
     index predates queries), with a LIVENESS guard (ADVICE r14):
-    unlike the _PQ_CODEBOOKS precedent this cache holds a persisted,
+    unlike the trained-artifact memo this cache holds a persisted,
     session-bound DataFrame, so a hit from a stopped or sibling
     SparkSession would serve a dead frame opaquely. Rebuild — and
     release the stale frame — whenever the cached corpus does not
@@ -2609,6 +2560,16 @@ def _ivf_index_for(spark, sf_dir, emb):
     idx = similarity.build_ivf_index(emb)
     _IVF_INDEX[sf_dir] = idx
     return idx
+
+
+def _rows_equal(a, b, name: str):
+    """One-row frame: `name` is TRUE when `a` and `b` hold the same
+    rows (exceptAll both ways, duplicates counted)."""
+    d1 = a.exceptAll(b).agg(F.count(F.lit(1)).alias("_a"))
+    d2 = b.exceptAll(a).agg(F.count(F.lit(1)).alias("_b"))
+    return d1.crossJoin(F.broadcast(d2)).select(
+        ((F.col("_a") == 0) & (F.col("_b") == 0)).alias(name)
+    )
 
 
 _ANN_INDEX_HANDOFF_ORACLE = _ANN_RECALL_ORACLE.replace(
@@ -2643,32 +2604,21 @@ def q_ann_index_handoff(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     idx = _ivf_index_for(spark, sf_dir, emb)
-    exact = similarity.similarity_topk_bruteforce(emb, q, k=10)
     inline = similarity.similarity_topk_ivf_auto(
         emb, q, k=10, centroids=idx["centers"]
     )
     prebuilt = similarity.similarity_topk_ivf_auto(emb, q, k=10, index=idx)
-    floor_row = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), prebuilt, floor=0.95
-    )
-    d1 = inline.exceptAll(prebuilt).agg(F.count(F.lit(1)).alias("_a"))
-    d2 = prebuilt.exceptAll(inline).agg(F.count(F.lit(1)).alias("_b"))
-    eq_row = d1.crossJoin(F.broadcast(d2)).select(
-        ((F.col("_a") == 0) & (F.col("_b") == 0)).alias(
-            "handoff_row_equal"
-        )
-    )
-    out = floor_row.crossJoin(F.broadcast(eq_row)).select(
-        "n_queries",
-        "n_exact",
-        "recall_floor_met",
-        "handoff_row_equal",
+    return _ann_audit(
+        emb,
+        q,
+        prebuilt,
+        _rows_equal(inline, prebuilt, "handoff_row_equal"),
         F.lit(
             len(idx["centers"])
             == similarity.derive_ivf_cells(emb.count())
         ).alias("derived_cells_ok"),
+        keep=(inline,),
     )
-    return carry_caches(out, exact, inline, prebuilt)
 
 
 _ANN_INDEX_PERSIST_ORACLE = """
@@ -2725,8 +2675,7 @@ def q_ann_index_persist(spark, sf_dir):
     written (cell count, row count). The oracle recomputes the exact
     neighbor counts on the mirrored construction in DuckDB."""
     emb = _t(spark, sf_dir, "embeddings")
-    dense = _dense_corpus_25(spark, emb, jitter=0.02)
-    q = dense.filter(((F.col("vec_id") % 25) == 0) & (F.col("vec_id") < 500))
+    dense, q = _dense_corpus(spark, emb, 25, 7, 0.02)
     # fixed 64 cells: the derived-cell default is ann_index_handoff's
     # certified property; here 64 keeps the KMeans build bounded while
     # leaving the prune room to show (clusters >> cells probed)
@@ -2734,22 +2683,13 @@ def q_ann_index_persist(spark, sf_dir):
     path = os.path.join(_work_dir("ivfidx"), "index")
     info = similarity.persist_ivf_index(idx, path)
     idx2 = similarity.load_ivf_index(spark, path)
-    exact = similarity.similarity_topk_bruteforce(dense, q, k=10)
     mem = similarity.similarity_topk_ivf_auto(dense, q, k=10, index=idx)
     disk = similarity.similarity_topk_ivf_auto(dense, q, k=10, index=idx2)
-    floor_row = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), disk, floor=0.95
-    )
-    d1 = mem.exceptAll(disk).agg(F.count(F.lit(1)).alias("_a"))
-    d2 = disk.exceptAll(mem).agg(F.count(F.lit(1)).alias("_b"))
-    eq_row = d1.crossJoin(F.broadcast(d2)).select(
-        ((F.col("_a") == 0) & (F.col("_b") == 0)).alias("reload_row_equal")
-    )
-    out = floor_row.crossJoin(F.broadcast(eq_row)).select(
-        "n_queries",
-        "n_exact",
-        "recall_floor_met",
-        "reload_row_equal",
+    out = _ann_audit(
+        dense,
+        q,
+        disk,
+        _rows_equal(mem, disk, "reload_row_equal"),
         F.lit(
             len(disk._ivf_probed_cells) < len(idx2["centers"])
         ).alias("scan_pruned"),
@@ -2758,10 +2698,9 @@ def q_ann_index_persist(spark, sf_dir):
             and info["n_rows"] == idx2["n_rows"]
             and len(idx2["radii"]) > 0
         ).alias("manifest_ok"),
+        keep=(mem,),
     )
-    return unpersist_on_gc(
-        carry_caches(out, exact, mem, disk), idx["corpus"]
-    )
+    return unpersist_on_gc(out, idx["corpus"])
 
 
 _ANN_FILTERED_ORACLE_SELECTIVE = """
@@ -2804,16 +2743,9 @@ def q_similarity_topk_filtered(spark, sf_dir):
     res = similarity.similarity_topk_filtered(
         emb, q, pred, k=10, method=strategy
     )
-    exact = similarity.similarity_topk_bruteforce(
-        emb.filter(pred), q, k=10
-    ).select("query_id", "neighbor_id")
-    out = _ann_recall_audit(exact, res, floor=0.95).select(
-        "n_queries",
-        "n_exact",
-        "recall_floor_met",
-        F.lit(strategy == "pre").alias("branch_pre"),
+    return _ann_audit(
+        emb.filter(pred), q, res, F.lit(strategy == "pre").alias("branch_pre")
     )
-    return carry_caches(out, res)
 
 
 _ANN_FILTERED_ORACLE_BROAD = """
@@ -2862,8 +2794,7 @@ def q_similarity_topk_filtered_broad(spark, sf_dir):
     config (not the refusal path). The oracle recomputes the exact
     under-predicate counts on the mirrored construction in DuckDB."""
     emb = _t(spark, sf_dir, "embeddings")
-    dense = _dense_corpus_25(spark, emb)
-    q = dense.filter(((F.col("vec_id") % 25) == 0) & (F.col("vec_id") < 500))
+    dense, q = _dense_corpus(spark, emb, 25, 7, 0.05)
     pred = F.col("vec_id") % 8 != 0
     # production shape: derive once at index build (corpus-as-sample,
     # the ann_lsh_auto coverage law), store, pass back per query batch
@@ -2880,17 +2811,13 @@ def q_similarity_topk_filtered_broad(spark, sf_dir):
         dense, q, pred, k=10, method=strategy, selectivity=s,
         lsh_params=params,
     )
-    exact = similarity.similarity_topk_bruteforce(
-        dense.filter(pred), q, k=10
-    ).select("query_id", "neighbor_id")
-    out = _ann_recall_audit(exact, res, floor=0.95).select(
-        "n_queries",
-        "n_exact",
-        "recall_floor_met",
+    return _ann_audit(
+        dense.filter(pred),
+        q,
+        res,
         F.lit(strategy == "post").alias("branch_post"),
         F.lit(params["method"] == "lsh").alias("derived_leg"),
     )
-    return carry_caches(out, res)
 
 
 @_q(
@@ -2939,11 +2866,7 @@ def q_incremental_ann_index(spark, sf_dir):
     base = with_thr.filter(F.col("vec_id") <= F.col("thr")).drop("thr")
     batch = with_thr.filter(F.col("vec_id") > F.col("thr")).drop("thr")
     key = (sf_dir, "incremental_base")
-    if key not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[key] = similarity.train_ivf_centroids(base)
-    if key not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[key] = similarity.train_pq_codebooks(base)
-    centers, cb = _IVF_CENTROIDS[key], _PQ_CODEBOOKS[key]
+    centers, cb = _trained("ivf", key, base), _trained("pq", key, base)
 
     # The audit fans out over the assignment subtrees (counts,
     # mismatch join, drift) — persist them once or every branch
@@ -3021,7 +2944,7 @@ def q_ann_index_retrain(spark, sf_dir):
     and the response — re-deriving the IVF centroids + PQ codebooks
     on the updated corpus and rebuilding — passes the SAME
     recall-floor audit every serving entry carries
-    (_ann_recall_audit, floor 0.95; measured 1.0 at sf0.01). The
+    (_ann_audit, floor 0.95; measured 1.0 at sf0.01). The
     oracle recomputes the post-retrain ground-truth neighbor set over
     the shifted union independently (base kept verbatim, batch
     shifted with the identical affine map) and pins both verdicts:
@@ -3043,42 +2966,30 @@ def q_ann_index_retrain(spark, sf_dir):
         ).alias("embedding"),
     )
     key = (sf_dir, "incremental_base")
-    if key not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[key] = similarity.train_ivf_centroids(base)
-    if key not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[key] = similarity.train_pq_codebooks(base)
+    centers, cb = _trained("ivf", key, base), _trained("pq", key, base)
 
     # the gate: shifted batch assigned against the FROZEN artifacts
     drift = similarity.ann_index_drift(
-        similarity.ann_index_assign(base, _IVF_CENTROIDS[key], _PQ_CODEBOOKS[key]),
-        similarity.ann_index_assign(batch, _IVF_CENTROIDS[key], _PQ_CODEBOOKS[key]),
+        similarity.ann_index_assign(base, centers, cb),
+        similarity.ann_index_assign(batch, centers, cb),
     ).select("drift_tripped")
 
     # the response: offline re-derive on the updated corpus (memoized
     # like every other index artifact), then the standard audit
     union = base.unionByName(batch)
     rkey = (sf_dir, "retrain")
-    if rkey not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[rkey] = similarity.train_ivf_centroids(union)
-    if rkey not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[rkey] = similarity.train_pq_codebooks(union)
     q = union.filter(F.col("vec_id") < 20)
-    exact = similarity.similarity_topk_bruteforce(union, q, k=10)
     approx = similarity.similarity_topk_ivfpq(
         union,
         q,
         k=10,
         nprobe=12,
-        centroids=_IVF_CENTROIDS[rkey],
-        codebooks=_PQ_CODEBOOKS[rkey],
+        centroids=_trained("ivf", rkey, union),
+        codebooks=_trained("pq", rkey, union),
     )
-    audit = _ann_recall_audit(
-        exact.select("query_id", "neighbor_id"), approx, floor=0.95
-    )
-    out = audit.crossJoin(F.broadcast(drift)).select(
-        "n_queries", "n_exact", "drift_tripped", "recall_floor_met"
-    )
-    return carry_caches(out, exact, approx)
+    audit = _ann_audit(union, q, approx, drift)
+    out = audit.select("n_queries", "n_exact", "drift_tripped", "recall_floor_met")
+    return carry_caches(out, audit)
 
 
 @_q(
@@ -3471,6 +3382,17 @@ def q_sessionize(spark, sf_dir):
     return sessionize.sessionize(_t(spark, sf_dir, "events"))
 
 
+def _table_stream(spark, sf_dir, table: str, transform, output_mode="complete"):
+    """Run `transform` as real Structured Streaming (AvailableNow) over
+    one test table's parquet file — the identical plan a continuous
+    deployment runs — and return its final result as a batch frame
+    (streaming/windows.py:run_stream_to_batch)."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    return run_stream_to_batch(
+        spark, path, transform, raw_parquet_schema(spark, path), output_mode
+    )
+
+
 @_q(
     "stream_tumbling",
     f"""
@@ -3484,17 +3406,8 @@ def q_sessionize(spark, sf_dir):
 )
 def q_stream_tumbling(spark, sf_dir):
     """Tumbling window counts as real Structured Streaming over the events table, AvailableNow, stream == batch (streaming/windows.py:tumbling_counts)."""
-    # Execute genuinely under Structured Streaming (AvailableNow) —
-    # identical plan to a continuous deployment; see streaming/windows.py.
-    raw_schema = raw_parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
-
-    def transform(stream):
-        from elb_log_to_mysql_spark.streaming.windows import ensure_event_time
-
-        return tumbling_counts(ensure_event_time(stream))
-
-    return run_stream_to_batch(
-        spark, os.path.join(sf_dir, "events.parquet"), transform, raw_schema
+    return _table_stream(
+        spark, sf_dir, "events", lambda s: tumbling_counts(ensure_event_time(s))
     )
 
 
@@ -3535,15 +3448,11 @@ def q_stream_static_join(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("user_id", F.col("event_type").alias("channel"))
     )
-    raw_schema = raw_parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
-
-    def transform(stream):
-        from elb_log_to_mysql_spark.streaming.windows import ensure_event_time
-
-        return stream_static_enrich(ensure_event_time(stream), profile)
-
-    return run_stream_to_batch(
-        spark, os.path.join(sf_dir, "events.parquet"), transform, raw_schema
+    return _table_stream(
+        spark,
+        sf_dir,
+        "events",
+        lambda s: stream_static_enrich(ensure_event_time(s), profile),
     )
 
 
@@ -3567,15 +3476,8 @@ def q_stream_sliding(spark, sf_dir):
     """Sliding (hopping) window counts as real Structured Streaming, AvailableNow, watermark-bounded state (streaming/windows.py:sliding_counts)."""
     from elb_log_to_mysql_spark.streaming.windows import sliding_counts
 
-    raw_schema = raw_parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
-
-    def transform(stream):
-        from elb_log_to_mysql_spark.streaming.windows import ensure_event_time
-
-        return sliding_counts(ensure_event_time(stream))
-
-    return run_stream_to_batch(
-        spark, os.path.join(sf_dir, "events.parquet"), transform, raw_schema
+    return _table_stream(
+        spark, sf_dir, "events", lambda s: sliding_counts(ensure_event_time(s))
     )
 
 
@@ -3634,21 +3536,13 @@ def q_stream_stateful(spark, sf_dir):
     oracle (integer cents/µs state makes it order-independent)."""
     from elb_log_to_mysql_spark.streaming.stateful import user_profile_stream
 
-    raw_schema = raw_parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
-
-    def transform(stream):
-        from elb_log_to_mysql_spark.streaming.windows import event_time_micros
-
-        prepared = stream.select(
-            "user_id", "event_id", event_time_micros(stream), "value"
-        )
-        return user_profile_stream(prepared)
-
-    updates = run_stream_to_batch(
+    updates = _table_stream(
         spark,
-        os.path.join(sf_dir, "events.parquet"),
-        transform,
-        raw_schema,
+        sf_dir,
+        "events",
+        lambda s: user_profile_stream(
+            s.select("user_id", "event_id", event_time_micros(s), "value")
+        ),
         output_mode="update",
     )
     # update mode emits one row per (user, micro-batch); the final
@@ -3771,23 +3665,13 @@ def q_stream_stream_join(spark, sf_dir):
         stream_stream_click_purchase_join,
     )
 
-    raw_schema = raw_parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
-
     def transform(stream):
-        from elb_log_to_mysql_spark.streaming.windows import ensure_event_time
-
         ev = ensure_event_time(stream)
         clicks = ev.filter(F.col("event_type") == "click")
         purchases = ev.filter(F.col("event_type") == "purchase")
         return stream_stream_click_purchase_join(clicks, purchases)
 
-    return run_stream_to_batch(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        transform,
-        raw_schema,
-        output_mode="append",
-    )
+    return _table_stream(spark, sf_dir, "events", transform, output_mode="append")
 
 
 @_q(
@@ -3803,13 +3687,8 @@ def q_stream_dedup(spark, sf_dir):
     the batch DISTINCT (state keyed on fingerprint)."""
     from elb_log_to_mysql_spark.streaming.windows import stream_exact_dedup
 
-    raw_schema = raw_parquet_schema(spark, os.path.join(sf_dir, "documents.parquet"))
-    return run_stream_to_batch(
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-        lambda s: stream_exact_dedup(s),
-        raw_schema,
-        output_mode="append",
+    return _table_stream(
+        spark, sf_dir, "documents", stream_exact_dedup, output_mode="append"
     )
 
 
@@ -3860,6 +3739,35 @@ def q_multimodal_decode(spark, sf_dir):
     return multimodal.decode_media(media)
 
 
+def _media_fixture(spark, sf_dir, kind: str, n: int, cols, ext: str, make_payload):
+    """The media entries' fixture: the first `n` documents (doc_id +
+    `cols`) written as one `doc_<id>.<ext>` file each, payload
+    `make_payload(row)`, into a fresh `_work_dir(kind)`, then read back
+    through the binaryFile source (sources/formats.py:read_media_dir)
+    as (doc_id, payload) with the id recovered from the file name. The
+    driver-side write is the test harness, not the operator: at scale
+    the media dir already exists."""
+    from elb_log_to_mysql_spark.sources.formats import read_media_dir
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id", *cols)
+        .orderBy("doc_id")
+        .limit(n)
+        .collect()
+    )
+    out_dir = _work_dir(kind)
+    for r in docs:
+        with open(os.path.join(out_dir, f"doc_{r.doc_id}.{ext}"), "wb") as fh:
+            fh.write(make_payload(r))
+    return read_media_dir(spark, out_dir, glob=f"*.{ext}").select(
+        F.regexp_extract(F.col("path"), rf"doc_(\d+)\.{ext}", 1)
+        .cast("long")
+        .alias("doc_id"),
+        F.col("content").alias("payload"),
+    )
+
+
 @_q(
     "media_dir_meta",
     """
@@ -3879,20 +3787,10 @@ def q_media_dir_meta(spark, sf_dir):
     bytes survived the write→list→scan round trip intact. The 64-row
     driver-side materialization is the test harness, not the operator:
     at scale the media dir already exists."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit(64)
-        .collect()
+    media = _media_fixture(
+        spark, sf_dir, "media", 64, ["text"], "bin",
+        lambda r: r.text.encode("utf-8"),
     )
-    out_dir = _work_dir("media")
-    for r in docs:
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.bin"), "wb") as fh:
-            fh.write(r.text.encode("utf-8"))
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    media = read_media_dir(spark, out_dir, glob="*.bin")
     return multimodal.media_metadata(media)
 
 
@@ -3930,34 +3828,19 @@ def q_multimodal_decode_real(spark, sf_dir):
     baseline codec, operators/jpegcodec.py). This entry upgrades the
     family's evidence from replayed-stub to real-bytes for the
     formats the sandbox can decode."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .orderBy("doc_id")
-        .limit(32)
-        .collect()
-    )
-    out_dir = _work_dir("media-real")
-    for r in docs:
+    def payload(r):
         if r.doc_id % 2 == 0:
-            payload = multimodal.make_wav_bytes(
+            return multimodal.make_wav_bytes(
                 sample_rate=8000 + (r.doc_id % 4) * 2000,
                 n_channels=1 + (r.doc_id // 2) % 2,
                 n_frames=100 + (r.n_chars % 100),
             )
-        else:
-            payload = multimodal.make_bmp_bytes(
-                width=16 + r.doc_id % 16, height=8 + r.doc_id % 8
-            )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.bin"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.bin").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
+        return multimodal.make_bmp_bytes(
+            width=16 + r.doc_id % 16, height=8 + r.doc_id % 8
+        )
+
+    media = _media_fixture(
+        spark, sf_dir, "media-real", 32, ["n_chars"], "bin", payload
     )
     return multimodal.decode_media_real(media)
 
@@ -3981,30 +3864,14 @@ def q_multimodal_audio_real(spark, sf_dir):
     byte order produces different statistics and hash-mismatches —
     this checks the payload bytes, where multimodal_decode_real checks
     the headers."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(32)
-        .collect()
-    )
-    out_dir = _work_dir("media-audio")
-    for r in docs:
-        payload = multimodal.make_wav_bytes(
+    media = _media_fixture(
+        spark, sf_dir, "media-audio", 32, [], "bin",
+        lambda r: multimodal.make_wav_bytes(
             sample_rate=16000,
             n_channels=1 + r.doc_id % 2,
             n_frames=50 + r.doc_id % 50,
             amplitude=r.doc_id % 100,
-        )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.bin"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.bin").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
+        ),
     )
     return multimodal.audio_features_real(media)
 
@@ -4040,29 +3907,13 @@ def q_multimodal_resize_real(spark, sf_dir):
     header + 4-byte-padded rows), and the operator re-decodes its own
     output in-plan — so wrong pixel geometry, wrong padding, or an
     unparseable output all hash-mismatch."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(32)
-        .collect()
-    )
-    out_dir = _work_dir("media-resize")
-    for r in docs:
-        payload = multimodal.make_bmp_bytes(
+    media = _media_fixture(
+        spark, sf_dir, "media-resize", 32, [], "bin",
+        lambda r: multimodal.make_bmp_bytes(
             width=16 + r.doc_id % 16,
             height=8 + r.doc_id % 8,
             fill=r.doc_id % 256,
-        )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.bin"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.bin").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
+        ),
     )
     return multimodal.resize_images_real(media, max_side=16)
 
@@ -5941,45 +5792,48 @@ def q_multimodal_png_real(spark, sf_dir):
     hash-mismatches. This closes the 'compressed formats need external
     codecs' gap for the one compressed format whose codec ships in the
     standard library."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(32)
-        .collect()
-    )
-    out_dir = _work_dir("media-png")
-    for r in docs:
-        payload = multimodal.make_png_bytes(
+    media = _media_fixture(
+        spark, sf_dir, "media-png", 32, [], "png",
+        lambda r: multimodal.make_png_bytes(
             width=16 + r.doc_id % 16,
             height=8 + r.doc_id % 8,
             row_base=r.doc_id,
-        )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.png"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.png").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.png", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
+        ),
     )
     return multimodal.decode_png_media(media)
 
 
-@_q(
-    "multimodal_jpeg_real",
-    """
+def _jpeg_oracle(n: int) -> str:
+    """The JPEG entries' shared oracle over the first `n` documents:
+    block i of doc d decodes to exactly 2*(d%100 + i), so each mean
+    replays from the generation parameters alone."""
+    return f"""
     SELECT doc_id,
            CAST(8 * (2 + doc_id % 3) AS INTEGER) AS width,
            CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height,
            ROUND(CAST(2 * (doc_id % 100)
                       + ((2 + doc_id % 3) * (1 + doc_id % 2) - 1)
                       AS DOUBLE), 6) AS mean_pixel
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 32)
-    """,
-)
+    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n})
+    """
+
+
+def _jpeg_decode(spark, sf_dir, kind: str, n: int, make_jpeg):
+    """The JPEG entries' shared body: `make_jpeg` fixtures (widths
+    16/24/32, heights 8/16, block base doc_id % 100) decoded by the
+    vendored codec."""
+    media = _media_fixture(
+        spark, sf_dir, kind, n, [], "jpg",
+        lambda r: make_jpeg(
+            width=8 * (2 + r.doc_id % 3),
+            height=8 * (1 + r.doc_id % 2),
+            block_base=r.doc_id % 100,
+        ),
+    )
+    return multimodal.decode_jpeg_media_vendored(media)
+
+
+@_q("multimodal_jpeg_real", _jpeg_oracle(32))
 def q_multimodal_jpeg_real(spark, sf_dir):
     """REAL JPEG decode e2e with the VENDORED baseline codec
     (operators/jpegcodec.py — public T.81 spec: Huffman entropy
@@ -5998,45 +5852,10 @@ def q_multimodal_jpeg_real(spark, sf_dir):
     off-by-one, dequant slip, or IDCT scale error shifts the mean
     and hash-mismatches. Same mapInPandas plumbing/plan shape as
     multimodal_png_real (scan -> project, no shuffle)."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(32)
-        .collect()
-    )
-    out_dir = _work_dir("media-jpeg")
-    for r in docs:
-        payload = multimodal.make_baseline_jpeg_bytes(
-            width=8 * (2 + r.doc_id % 3),
-            height=8 * (1 + r.doc_id % 2),
-            block_base=r.doc_id % 100,
-        )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.jpg"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.jpg").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.jpg", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
-    )
-    return multimodal.decode_jpeg_media_vendored(media)
+    return _jpeg_decode(spark, sf_dir, "media-jpeg", 32, multimodal.make_baseline_jpeg_bytes)
 
 
-@_q(
-    "multimodal_jpeg_color",
-    """
-    SELECT doc_id,
-           CAST(8 * (2 + doc_id % 3) AS INTEGER) AS width,
-           CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height,
-           ROUND(CAST(2 * (doc_id % 100)
-                      + ((2 + doc_id % 3) * (1 + doc_id % 2) - 1)
-                      AS DOUBLE), 6) AS mean_pixel
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 24)
-    """,
-)
+@_q("multimodal_jpeg_color", _jpeg_oracle(24))
 def q_multimodal_jpeg_color(spark, sf_dir):
     """COLOR JPEG decode e2e: 3-component 4:4:4 interleaved MCUs —
     per block, THREE entropy-coded units with independent DC
@@ -6047,45 +5866,10 @@ def q_multimodal_jpeg_color(spark, sf_dir):
     formula and the oracle replays it from generation parameters —
     certifying the color path in the driver gate rather than only in
     unit tests (which cover the inexact general-color cases)."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(24)
-        .collect()
-    )
-    out_dir = _work_dir("media-jpeg-color")
-    for r in docs:
-        payload = multimodal.make_baseline_jpeg_color_bytes(
-            width=8 * (2 + r.doc_id % 3),
-            height=8 * (1 + r.doc_id % 2),
-            block_base=r.doc_id % 100,
-        )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.jpg"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.jpg").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.jpg", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
-    )
-    return multimodal.decode_jpeg_media_vendored(media)
+    return _jpeg_decode(spark, sf_dir, "media-jpeg-color", 24, multimodal.make_baseline_jpeg_color_bytes)
 
 
-@_q(
-    "multimodal_jpeg_420",
-    """
-    SELECT doc_id,
-           CAST(8 * (2 + doc_id % 3) AS INTEGER) AS width,
-           CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height,
-           ROUND(CAST(2 * (doc_id % 100)
-                      + ((2 + doc_id % 3) * (1 + doc_id % 2) - 1)
-                      AS DOUBLE), 6) AS mean_pixel
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 24)
-    """,
-)
+@_q("multimodal_jpeg_420", _jpeg_oracle(24))
 def q_multimodal_jpeg_420(spark, sf_dir):
     """4:2:0 chroma-subsampled JPEG decode e2e — the DOMINANT wild
     JPEG layout (VERDICT r8 item 1): interleaved 16x16-pixel MCUs of
@@ -6101,45 +5885,10 @@ def q_multimodal_jpeg_420(spark, sf_dir):
     predictor routing, or upsample alignment shifts the mean and
     hash-mismatches. Same mapInPandas plumbing as the other media
     entries (scan -> project, no shuffle)."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(24)
-        .collect()
-    )
-    out_dir = _work_dir("media-jpeg-420")
-    for r in docs:
-        payload = multimodal.make_baseline_jpeg_420_bytes(
-            width=8 * (2 + r.doc_id % 3),
-            height=8 * (1 + r.doc_id % 2),
-            block_base=r.doc_id % 100,
-        )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.jpg"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.jpg").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.jpg", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
-    )
-    return multimodal.decode_jpeg_media_vendored(media)
+    return _jpeg_decode(spark, sf_dir, "media-jpeg-420", 24, multimodal.make_baseline_jpeg_420_bytes)
 
 
-@_q(
-    "multimodal_jpeg_progressive",
-    """
-    SELECT doc_id,
-           CAST(8 * (2 + doc_id % 3) AS INTEGER) AS width,
-           CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height,
-           ROUND(CAST(2 * (doc_id % 100)
-                      + ((2 + doc_id % 3) * (1 + doc_id % 2) - 1)
-                      AS DOUBLE), 6) AS mean_pixel
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 24)
-    """,
-)
+@_q("multimodal_jpeg_progressive", _jpeg_oracle(24))
 def q_multimodal_jpeg_progressive(spark, sf_dir):
     """PROGRESSIVE (SOF2) JPEG decode e2e — the other dominant wild
     JPEG variant (VERDICT r8 'what's missing' item 1 second half):
@@ -6158,31 +5907,7 @@ def q_multimodal_jpeg_progressive(spark, sf_dir):
     progressive ≡ baseline on random full-AC images (every entropy
     branch). Same mapInPandas plumbing (scan -> project, no
     shuffle)."""
-    from elb_log_to_mysql_spark.sources.formats import read_media_dir
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(24)
-        .collect()
-    )
-    out_dir = _work_dir("media-jpeg-prog")
-    for r in docs:
-        payload = multimodal.make_progressive_jpeg_bytes(
-            width=8 * (2 + r.doc_id % 3),
-            height=8 * (1 + r.doc_id % 2),
-            block_base=r.doc_id % 100,
-        )
-        with open(os.path.join(out_dir, f"doc_{r.doc_id}.jpg"), "wb") as fh:
-            fh.write(payload)
-    media = read_media_dir(spark, out_dir, glob="*.jpg").select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.jpg", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
-    )
-    return multimodal.decode_jpeg_media_vendored(media)
+    return _jpeg_decode(spark, sf_dir, "media-jpeg-prog", 24, multimodal.make_progressive_jpeg_bytes)
 
 
 @_q(
@@ -6461,23 +6186,13 @@ def q_stream_funnel(spark, sf_dir):
     from elb_log_to_mysql_spark.streaming.stateful import funnel_stream
 
     steps = ["view", "click", "purchase"]
-    raw_schema = raw_parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
-
     def transform(stream):
-        from elb_log_to_mysql_spark.streaming.windows import event_time_micros
-
         prepared = stream.filter(F.col("event_type").isin(steps)).select(
             "user_id", "event_id", event_time_micros(stream), "event_type"
         )
         return funnel_stream(prepared, steps)
 
-    updates = run_stream_to_batch(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        transform,
-        raw_schema,
-        output_mode="update",
-    )
+    updates = _table_stream(spark, sf_dir, "events", transform, output_mode="update")
     per_user = updates.groupBy("user_id").agg(F.max("stage").alias("max_stage"))
     counts = per_user.agg(
         *[
@@ -8228,13 +7943,11 @@ def q_stream_cdc_apply(spark, sf_dir):
         stream_cdc_apply,
     )
 
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = raw_parquet_schema(spark, path)
-    emissions = run_stream_to_batch(
+    emissions = _table_stream(
         spark,
-        path,
+        sf_dir,
+        "events",
         lambda s: stream_cdc_apply(s, "2024-01-20"),
-        schema,
         output_mode="update",
     )
     return latest_cdc_rows(emissions)

@@ -72,6 +72,20 @@ ROCKSDB_TUNING = (
     ("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false"),
 )
 
+# The engine's runtime SQL confs, set by build_session and by
+# tune_session on a caller's session: deterministic UTC rendering,
+# permissive casts, adaptive execution, the streaming state store.
+ENGINE_CONF = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.ansi.enabled", "false"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    # picked up per streaming query at start; see ROCKSDB_STATE_STORE
+    ("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE),
+    *ROCKSDB_TUNING,
+)
+
 
 def host_cpus() -> int:
     """Cores this process may run on: the default local[N] width."""
@@ -91,11 +105,6 @@ def build_session(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -105,11 +114,8 @@ def build_session(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE)
     )
-    for k, v in ROCKSDB_TUNING:
-        builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in (*ENGINE_CONF, *(extra_conf or {}).items()):
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -226,16 +232,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     runtime-settable and define the engine's semantic contract
     (deterministic UTC rendering, permissive casts, adaptive exec).
     """
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.ansi.enabled", "false"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        # picked up per streaming query at start; see ROCKSDB_STATE_STORE
-        ("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE),
-        *ROCKSDB_TUNING,
-    ):
+    for k, v in ENGINE_CONF:
         try:
             spark.conf.set(k, v)
         except Exception:  # conf locked down by caller — plans still valid

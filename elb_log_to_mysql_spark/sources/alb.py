@@ -26,7 +26,8 @@ declarative column-expression chain:
 - P12: UA families. ``parse_alb_lines`` defaults to the regex-ladder
   expressions (or the exact-parity per-row stage when ``user_agents``
   is available); the file ingests (``read_alb_logs`` and the stream
-  ingest) classify the distinct agents and broadcast-join them back.
+  ingest) parse once into a cache, classify its distinct agents and
+  broadcast-join them back (``parse_and_classify``).
 - P16: lineage column via ``input_file_name()``.
 
 Every stage is lazy; Catalyst prunes the discarded token columns, so
@@ -48,6 +49,7 @@ from elb_log_to_mysql_spark.functions.ua import (
     ua_os_family_expr,
 )
 from elb_log_to_mysql_spark.schema import ALB_TOKEN_DDL, ELB_LOG_COLUMNS
+from elb_log_to_mysql_spark.session import unpersist_on_gc
 
 # Reference timestamp formats (etl:73): with/without fractional seconds.
 _TS_FRAC = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX"
@@ -90,8 +92,8 @@ def parse_alb_lines(
     plan for small in-memory inputs and for queries that never read
     the UA columns (they prune it). "defer" emits NULL family columns
     and leaves classification to the caller (classify_ua_join on the
-    returned frame): the shape of both file ingests, read_alb_logs and
-    streaming/ingest.py, where agents repeat across many rows.
+    returned frame): the shape of parse_and_classify, which both file
+    ingests use, since agents repeat across many rows.
     """
     if ua_strategy not in ("expr", "defer"):
         raise ValueError(
@@ -218,8 +220,8 @@ def parse_alb_lines(
         # back would add a full shuffle of the wide frame on a
         # synthetic row key (streaming needs stateful ids); callers
         # whose agents repeat take the distinct-agent join instead
-        # (ua_strategy="defer" + classify_ua_join, as read_alb_logs
-        # does).
+        # (ua_strategy="defer" + classify_ua_join, as
+        # parse_and_classify does).
         out = classify_ua_rows(
             out.drop("ua_browser_family", "ua_os_family"),
             "user_agent_full",
@@ -229,25 +231,30 @@ def parse_alb_lines(
     return out
 
 
-def read_alb_logs(
-    spark: SparkSession, paths: str | list[str], exact_ua: bool | None = None
-) -> DataFrame:
+def parse_and_classify(lines: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The file ingests' one parse shape: the deferred parse of
+    `lines`, persisted, with UA families from the distinct-agent
+    broadcast join (functions/ua.py:classify_ua_join) over it. Agent
+    strings repeat across the rows of a log bucket, so the uap walk
+    runs once per distinct agent instead of once per row; the persist
+    keeps the lookup side and the row side from parsing the input
+    twice. Returns (rows, parse cache); the caller releases the cache
+    once `rows` is consumed."""
+    parsed = parse_alb_lines(lines, ua_strategy="defer").persist()
+    return classify_ua_join(parsed, prefer_wrapper=HAVE_USER_AGENTS), parsed
+
+
+def read_alb_logs(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """S1+S2: read gzip'd ALB logs (local path, glob, or s3a:// URI).
 
     ``spark.read.text`` handles listing (paginated), decompression and
     the multi-file union; works identically for ``s3a://bucket/prefix/*.gz``
     given hadoop-aws on the classpath.
 
-    UA families come from the distinct-agent broadcast join
-    (functions/ua.py:classify_ua_join), the same classification the
-    stream ingest runs per micro-batch: agent strings repeat across
-    the rows of a log bucket, so the uap walk runs once per distinct
-    agent instead of once per row.
+    Parsed and classified by `parse_and_classify`, as the stream ingest
+    does per micro-batch; the parse cache lives until the returned
+    frame is garbage-collected.
     """
-    if exact_ua is None:
-        exact_ua = HAVE_USER_AGENTS
     lines = spark.read.text(paths if isinstance(paths, list) else [paths])
-    return classify_ua_join(
-        parse_alb_lines(lines, exact_ua=exact_ua, ua_strategy="defer"),
-        prefer_wrapper=exact_ua,
-    )
+    rows, parsed = parse_and_classify(lines)
+    return unpersist_on_gc(rows, parsed)

@@ -26,9 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from elb_log_to_mysql_spark.functions.ua import HAVE_USER_AGENTS, classify_ua_join
 from elb_log_to_mysql_spark.sinks.jdbc import write_jdbc_idempotent
-from elb_log_to_mysql_spark.sources.alb import parse_alb_lines
+from elb_log_to_mysql_spark.sources.alb import parse_and_classify
 
 
 def stream_alb_to_jdbc(
@@ -53,25 +52,21 @@ def stream_alb_to_jdbc(
 
     # The parse chain runs INSIDE foreachBatch (input_file_name()
     # still resolves there — the micro-batch is a plain file-source
-    # DataFrame), parsed ONCE into a persisted frame: the idempotent
-    # sink makes two passes (lineage-key distinct + write) and UA
-    # classification makes two more (distinct agents + join), so an
+    # DataFrame), parsed ONCE into a persisted frame by
+    # parse_and_classify, the batch read_alb_logs shape: the
+    # idempotent sink makes two passes (lineage-key distinct + write)
+    # and UA classification two more (distinct agents + join), so an
     # unpersisted plan would re-run from_csv 3-4x per batch (visible
-    # as 2-3x numInputRows in streaming progress). Classification
-    # takes the dimension-join strategy off the persisted frame: the
-    # ~300-regex uap walk runs once per DISTINCT agent per batch
-    # instead of per row, and the micro-batch plan carries a
-    # broadcast join instead of a ~600-arm CASE that Catalyst
-    # re-analyzes every trigger. It is the classification batch
-    # read_alb_logs runs, over the same 13 columns.
+    # as 2-3x numInputRows in streaming progress). The distinct-agent
+    # join runs the ~300-regex uap walk once per DISTINCT agent per
+    # batch, and the micro-batch plan carries a broadcast join instead
+    # of a ~600-arm CASE that Catalyst re-analyzes every trigger. The
+    # parse cache is released per micro-batch.
     def sink(batch_df, _batch_id: int) -> None:
-        parsed = parse_alb_lines(batch_df, ua_strategy="defer").persist()
+        rows, parsed = parse_and_classify(batch_df)
         try:
             write_jdbc_idempotent(
-                # prefer_wrapper tracks read_alb_logs: when the
-                # user_agents wrapper is installed, streamed family
-                # names must match batch output exactly.
-                classify_ua_join(parsed, prefer_wrapper=HAVE_USER_AGENTS),
+                rows,
                 url,
                 table=table,
                 driver=driver,

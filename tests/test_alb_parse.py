@@ -416,11 +416,25 @@ def test_ua_strategy_rejects_removed_values(spark):
             parse_alb_lines(df, ua_strategy=removed)
 
 
+def _local_bytes_read(spark) -> int:
+    """Bytes read through Hadoop's local filesystem so far, over every
+    task of this (local-mode) JVM."""
+    return sum(
+        st.getBytesRead()
+        for st in spark._jvm.org.apache.hadoop.fs.FileSystem.getAllStatistics()
+        if st.getScheme() == "file"
+    )
+
+
 def test_read_alb_logs_plan_shape(spark, tmp_path):
     """Batch read_alb_logs classifies like the stream ingest: the
     families arrive via a broadcast join against the distinct-agent
     lookup (one Python eval, over the distinct agents) and the
-    ~600-arm rlike ladder is absent from the plan."""
+    ~600-arm rlike ladder is absent from the plan. The gzip files are
+    read once: the lookup and the rows share one persisted parse,
+    which a second action reuses, and dropping the result releases
+    it."""
+    import gc
     import gzip
 
     from elb_log_to_mysql_spark.sources.alb import read_alb_logs
@@ -428,10 +442,23 @@ def test_read_alb_logs_plan_shape(spark, tmp_path):
     for f in range(2):
         with gzip.open(tmp_path / f"f{f}.log.gz", "wt") as fh:
             fh.write((GOLDEN + "\n") * 3)
+    size = sum(p.stat().st_size for p in tmp_path.glob("*.log.gz"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.cachedData().size()
+
     out = read_alb_logs(spark, str(tmp_path / "*.log.gz"))
+    read_before = _local_bytes_read(spark)
     rows = out.collect()
+    assert _local_bytes_read(spark) - read_before == size
+    assert len(out.collect()) == len(rows)
+    assert _local_bytes_read(spark) - read_before == size
     assert len(rows) == 6
     assert {(r.ua_browser_family, r.ua_os_family) for r in rows} == {
         ("Chrome", "Windows")
     }
     _assert_ua_join_plan(out)
+    assert cache.cachedData().size() == cached_before + 1
+
+    del out
+    gc.collect()
+    assert cache.cachedData().size() == cached_before

@@ -282,10 +282,10 @@ def test_ivf_disk_index_partition_pruned_scan(spark, sf_dir, tmp_path):
     E[probed]/C of the corpus and scanning all of it on every query
     batch after a restart."""
     from elb_log_to_mysql_spark.operators import similarity
-    from elb_log_to_mysql_spark.queries import _dense_corpus_25
+    from elb_log_to_mysql_spark.queries import _dense_corpus
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dense = _dense_corpus_25(spark, emb, jitter=0.02)
+    dense, _ = _dense_corpus(spark, emb, 25, 7, 0.02)
     q = dense.filter(((F.col("vec_id") % 25) == 0) & (F.col("vec_id") < 250))
     idx = similarity.build_ivf_index(dense, n_centroids=32)
     path = str(tmp_path / "ivf_index")

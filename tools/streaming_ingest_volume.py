@@ -39,11 +39,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from elb_log_to_mysql_spark.session import build_session  # noqa: E402
 from elb_log_to_mysql_spark.sinks.jdbc import write_jdbc_idempotent  # noqa: E402
-from elb_log_to_mysql_spark.functions.ua import (  # noqa: E402
-    HAVE_USER_AGENTS,
-    classify_ua_join,
-)
-from elb_log_to_mysql_spark.sources.alb import parse_alb_lines  # noqa: E402
+from elb_log_to_mysql_spark.sources.alb import parse_and_classify  # noqa: E402
 
 DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
 TABLE = "elb_log_data"
@@ -99,11 +95,10 @@ def drain(
     def sink(batch_df, _batch_id: int) -> None:
         if fail_after_batches is not None and committed["n"] >= fail_after_batches:
             raise RuntimeError("injected mid-stream failure")
-        parsed = parse_alb_lines(batch_df, ua_strategy="defer").persist()
+        rows, parsed = parse_and_classify(batch_df)
         try:
             write_jdbc_idempotent(
-                classify_ua_join(parsed, prefer_wrapper=HAVE_USER_AGENTS),
-                url, table=TABLE, driver=DERBY_DRIVER, num_partitions=4,
+                rows, url, table=TABLE, driver=DERBY_DRIVER, num_partitions=4
             )
         finally:
             parsed.unpersist()
