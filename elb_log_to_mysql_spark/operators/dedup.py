@@ -7,21 +7,29 @@ verification) are built-in column expressions + joins, staying in
 whole-stage codegen; the one dense-numeric kernel (the k-family
 MinHash signature) is an Arrow-vectorized numpy op
 (functions/vectorops.py) because Spark's higher-order array
-functions evaluate interpreted:
+functions evaluate interpreted.
 
-- shingling:   split + transform/sliding slice (arrays, JVM-side)
-- hashing:     xxhash64(shingle) — one 64-bit hash per shingle
-- minhash:     multiply-shift family over the hashed shingles, all k
-               at once per Arrow batch (one matmul-shaped op)
-- LSH banding: group signature into bands, hash each band, shuffle
-               once on (band_idx, band_hash); only same-bucket pairs
-               are compared — candidate generation is O(docs·bands),
+Every MinHash near-dedup operator — `near_dedup_minhash`, its
+two-phase variant, the prefix-filtered exact Jaccard and the
+streaming path (streaming/neardedup.py) — is built from ONE chain:
+
+- `shingle_sets`: distinct word SHINGLE_N-grams, one xxhash64 each
+               (array<long> per doc, shingle-less docs dropped)
+- `band_rows`:  multiply-shift MinHash over the hashed shingles (all
+               NUM_HASHES at once per Arrow batch), grouped into BANDS
+               band hashes, one (doc_id, band_idx, band_hash) row per
+               band; works on batch and streaming frames alike
+- `hot_buckets`: the over-full (band_idx, band_hash) buckets — the
+               skew guard; a degenerate bucket (many near-identical
+               docs) is the only quadratic danger at 100 TB
+- `band_pairs`: the band self-join — only same-bucket pairs are
+               compared, so candidate generation is O(docs·bands),
                never O(docs²)
-- verification: exact Jaccard on the candidate pairs only.
+- `verify_pairs`: exact Jaccard on the candidate pairs only.
 
-At 100 TB the only quadratic danger is a degenerate bucket (many
-near-identical docs); the band-bucket groupBy is AQE-skew-handled and
-a bucket-size cap (`max_bucket`) bounds the blow-up explicitly.
+The band config is the module constants SHINGLE_N, NUM_HASHES and
+BANDS: band keys are opaque hashes of it, so every operator (and a
+stored stream blocklist) must agree on it.
 """
 
 from __future__ import annotations
@@ -31,6 +39,15 @@ from pyspark.sql import functions as F
 
 from elb_log_to_mysql_spark.functions.vectorops import minhash_sig_rows
 from elb_log_to_mysql_spark.session import ensure_min_partitions, unpersist_on_gc
+
+
+# MinHash-LSH band config. 64 hashes in 16 bands (r=4 rows per band)
+# put the S-curve's 50% capture point near s=(1/b)^(1/r)≈0.5 — tuned
+# for the 0.6 default threshold.
+SHINGLE_N = 3
+NUM_HASHES = 64
+BANDS = 16
+_ROWS_PER_BAND = NUM_HASHES // BANDS
 
 
 # ---------------------------------------------------------------------------
@@ -130,26 +147,134 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
 
     return F.element_at(F.transform(F.array(_tokens(c)), _build), 1)
 
-def band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
+
+
+def band_hashes(sig: Column) -> Column:
     """LSH band hashes as an array<long> column: element i is
     xxhash64 of the signature slice [i*r, (i+1)*r) rendered as a
-    comma-joined string. Shared by the batch near-dedup join path and
-    the streaming stateful path so the two generate IDENTICAL bucket
-    keys — the property that makes stream-vs-batch candidate-set
-    equivalence testable."""
+    comma-joined string. Shared by every near-dedup operator, batch
+    and streaming, so they all generate IDENTICAL bucket keys — the
+    property that makes stream-vs-batch candidate-set equivalence
+    testable."""
     return F.array(
         *[
             F.xxhash64(
                 F.concat_ws(
                     ",",
                     *[
-                        sig[i * rows_per_band + j].cast("string")
-                        for j in range(rows_per_band)
+                        sig[i * _ROWS_PER_BAND + j].cast("string")
+                        for j in range(_ROWS_PER_BAND)
                     ],
                 )
             )
-            for i in range(bands)
+            for i in range(BANDS)
         ]
+    )
+
+
+def shingle_sets(
+    documents: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(doc_id, shingles[, carry...]): each document's distinct word
+    SHINGLE_N-grams as an array<long> of xxhash64 values, documents
+    without a shingle dropped. Works on batch and streaming frames.
+
+    Shingle hashes are the working representation of the whole chain:
+    signatures derive from them, and exact-Jaccard verification
+    intersects them — distinct xxhash64 values stand in for distinct
+    shingles (collision odds ~n²/2^64, negligible), and fixed-width
+    longs join/intersect far cheaper than long strings. `carry`
+    columns (e.g. an ingest timestamp for watermarking) pass through."""
+    return documents.select(
+        F.col(id_col).alias("doc_id"),
+        F.transform(
+            word_shingles(text_col, SHINGLE_N), lambda s: F.xxhash64(s)
+        ).alias("shingles"),
+        *carry,
+    ).filter(F.size("shingles") > 0)
+
+
+def band_rows(sh: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_hash[, carry...]) LSH band rows of a
+    `shingle_sets` frame — batch OR streaming (every node here is
+    streamable); any column besides doc_id and shingles is carried
+    onto every band row.
+
+    The signature is vectorops.minhash_sig_rows, the Arrow-vectorized
+    multiply-shift kernel as its own mapInPandas operator: the HOF
+    formulation (k × array_min(transform(...)) passes) is interpreted
+    per row and was the operator's dominant cost, and a separate
+    physical operator is structurally immune to the concurrent-
+    planning race where a shuffle-write projection received a raw
+    PythonUDF (THROUGHPUT_r11 known_flake). It also plans cleanly
+    upstream of a stateful stream join. One signer for batch and
+    stream, so their signatures are bit-identical by construction.
+
+    The rows are three longs each: shingle arrays stay out of the band
+    self-join (at scale they are the dominant byte volume, and
+    shuffling them 2·BANDS times per doc would swamp the exchange) and
+    re-attach in `verify_pairs` for the few surviving candidates."""
+    carry = tuple(c for c in sh.columns if c not in ("doc_id", "shingles"))
+    sig = minhash_sig_rows(sh, NUM_HASHES, carry=carry)
+    return sig.select(
+        "doc_id",
+        F.posexplode(band_hashes(F.col("sig"))).alias("band_idx", "band_hash"),
+        *carry,
+    )
+
+
+def hot_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """(band_idx, band_hash, bsz) for the band buckets of `banded`
+    holding more than `max_bucket` rows — degenerate buckets (spam
+    clusters), the explicit skew bound. They are rare by construction,
+    so callers broadcast them into an anti-join."""
+    return (
+        banded.groupBy("band_idx", "band_hash")
+        .agg(F.count(F.lit(1)).alias("bsz"))
+        .filter(F.col("bsz") > max_bucket)
+    )
+
+
+def band_pairs(banded: DataFrame) -> DataFrame:
+    """(doc_id_a, doc_id_b) candidate pairs, doc_id_a < doc_id_b, each
+    once: the band self-join on (band_idx, band_hash), deduplicated
+    because a near-duplicate pair collides in several bands."""
+    left = banded.select("band_idx", "band_hash", F.col("doc_id").alias("doc_id_a"))
+    right = banded.select("band_idx", "band_hash", F.col("doc_id").alias("doc_id_b"))
+    return (
+        left.join(right, ["band_idx", "band_hash"])
+        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        .select("doc_id_a", "doc_id_b")
+        .dropDuplicates(["doc_id_a", "doc_id_b"])
+    )
+
+
+def verify_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(doc_id_a, doc_id_b, jaccard) for the candidate pairs in `cand`
+    whose exact shingle-set Jaccard over the `shingle_sets` frame `sh`
+    is >= threshold.
+
+    Raw int/int division, not rounded: the exact twin
+    (ngram_jaccard_pairs) and the DuckDB oracle compute the same IEEE
+    division of the same integer counts, so the value is bit-identical
+    across engines — rounding would only introduce a cross-engine
+    half-way-tie hazard."""
+    joined = cand.join(
+        sh.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a")),
+        "doc_id_a",
+    ).join(
+        sh.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b")),
+        "doc_id_b",
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    return (
+        joined.withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_id_a", "doc_id_b", "jaccard")
     )
 
 
@@ -157,9 +282,6 @@ def near_dedup_minhash(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
     threshold: float = 0.6,
     max_bucket: int = 1000,
 ) -> DataFrame:
@@ -168,93 +290,23 @@ def near_dedup_minhash(
     Returns (doc_id_a, doc_id_b, jaccard) for candidate pairs whose
     exact shingle-set Jaccard >= threshold, doc_id_a < doc_id_b.
 
-    With num_hashes=64, bands=16 (rows/band r=4) the LSH S-curve puts
-    the 50% capture point near s=(1/b)^(1/r)≈0.5 — tuned for a 0.6
-    threshold. Candidates come only from band-bucket collisions, so
-    the shuffle is on (band, band_hash) and never pairs the corpus
-    quadratically.
+    Candidates come only from band-bucket collisions, so the shuffle
+    is on (band, band_hash) and never pairs the corpus quadratically;
+    buckets over `max_bucket` are dropped whole.
     """
-    rows_per_band = num_hashes // bands
-
-    # Shingle hashes (array<long>) are the working representation from
-    # here on: signatures derive from them, and exact-Jaccard
-    # verification intersects them — distinct xxhash64 values stand in
-    # for distinct shingles (collision odds ~n²/2^64, negligible), and
-    # fixed-width longs join/intersect far cheaper than long strings.
-    documents = ensure_min_partitions(documents)
-    sh = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            word_shingles(text_col, shingle_n), lambda s: F.xxhash64(s)
-        ).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
-    sh = sh.persist()  # reused: signature derivation + pair verification
-    # Signature via the Arrow-vectorized multiply-shift kernel: the
-    # HOF formulation (k × array_min(transform(...)) passes) is
-    # interpreted per row and was the operator's dominant cost.
-    # mapInPandas (its own physical operator) rather than the scalar
-    # pandas_udf expression: structurally immune to the concurrent-
-    # planning race where a shuffle-write projection received the raw
-    # `_mh` PythonUDF (THROUGHPUT_r11 known_flake; vectorops.py:
-    # minhash_sig_rows). Same kernel + seed — signatures bit-equal.
-    sig = minhash_sig_rows(sh, num_hashes)
-
-    # band i = hash of signature slice [i*r, (i+1)*r)
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(band_hashes(F.col("sig"), bands, rows_per_band)).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-    # The banded table is (doc_id, band_idx, band_hash) ONLY — three
-    # longs per row. Shingle arrays stay out of the band self-join: at
-    # scale they are the dominant byte volume, and shuffling them
-    # 2·bands times per doc would swamp the exchange. They re-attach
-    # later, for the (few) surviving candidate pairs. Persist: the
-    # signature computation feeds the bucket census and both join legs.
-    banded_cached = banded.persist()
-
-    # cap degenerate buckets (spam clusters) — explicit skew bound
-    bucket_sizes = banded_cached.groupBy("band_idx", "band_hash").agg(
-        F.count(F.lit(1)).alias("bsz")
-    )
-    banded = banded_cached.join(
-        F.broadcast(bucket_sizes.filter(F.col("bsz") > max_bucket)),
+    # persisted: the shingles feed the signatures and the verification;
+    # the band rows feed the bucket census and both join legs
+    sh = shingle_sets(ensure_min_partitions(documents), id_col, text_col).persist()
+    banded = band_rows(sh).persist()
+    kept = banded.join(
+        F.broadcast(hot_buckets(banded, max_bucket)),
         ["band_idx", "band_hash"],
         "left_anti",
     )
-
-    left = banded.select("band_idx", "band_hash", F.col("doc_id").alias("doc_id_a"))
-    right = banded.select("band_idx", "band_hash", F.col("doc_id").alias("doc_id_b"))
-    cand_ids = (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    cand = cand_ids.join(
-        sh.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a")),
-        "doc_id_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b")),
-        "doc_id_b",
-    )
-
-    # Raw int/int division, not rounded: the exact twin
-    # (ngram_jaccard_pairs) and the DuckDB oracle compute the same
-    # IEEE division of the same integer counts, so the value is
-    # bit-identical across engines — rounding would only introduce a
-    # cross-engine half-way-tie hazard.
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    out = (
-        cand.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
+    out = verify_pairs(band_pairs(kept), sh, threshold)
     # Caches live as long as the returned plan is referenced; released
     # automatically when the caller drops it (session.py:unpersist_on_gc).
-    return unpersist_on_gc(out, sh, banded_cached)
+    return unpersist_on_gc(out, sh, banded)
 
 
 def near_dedup_minhash_two_phase(
@@ -263,12 +315,8 @@ def near_dedup_minhash_two_phase(
     n_slices: int = 32,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
     threshold: float = 0.6,
     max_bucket: int = 1000,
-    keep_work: bool = False,
     recover_max_bucket: int | None = None,
     recover_batch_members: int = 2_000_000,
 ):
@@ -347,21 +395,15 @@ def near_dedup_minhash_two_phase(
     import shutil as _shutil
 
     spark = documents.sparkSession
-    rows_per_band = num_hashes // bands
     cand_dir = _os.path.join(work_dir, "candidates")
     sh_dir = _os.path.join(work_dir, "shingles")
     out_dir = _os.path.join(work_dir, "verified")
     for d in (cand_dir, sh_dir, out_dir):
         _shutil.rmtree(d, ignore_errors=True)
 
-    documents = ensure_min_partitions(documents)
-    sh = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            word_shingles(text_col, shingle_n), lambda s: F.xxhash64(s)
-        ).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
-    sh.write.mode("overwrite").parquet(sh_dir)
+    shingle_sets(ensure_min_partitions(documents), id_col, text_col).write.mode(
+        "overwrite"
+    ).parquet(sh_dir)
     sh = spark.read.parquet(sh_dir)
 
     eff_cap = max_bucket if recover_max_bucket is None else recover_max_bucket
@@ -371,21 +413,15 @@ def near_dedup_minhash_two_phase(
             f"({recover_max_bucket}, {max_bucket})"
         )
 
-    sig = minhash_sig_rows(sh, num_hashes)
+    sig = minhash_sig_rows(sh, NUM_HASHES)
     # per-doc band-hash ARRAY (not yet exploded) — both the join keys
     # and the earlier-band test read it
-    bh_frame = sig.select(
-        "doc_id", band_hashes(F.col("sig"), bands, rows_per_band).alias("bh")
-    )
+    bh_frame = sig.select("doc_id", band_hashes(F.col("sig")).alias("bh"))
     banded = bh_frame.select(
         "doc_id", F.posexplode("bh").alias("band_idx", "band_hash")
     ).persist()
-    capped = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") > max_bucket)
-        .persist()  # mask join + recovery batching + accounting read it
-    )
+    # mask join + recovery batching + accounting read it
+    capped = hot_buckets(banded, max_bucket).persist()
     # per-doc band masks, band order preserved via array_sort on
     # (band_idx, size) structs; capped buckets are few (skew guard),
     # so the size join broadcasts. sv[i] = band i's bucket is an
@@ -440,8 +476,8 @@ def near_dedup_minhash_two_phase(
 
         The earlier-collision test (hashes equal at j<i AND bucket j
         processed) is deliberately a FLAT short-circuit OR over the
-        <=`bands` fixed positions, NOT slice/zip_with/exists: it runs
-        on every joined row (|bucket|^2 x bands rows before the
+        <=BANDS fixed positions, NOT slice/zip_with/exists: it runs
+        on every joined row (|bucket|^2 x BANDS rows before the
         a<b/emit filters — tens of billions at 640x), and Spark's
         higher-order array functions are interpreted with per-row
         array allocation (~5us/row), while element_at comparisons
@@ -449,7 +485,7 @@ def near_dedup_minhash_two_phase(
         pinned 32 cores for >30 min at 640x; the flat form finishes
         the stage in minutes."""
         earlier = F.lit(False)
-        for j in range(bands):
+        for j in range(BANDS):
             earlier = earlier | (
                 (F.col("band_idx") > j)
                 & (F.element_at("bh_a", j + 1) == F.element_at("bh_b", j + 1))
@@ -543,39 +579,17 @@ def near_dedup_minhash_two_phase(
             ).write.mode("append").option("compression", "zstd").parquet(
                 cand_dir
             )
-        if not keep_work:
-            _shutil.rmtree(rec_dir, ignore_errors=True)
+        _shutil.rmtree(rec_dir, ignore_errors=True)
 
     files = sorted(_glob.glob(_os.path.join(cand_dir, "*.parquet")))
     groups = [files[s::n_slices] for s in range(n_slices)]
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
     cand_rows = 0
     for group in groups:
         if not group:
             continue
         cand = spark.read.parquet(*group)
         cand_rows += cand.count()
-        verified = (
-            cand.join(
-                sh.select(
-                    F.col("doc_id").alias("doc_id_a"),
-                    F.col("shingles").alias("sh_a"),
-                ),
-                "doc_id_a",
-            )
-            .join(
-                sh.select(
-                    F.col("doc_id").alias("doc_id_b"),
-                    F.col("shingles").alias("sh_b"),
-                ),
-                "doc_id_b",
-            )
-            .withColumn("jaccard", inter / union)
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_id_a", "doc_id_b", "jaccard")
-        )
-        verified.write.mode("append").parquet(out_dir)
+        verify_pairs(cand, sh, threshold).write.mode("append").parquet(out_dir)
         for f in group:
             try:
                 _os.remove(f)
@@ -597,8 +611,7 @@ def near_dedup_minhash_two_phase(
         "dropped_members": int(dropped_row["nm"]),
         "dropped_max_bucket": int(dropped_row["mx"]),
     }
-    if not keep_work:
-        _shutil.rmtree(cand_dir, ignore_errors=True)
+    _shutil.rmtree(cand_dir, ignore_errors=True)
     return result, stats
 
 
@@ -606,7 +619,6 @@ def ngram_jaccard_pairs(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similar pairs via shingle inverted index.
@@ -634,7 +646,7 @@ def ngram_jaccard_pairs(
     sh = (
         documents.select(
             F.col(id_col).alias("doc_id"),
-            word_shingles(text_col, shingle_n).alias("arr"),
+            word_shingles(text_col, SHINGLE_N).alias("arr"),
         )
         # bind `arr` one projection below so size() and explode() both
         # read the materialized column (CollapseProject refuses to
@@ -677,7 +689,6 @@ def incremental_dedup(
     existing_docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.6,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING (already-deduped) corpus —
@@ -712,7 +723,7 @@ def incremental_dedup(
     def shingled(df: DataFrame, side: str) -> DataFrame:
         sh = df.select(
             F.col(id_col).alias(f"doc_id_{side}"),
-            F.explode(word_shingles(text_col, shingle_n)).alias("shingle_s"),
+            F.explode(word_shingles(text_col, SHINGLE_N)).alias("shingle_s"),
         ).select(f"doc_id_{side}", F.xxhash64("shingle_s").alias("shingle"))
         sizes = sh.groupBy(f"doc_id_{side}").agg(
             F.count(F.lit(1)).alias(f"n_{side}")
@@ -759,7 +770,6 @@ def ngram_jaccard_pairs_prefix(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/
@@ -786,13 +796,7 @@ def ngram_jaccard_pairs_prefix(
     """
     from pyspark.sql import Window
 
-    documents = ensure_min_partitions(documents)
-    arr = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            word_shingles(text_col, shingle_n), lambda s: F.xxhash64(s)
-        ).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
+    arr = shingle_sets(ensure_min_partitions(documents), id_col, text_col)
     arr = arr.withColumn("n_sh", F.size("shingles")).persist()
 
     sh = arr.select("doc_id", "n_sh", F.explode("shingles").alias("shingle"))
@@ -825,21 +829,7 @@ def ngram_jaccard_pairs_prefix(
         .select("doc_id_a", "doc_id_b")
         .dropDuplicates(["doc_id_a", "doc_id_b"])
     )
-    cand = cand_ids.join(
-        arr.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a")),
-        "doc_id_a",
-    ).join(
-        arr.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b")),
-        "doc_id_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    out = (
-        cand.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
-    return unpersist_on_gc(out, arr)
+    return unpersist_on_gc(verify_pairs(cand_ids, arr, threshold), arr)
 
 
 # Heap bytes the inverted index needs per candidate-pair row to stay
@@ -854,7 +844,7 @@ _HEAP_BYTES_PER_PAIR = 32
 
 # Per-document resident bytes for the banded-MinHash family: the two
 # persisted frames are the shingle-hash arrays (8 B per shingle, one
-# shingle per token beyond n-1) and the banded table (bands rows of
+# shingle per token beyond n-1) and the banded table (BANDS rows of
 # three longs + ~16 B Tungsten row overhead). 64 B/band covers the
 # row plus its shuffle copy.
 _HEAP_BYTES_PER_SHINGLE = 8
@@ -866,14 +856,13 @@ def sublinear_heap_requirement(
     n_docs: int,
     avg_tokens: float,
     est_pairs: int,
-    bands: int = 16,
 ) -> int:
     """Heap bytes the sublinear dedup family needs to stay in the
     stable (no spill / no GC-thrash) regime — the cluster-sizing
     formula for a 100 TB deployment (VERDICT r9 item 7):
 
         heap >= 3 GiB                          (JVM + Spark base)
-              + n_docs * (8*avg_tokens + 64*bands)   (doc-side state)
+              + n_docs * (8*avg_tokens + 64*BANDS)   (doc-side state)
               + est_pairs * 32                 (candidate shuffle)
 
     The pair term is the calibrated _HEAP_BYTES_PER_PAIR (32 B,
@@ -889,7 +878,7 @@ def sublinear_heap_requirement(
     predicted requirement and headroom."""
     doc_bytes = int(
         n_docs * (_HEAP_BYTES_PER_SHINGLE * avg_tokens
-                  + _HEAP_BYTES_PER_BAND * bands)
+                  + _HEAP_BYTES_PER_BAND * BANDS)
     )
     return _HEAP_BASE_BYTES + doc_bytes + est_pairs * _HEAP_BYTES_PER_PAIR
 
@@ -926,7 +915,6 @@ def choose_jaccard_strategy(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
     pair_budget_per_core: int | None = None,
     skew_budget: int = 50_000_000,
 ) -> tuple[str, dict]:
@@ -959,7 +947,7 @@ def choose_jaccard_strategy(
     Returns ("inverted"|"prefix", stats). NOTE: eager — runs one
     Spark job at call time."""
     sh = documents.select(
-        F.explode(word_shingles(text_col, shingle_n)).alias("s")
+        F.explode(word_shingles(text_col, SHINGLE_N)).alias("s")
     ).select(F.xxhash64("s").alias("shingle"))
     row = (
         sh.groupBy("shingle")
@@ -998,7 +986,6 @@ def ngram_jaccard_pairs_auto(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.5,
     **chooser_kwargs,
 ) -> DataFrame:
@@ -1010,12 +997,12 @@ def ngram_jaccard_pairs_auto(
     the IDENTICAL pair set (pinned by the sweep's inv ≡ prefix hash
     check), so the choice is pure physics, never semantics."""
     strategy, _ = choose_jaccard_strategy(
-        documents, id_col, text_col, shingle_n, **chooser_kwargs
+        documents, id_col, text_col, **chooser_kwargs
     )
     fn = (
         ngram_jaccard_pairs_prefix if strategy == "prefix" else ngram_jaccard_pairs
     )
-    return fn(documents, id_col, text_col, shingle_n, threshold)
+    return fn(documents, id_col, text_col, threshold)
 
 
 def simhash_fingerprints(

@@ -24,17 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Schema of a multimodal record after binary-payload enrichment.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("sha", T.StringType()),
-        T.StructField("sniffed_format", T.StringType()),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -4136,10 +4136,11 @@ def q_elb_parse_ua_join(spark, sf_dir):
     """The SAME flagship pipeline through the ingest shape (batch
     sources/alb.py:read_alb_logs and the streaming/ingest.py
     micro-batch): parse with deferred UA columns, persist the parsed
-    frame, classify the DISTINCT agent strings with the Arrow
-    evaluator and broadcast-join the families back
-    (functions/ua.py:classify_ua_join — the dimension-join strategy
-    that fixed the r8 ingest throughput dip, SCALE.md round-9).
+    frame, classify the DISTINCT agent strings and broadcast-join the
+    families back (functions/ua.py:classify_ua_join — the
+    dimension-join strategy that fixed the r8 ingest throughput dip,
+    SCALE.md round-9). It calls the ingests' own
+    sources/alb.py:parse_and_classify, so it certifies what they run.
     Sharing elb_parse's oracle makes ladder ≡ dimension-join a
     driver-certified identity, not only a local test: any divergence
     in null handling, join alignment, or evaluator-vs-ladder family
@@ -4148,15 +4149,10 @@ def q_elb_parse_ua_join(spark, sf_dir):
     consumes the plan lazily, then drops the frame) so repeated gate
     runs in one long-lived session don't accumulate cached blocks —
     matching the bounded foreachBatch lifetime in the real ingest."""
-    from elb_log_to_mysql_spark.functions.ua import classify_ua_join
+    from elb_log_to_mysql_spark.sources.alb import parse_and_classify
 
-    lines = _synthetic_alb_lines(spark)
-    parsed = parse_alb_lines(
-        lines, source_file=F.lit("synthetic://alb"), ua_strategy="defer"
-    ).persist()
-    return unpersist_on_gc(
-        _elb_parse_rollup(classify_ua_join(parsed)), parsed
-    )
+    rows, parsed = parse_and_classify(_synthetic_alb_lines(spark))
+    return unpersist_on_gc(_elb_parse_rollup(rows), parsed)
 
 
 @_q(

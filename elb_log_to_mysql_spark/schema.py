@@ -37,10 +37,6 @@ ALB_TOKEN_FIELDS = [
     "target_group_arn",  # 16 discarded
 ]
 
-ALB_TOKEN_SCHEMA = T.StructType(
-    [T.StructField(name, T.StringType(), True) for name in ALB_TOKEN_FIELDS]
-)
-
 # DDL string form for from_csv (which takes a schema literal).
 ALB_TOKEN_DDL = ", ".join(f"{name} STRING" for name in ALB_TOKEN_FIELDS)
 

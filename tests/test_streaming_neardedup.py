@@ -24,18 +24,10 @@ from elb_log_to_mysql_spark.streaming.windows import run_stream_to_batch
 
 
 def _batch_twin_candidates(docs):
-    """Relational twin of the streaming join: the SAME band_rows
-    builder (shingle/signature/band pipeline) run in batch mode,
-    candidates from a band self-join."""
-    banded = neardedup.band_rows(docs)
-    left = banded.select("band_idx", "band_hash", F.col("doc_id").alias("doc_id_a"))
-    right = banded.select("band_idx", "band_hash", F.col("doc_id").alias("doc_id_b"))
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-        .dropDuplicates()
-    )
+    """Relational twin of the streaming join: near_dedup_minhash's own
+    candidate stage (the same shingle/signature/band chain, then the
+    band self-join) run in batch mode, without the bucket cap."""
+    return dedup.band_pairs(dedup.band_rows(dedup.shingle_sets(docs)))
 
 
 def test_stream_candidates_equal_batch_join(spark, sf_dir):
@@ -63,7 +55,7 @@ def test_band_rows_signatures_bitequal_batch_kernel(spark, sf_dir):
     from elb_log_to_mysql_spark.functions.vectorops import minhash_sig_rows
 
     docs = load_table(spark, sf_dir, "documents").limit(200)
-    via_map = neardedup.band_rows(docs)
+    via_map = dedup.band_rows(dedup.shingle_sets(docs))
     sh = docs.select(
         "doc_id",
         F.transform(dedup.word_shingles("text", 3), lambda s: F.xxhash64(s)).alias(
@@ -72,7 +64,7 @@ def test_band_rows_signatures_bitequal_batch_kernel(spark, sf_dir):
     ).filter(F.size("shingles") > 0)
     via_sig = minhash_sig_rows(sh, num_hashes=64).select(
         "doc_id",
-        F.posexplode(dedup.band_hashes(F.col("sig"), 16, 4)).alias(
+        F.posexplode(dedup.band_hashes(F.col("sig"))).alias(
             "band_idx", "band_hash"
         ),
     )
@@ -98,6 +90,23 @@ def test_verified_pairs_match_exact_set(spark, sf_dir):
     }
     assert found - exact == set()          # precision is structural
     assert len(found & exact) >= 0.9 * len(exact)  # recall floor
+
+
+def test_stream_verified_pairs_equal_batch_near_dedup(spark, sf_dir):
+    """Stream and batch share shingling, banding and verification, so
+    with no bucket over the batch cap the verified pair sets (and
+    their Jaccard values) are identical."""
+    path = os.path.join(sf_dir, "documents.parquet")
+    schema = raw_parquet_schema(spark, path)
+    cand = run_stream_to_batch(
+        spark, path, neardedup.stream_band_collisions, schema, output_mode="append"
+    )
+    docs = load_table(spark, sf_dir, "documents")
+    stream = {
+        tuple(r) for r in neardedup.verify_candidate_pairs(cand, docs).collect()
+    }
+    batch = {tuple(r) for r in dedup.near_dedup_minhash(docs).collect()}
+    assert stream == batch and len(batch) > 0
 
 
 def test_stream_candidates_carry_across_micro_batches(spark, sf_dir, tmp_path):
@@ -206,17 +215,18 @@ def test_hot_bucket_blocklist_guards_join_variant(spark, tmp_path):
     # plan build (its opaque keys would never match — silent no-op guard)
     import pytest
 
+    bl_32 = bl.withColumn("_cfg_bands", F.lit(32))
     with pytest.raises(ValueError, match="band config"):
-        neardedup.stream_band_collisions(docs, bands=32, blocklist=bl)
+        neardedup.stream_band_collisions(docs, blocklist=bl_32)
 
     # the guard must survive the production flow — blocklist landed to
     # storage and re-read on a refresh cadence (ADVICE r11: a Python
     # attribute dies here; the literal config COLUMNS do not)
     bl_path = str(tmp_path / "blocklist")
-    bl.write.mode("overwrite").parquet(bl_path)
+    bl_32.write.mode("overwrite").parquet(bl_path)
     bl_rt = spark.read.parquet(bl_path)
     with pytest.raises(ValueError, match="band config"):
-        neardedup.stream_band_collisions(docs, bands=32, blocklist=bl_rt)
+        neardedup.stream_band_collisions(docs, blocklist=bl_rt)
 
     # and a frame WITHOUT the config columns (hand-built key list) is
     # rejected up front rather than trusted blindly

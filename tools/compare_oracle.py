@@ -18,6 +18,7 @@ covering entries the driver's own budget did not reach.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -123,7 +124,13 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    # this process and the Python workers (which inherit the environment
+    # of the JVM the session starts) import this checkout's package
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     from elb_log_to_mysql_spark.session import build_session
 
     import __spark_entry__ as e

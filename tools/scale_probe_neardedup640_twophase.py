@@ -83,7 +83,7 @@ def main() -> None:
 
     t0 = time.perf_counter()
     found, stats = dedup.near_dedup_minhash_two_phase(
-        docs, work, n_slices=n_slices, threshold=0.6, keep_work=False,
+        docs, work, n_slices=n_slices, threshold=0.6,
         recover_max_bucket=recover_cap,
     )
     wall = round(time.perf_counter() - t0, 2)

@@ -74,7 +74,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from elb_log_to_mysql_spark.operators import analytics, maintenance, textops
+    from elb_log_to_mysql_spark.operators import analytics, dedup, maintenance, textops
     from elb_log_to_mysql_spark.streaming import neardedup
     from elb_log_to_mysql_spark.streaming.windows import run_stream_to_batch
 
@@ -201,21 +201,10 @@ def main() -> None:
     n_stream, w_stream2 = timed(cand.count)
 
     def twin():
-        # the SAME band_rows builder the stream path uses (round-11:
-        # Arrow-vectorized mapInPandas signer in both), batch mode
-        banded = neardedup.band_rows(docs).persist()
-        left = banded.select(
-            "band_idx", "band_hash", F.col("doc_id").alias("doc_id_a")
-        )
-        right = banded.select(
-            "band_idx", "band_hash", F.col("doc_id").alias("doc_id_b")
-        )
-        return (
-            left.join(right, ["band_idx", "band_hash"])
-            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-            .select("doc_id_a", "doc_id_b")
-            .dropDuplicates()
-        )
+        # the SAME shingle/band chain and band self-join the batch
+        # operator uses, batch mode, without the bucket cap
+        banded = dedup.band_rows(dedup.shingle_sets(docs)).persist()
+        return dedup.band_pairs(banded)
 
     tw = twin()
     n_twin, w_twin = timed(tw.count)
