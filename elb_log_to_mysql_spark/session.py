@@ -13,6 +13,11 @@ Scale posture (local[N] here, 1000-executor cluster in production):
 - The master defaults to local[<cores>] ($SPARK_GRAFT_CPUS, else the
   cores this process may run on).
 - Arrow enabled so the few Pandas UDFs batch via Arrow, never per-row.
+- The generated-code cache holds the engine's working set
+  (CODEGEN_CACHE_ENTRIES): every executor JVM keeps its own copy and
+  compiles per partition, so a cache smaller than one pass's recurring
+  classes recompiles on every executor for every repeated plan or
+  micro-batch.
 - Session timezone pinned to UTC: all timestamp->string rendering is
   deterministic and independent of the host TZ (the reference instead
   depends on pytz conversion at parse time, etl:41,76-77 — we convert
@@ -36,6 +41,18 @@ from pyspark.sql import SparkSession
 # (corpus_pipeline 3.4 -> 4.1 s, slower in 4/4 interleaved pairs), so
 # only streams follow the core count (streaming/windows.py).
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Entries in the JVM-wide cache of compiled whole-stage/expression
+# classes (spark.sql.codegen.cache.maxEntries, a static conf: it must
+# go on the builder, tune_session cannot set it). Spark keeps 100; one
+# warm perfbench corpus_dedup pass cycles ~250 recurring classes, so
+# the LRU evicted each before its next use and every warm pass
+# recompiled 252 of them (192 at 200 entries, 0-8 from 300 up). A
+# sweep of all 232 registry entries at sf0.001 compiles 3,754 distinct
+# classes, hence 4096: a second sweep in the same session then
+# recompiles 364. Metaspace used after a full GC on the corpus run:
+# 178.4 MB at 100 entries, 178.8 MB at 4096 (local[4]).
+CODEGEN_CACHE_ENTRIES = 4096
 
 # Stateful-streaming state lives off-heap/on-disk by default: the
 # in-heap HDFSBacked provider holds every maintained state version in
@@ -114,6 +131,7 @@ def build_session(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (*ENGINE_CONF, *(extra_conf or {}).items()):
         builder = builder.config(k, v)
@@ -231,6 +249,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver harness constructs its own SparkSession; these confs are
     runtime-settable and define the engine's semantic contract
     (deterministic UTC rendering, permissive casts, adaptive exec).
+
+    Static confs are not applied: a session the caller owns (the
+    driver contract's own session in `__spark_entry__.py`) keeps
+    Spark's 100-entry generated-code cache unless its own builder sets
+    `spark.sql.codegen.cache.maxEntries` (see CODEGEN_CACHE_ENTRIES).
     """
     for k, v in ENGINE_CONF:
         try:

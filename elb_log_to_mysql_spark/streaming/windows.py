@@ -167,7 +167,7 @@ def run_stream_to_batch(
 
     name = f"stream_result_{uuid.uuid4().hex[:8]}"
     # Scratch dirs this bounded run allocates (staged source symlink
-    # dir, parquet-sink checkpoint) are removed once the query
+    # dir, checkpoint) are removed once the query
     # terminates — repeated probe/bench runs must not accumulate
     # checkpoint state on disk (ADVICE r11). The caller-passed
     # parquet_sink_dir is the caller's to clean.
@@ -187,34 +187,36 @@ def run_stream_to_batch(
         # not the batch default: Spark applies no AQE coalescing to
         # streams, and the count is locked into the checkpoint, so
         # every extra partition is one more state store committed per
-        # micro-batch for the life of the query.
+        # micro-batch for the life of the query. The checkpoint is a
+        # local temp dir this run creates and deletes, so it goes
+        # through the FileSystem API: the default FileContext manager
+        # forks `readlink` twice per rename and `chmod` per create
+        # when the native Hadoop library is absent (458 process starts
+        # per stream_near_dedup run, 131 with this manager).
+        ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+        scratch.append(ckpt)
         with nanos_as_long(spark), scoped_conf(
             spark,
             "spark.sql.shuffle.partitions",
             str(spark.sparkContext.defaultParallelism),
+        ), scoped_conf(
+            spark,
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         ):
             stream = spark.readStream.schema(schema).parquet(source_dir)
-            writer = transform(stream).writeStream
+            writer = (
+                transform(stream)
+                .writeStream.option("checkpointLocation", ckpt)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+            )
             if parquet_sink_dir is not None:
-                ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-                scratch.append(ckpt)
-                q = (
-                    writer.format("parquet")
-                    .option("path", parquet_sink_dir)
-                    .option("checkpointLocation", ckpt)
-                    .outputMode(output_mode)
-                    .trigger(availableNow=True)
-                    .start()
-                )
+                writer = writer.format("parquet").option("path", parquet_sink_dir)
             else:
-                q = (
-                    writer.format("memory")
-                    .queryName(name)
-                    .outputMode(output_mode)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-            q.awaitTermination()
+                writer = writer.format("memory").queryName(name)
+            writer.start().awaitTermination()
         if parquet_sink_dir is not None:
             # materialize before the checkpoint vanishes: the read is
             # a plain batch parquet scan of the sink, so only the

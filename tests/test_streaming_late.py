@@ -9,6 +9,9 @@ finalizes anything mid-stream.
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+import tempfile
 import time
 import uuid
 
@@ -312,6 +315,13 @@ def _write_ids(spark, path):
     spark.range(100).selectExpr("id", "id % 5 AS k").coalesce(1).write.parquet(path)
 
 
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _stream_ckpts() -> set[str]:
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "stream_ckpt_*")))
+
+
 def test_bounded_stream_state_follows_cores(spark, tmp_path):
     """A bounded stream runs one state partition per core whatever the
     session's batch shuffle count, and hands the caller's value back."""
@@ -319,6 +329,7 @@ def test_bounded_stream_state_follows_cores(spark, tmp_path):
     _write_ids(spark, src)
     progress: list = []
     listener = _state_partitions_listener(spark, progress)
+    ckpts = _stream_ckpts()
     try:
         with scoped_conf(spark, "spark.sql.shuffle.partitions", "3"):
             out = run_stream_to_batch(
@@ -333,17 +344,23 @@ def test_bounded_stream_state_follows_cores(spark, tmp_path):
         spark.streams.removeListener(listener)
     cores = spark.sparkContext.defaultParallelism
     assert progress and all(p == [cores] for p in progress)
+    # the checkpoint manager is scoped to the run and its checkpoint
+    # directory removed with it
+    assert spark.conf.get(CKPT_MANAGER, None) is None
+    assert _stream_ckpts() == ckpts
 
 
 def test_failing_stream_restores_shuffle_partitions(spark, tmp_path):
     """A stream whose transform raises at execution propagates the
-    error and leaves the session's shuffle partition count as it was."""
+    error, leaves the session's shuffle partition count and checkpoint
+    manager as they were, and removes its checkpoint directory."""
     @F.udf("long")
     def _explode(v):
         raise ValueError(f"transform failed on {v}")
 
     src = str(tmp_path / "ids")
     _write_ids(spark, src)
+    ckpts = _stream_ckpts()
     with scoped_conf(spark, "spark.sql.shuffle.partitions", "3"):
         with pytest.raises(Exception, match="transform failed on"):
             run_stream_to_batch(
@@ -353,3 +370,5 @@ def test_failing_stream_restores_shuffle_partitions(spark, tmp_path):
                 "id long, k long",
             )
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert spark.conf.get(CKPT_MANAGER, None) is None
+    assert _stream_ckpts() == ckpts
