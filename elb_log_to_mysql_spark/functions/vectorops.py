@@ -248,11 +248,10 @@ def minhash_sig_rows(
     frame,
     num_hashes: int = 64,
     seed: int = 42,
-    id_col: str = "doc_id",
     shingles_col: str = "shingles",
     carry: tuple[str, ...] = (),
 ):
-    """(id, sig[, carry...]) frame via a mapInPandas signer.
+    """(doc_id, sig[, carry...]) frame via a mapInPandas signer.
 
     Hash family: Dietzfelbinger multiply-shift — sig_i = min over
     shingles of (a_i·h + b_i) mod 2^64 with odd a_i, computed as one
@@ -267,7 +266,7 @@ def minhash_sig_rows(
     docstring); batch near_dedup and the streaming signer share this
     path, so signatures are bit-identical across both.
 
-    `frame` must contain `id_col`, an array<long> `shingles_col`, and
+    `frame` must contain `doc_id`, an array<long> `shingles_col`, and
     any `carry` columns, which pass through untouched.
     """
     from pyspark.sql import types as T
@@ -275,7 +274,7 @@ def minhash_sig_rows(
     a_co, b_co = minhash_coefficients(num_hashes, seed)
     fields = {f.name: f for f in frame.schema.fields}
     schema = T.StructType(
-        [fields[id_col], T.StructField("sig", T.ArrayType(T.LongType()))]
+        [fields["doc_id"], T.StructField("sig", T.ArrayType(T.LongType()))]
         + [fields[c] for c in carry]
     )
 
@@ -284,12 +283,12 @@ def minhash_sig_rows(
             if len(pdf) == 0:
                 continue
             sigs = minhash_matrix(pdf[shingles_col], num_hashes, a_co, b_co)
-            out = {id_col: pdf[id_col], "sig": list(sigs)}
+            out = {"doc_id": pdf["doc_id"], "sig": list(sigs)}
             for c in carry:
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    return frame.select(id_col, shingles_col, *carry).mapInPandas(
+    return frame.select("doc_id", shingles_col, *carry).mapInPandas(
         _sign, schema=schema
     )
 

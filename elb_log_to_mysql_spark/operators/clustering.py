@@ -120,8 +120,6 @@ def kmeans_embeddings(
     embeddings: DataFrame,
     k: int = 8,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Full-table Lloyd's k-means, `iterations` assignment rounds.
 
@@ -146,10 +144,10 @@ def kmeans_embeddings(
     # replay — filtering in both engines is the only portable contract
     vectors = (
         ensure_min_partitions(embeddings)
-        .filter(F.col(vec_col).isNotNull())
+        .filter(F.col("embedding").isNotNull())
         .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("_vec"),
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("_vec"),
         )
     )
 

@@ -108,10 +108,6 @@ def ws_tokens(text: Column) -> Column:
     return F.array_remove(F.split(F.lower(text), r"\s+"), "")
 
 
-# internal alias (historical name)
-_tokens = ws_tokens
-
-
 def word_shingles(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles as an array<string> column.
 
@@ -129,7 +125,7 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     # Let-binding via a 1-element array: higher-order lambdas re-evaluate
     # any OUTER subtree they reference once per element (HOFs run
     # interpreted, no common-subexpression elimination), so slicing the
-    # raw `_tokens(c)` expression inside the loop would re-tokenize the
+    # raw `ws_tokens(c)` expression inside the loop would re-tokenize the
     # whole document per shingle — O(len·shingles). Binding the token
     # array to a lambda variable evaluates it exactly once per row
     # (measured 4-8x on the sf0.1 corpus).
@@ -145,7 +141,7 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    return F.element_at(F.transform(F.array(_tokens(c)), _build), 1)
+    return F.element_at(F.transform(F.array(ws_tokens(c)), _build), 1)
 
 
 
@@ -174,8 +170,6 @@ def band_hashes(sig: Column) -> Column:
 
 def shingle_sets(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """(doc_id, shingles[, carry...]): each document's distinct word
@@ -189,9 +183,9 @@ def shingle_sets(
     longs join/intersect far cheaper than long strings. `carry`
     columns (e.g. an ingest timestamp for watermarking) pass through."""
     return documents.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.transform(
-            word_shingles(text_col, SHINGLE_N), lambda s: F.xxhash64(s)
+            word_shingles("text", SHINGLE_N), lambda s: F.xxhash64(s)
         ).alias("shingles"),
         *carry,
     ).filter(F.size("shingles") > 0)
@@ -280,8 +274,6 @@ def verify_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
 
 def near_dedup_minhash(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
     max_bucket: int = 1000,
 ) -> DataFrame:
@@ -296,7 +288,7 @@ def near_dedup_minhash(
     """
     # persisted: the shingles feed the signatures and the verification;
     # the band rows feed the bucket census and both join legs
-    sh = shingle_sets(ensure_min_partitions(documents), id_col, text_col).persist()
+    sh = shingle_sets(ensure_min_partitions(documents)).persist()
     banded = band_rows(sh).persist()
     kept = banded.join(
         F.broadcast(hot_buckets(banded, max_bucket)),
@@ -313,8 +305,6 @@ def near_dedup_minhash_two_phase(
     documents: DataFrame,
     work_dir: str,
     n_slices: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
     max_bucket: int = 1000,
     recover_max_bucket: int | None = None,
@@ -401,9 +391,9 @@ def near_dedup_minhash_two_phase(
     for d in (cand_dir, sh_dir, out_dir):
         _shutil.rmtree(d, ignore_errors=True)
 
-    shingle_sets(ensure_min_partitions(documents), id_col, text_col).write.mode(
-        "overwrite"
-    ).parquet(sh_dir)
+    shingle_sets(ensure_min_partitions(documents)).write.mode("overwrite").parquet(
+        sh_dir
+    )
     sh = spark.read.parquet(sh_dir)
 
     eff_cap = max_bucket if recover_max_bucket is None else recover_max_bucket
@@ -617,8 +607,6 @@ def near_dedup_minhash_two_phase(
 
 def ngram_jaccard_pairs(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similar pairs via shingle inverted index.
@@ -645,8 +633,8 @@ def ngram_jaccard_pairs(
     documents = ensure_min_partitions(documents)
     sh = (
         documents.select(
-            F.col(id_col).alias("doc_id"),
-            word_shingles(text_col, SHINGLE_N).alias("arr"),
+            "doc_id",
+            word_shingles("text", SHINGLE_N).alias("arr"),
         )
         # bind `arr` one projection below so size() and explode() both
         # read the materialized column (CollapseProject refuses to
@@ -687,8 +675,6 @@ def ngram_jaccard_pairs(
 def incremental_dedup(
     new_docs: DataFrame,
     existing_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING (already-deduped) corpus —
@@ -710,10 +696,10 @@ def incremental_dedup(
     new_docs = ensure_min_partitions(new_docs)
 
     fp_new = new_docs.select(
-        F.col(id_col).alias("doc_id"),
-        content_fingerprint(text_col).alias("fp"),
+        "doc_id",
+        content_fingerprint("text").alias("fp"),
     )
-    fp_ex = existing_docs.select(content_fingerprint(text_col).alias("fp"))
+    fp_ex = existing_docs.select(content_fingerprint("text").alias("fp"))
     exact = (
         fp_new.join(fp_ex, "fp", "left_semi")
         .select("doc_id")
@@ -721,14 +707,17 @@ def incremental_dedup(
     )
 
     def shingled(df: DataFrame, side: str) -> DataFrame:
-        sh = df.select(
-            F.col(id_col).alias(f"doc_id_{side}"),
-            F.explode(word_shingles(text_col, SHINGLE_N)).alias("shingle_s"),
-        ).select(f"doc_id_{side}", F.xxhash64("shingle_s").alias("shingle"))
-        sizes = sh.groupBy(f"doc_id_{side}").agg(
-            F.count(F.lit(1)).alias(f"n_{side}")
+        # each side's shingle count is size() taken before the
+        # explode, as in ngram_jaccard_pairs
+        doc, n = f"doc_id_{side}", f"n_{side}"
+        return (
+            df.select(
+                F.col("doc_id").alias(doc),
+                word_shingles("text", SHINGLE_N).alias("arr"),
+            )
+            .select(doc, F.size("arr").alias(n), F.explode("arr").alias("shingle_s"))
+            .select(doc, n, F.xxhash64("shingle_s").alias("shingle"))
         )
-        return sh.join(sizes, f"doc_id_{side}")
 
     a = shingled(new_docs, "new")
     b = shingled(existing_docs, "ex")
@@ -751,7 +740,7 @@ def incremental_dedup(
     )
 
     return (
-        new_docs.select(F.col(id_col).alias("doc_id"))
+        new_docs.select("doc_id")
         .join(exact, "doc_id", "left")
         .join(near, "doc_id", "left")
         .select(
@@ -768,8 +757,6 @@ def incremental_dedup(
 
 def ngram_jaccard_pairs_prefix(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/
@@ -796,7 +783,7 @@ def ngram_jaccard_pairs_prefix(
     """
     from pyspark.sql import Window
 
-    arr = shingle_sets(ensure_min_partitions(documents), id_col, text_col)
+    arr = shingle_sets(ensure_min_partitions(documents))
     arr = arr.withColumn("n_sh", F.size("shingles")).persist()
 
     sh = arr.select("doc_id", "n_sh", F.explode("shingles").alias("shingle"))
@@ -913,8 +900,6 @@ def _runtime_heap_bytes(spark) -> int:
 
 def choose_jaccard_strategy(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     pair_budget_per_core: int | None = None,
     skew_budget: int = 50_000_000,
 ) -> tuple[str, dict]:
@@ -947,7 +932,7 @@ def choose_jaccard_strategy(
     Returns ("inverted"|"prefix", stats). NOTE: eager — runs one
     Spark job at call time."""
     sh = documents.select(
-        F.explode(word_shingles(text_col, SHINGLE_N)).alias("s")
+        F.explode(word_shingles("text", SHINGLE_N)).alias("s")
     ).select(F.xxhash64("s").alias("shingle"))
     row = (
         sh.groupBy("shingle")
@@ -984,8 +969,6 @@ def choose_jaccard_strategy(
 
 def ngram_jaccard_pairs_auto(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     **chooser_kwargs,
 ) -> DataFrame:
@@ -996,18 +979,14 @@ def ngram_jaccard_pairs_auto(
     filtering beyond it or under posting-list skew. Both twins emit
     the IDENTICAL pair set (pinned by the sweep's inv ≡ prefix hash
     check), so the choice is pure physics, never semantics."""
-    strategy, _ = choose_jaccard_strategy(
-        documents, id_col, text_col, **chooser_kwargs
-    )
+    strategy, _ = choose_jaccard_strategy(documents, **chooser_kwargs)
     fn = (
         ngram_jaccard_pairs_prefix if strategy == "prefix" else ngram_jaccard_pairs
     )
-    return fn(documents, id_col, text_col, threshold)
+    return fn(documents, threshold)
 
 
-def simhash_fingerprints(
-    documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     """SimHash fingerprints, computed map-side.
 
     Token hashing stays JVM-side (xxhash64 over the token array); the
@@ -1025,8 +1004,8 @@ def simhash_fingerprints(
     th = (
         ensure_min_partitions(documents)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.transform(_tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias(
+            "doc_id",
+            F.transform(ws_tokens(F.col("text")), lambda t: F.xxhash64(t)).alias(
                 "th"
             ),
         )
@@ -1041,8 +1020,6 @@ def simhash_fingerprints(
 
 def simhash_near_pairs(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
     max_bucket: int | None = None,
     cap_multiplier: int = 50,
@@ -1106,7 +1083,7 @@ def simhash_near_pairs(
       near pairs, the documented recall trade of any cap.
     """
     cand, fp = simhash_candidates(
-        documents, id_col, text_col, max_hamming, max_bucket,
+        documents, max_hamming, max_bucket,
         cap_multiplier=cap_multiplier, cap_ceiling=cap_ceiling,
     )
     out = (
@@ -1148,8 +1125,6 @@ def _file_stamp(uri: str) -> int | None:
 
 def simhash_candidates(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
     max_bucket: int | None = None,
     cap_multiplier: int = 50,
@@ -1179,7 +1154,7 @@ def simhash_candidates(
             F.lit(block_mask).cast("long")
         )
 
-    fp = simhash_fingerprints(documents, id_col, text_col).persist()
+    fp = simhash_fingerprints(documents).persist()
 
     if max_bucket is None:
         # Density-derived cap (policy: max(300, cap_multiplier x
@@ -1274,7 +1249,6 @@ def substring_dup_spans(
     k: int = 8,
     min_len: int = 20,
     max_df: int | None = 50,
-    text_col: str = "text",
 ) -> DataFrame:
     """Maximal exact duplicated token spans across documents — the
     distributed re-expression of suffix-array substring dedup
@@ -1314,7 +1288,7 @@ def substring_dup_spans(
     """
     from pyspark.sql import Window
 
-    t = ws_tokens(F.col(text_col))
+    t = ws_tokens(F.col("text"))
     toks = documents.select("doc_id", t.alias("t"))
 
     n_sh = F.size(F.col("t")) - (k - 1)
@@ -1382,7 +1356,6 @@ def substring_dedup_apply(
     k: int = 8,
     min_len: int = 20,
     max_df: int | None = 50,
-    text_col: str = "text",
 ) -> DataFrame:
     """APPLY substring dedup: cut each duplicated span from the
     LATER document (higher doc_id) and rebuild its text — the second
@@ -1412,9 +1385,7 @@ def substring_dedup_apply(
     inside removed whitespace runs is not preserved, content is).
     """
     if spans is None:
-        spans = substring_dup_spans(
-            documents, k=k, min_len=min_len, max_df=max_df, text_col=text_col
-        )
+        spans = substring_dup_spans(documents, k=k, min_len=min_len, max_df=max_df)
     cuts = (
         spans.select(
             F.col("doc_id_b").alias("doc_id"),
@@ -1426,7 +1397,7 @@ def substring_dedup_apply(
         .groupBy("doc_id")
         .agg(F.collect_list("cut").alias("cuts"))
     )
-    t = ws_tokens(F.col(text_col))
+    t = ws_tokens(F.col("text"))
     toks = documents.select("doc_id", t.alias("t")).join(
         cuts, "doc_id", "left"
     )

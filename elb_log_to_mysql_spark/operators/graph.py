@@ -75,7 +75,6 @@ def connected_components(
 def dedup_clusters(
     documents: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
     pair_a: str = "doc_id_a",
     pair_b: str = "doc_id_b",
 ) -> DataFrame:
@@ -89,10 +88,10 @@ def dedup_clusters(
     hint would pin a corpus-scale table on the driver)."""
     cc = connected_components(pairs, pair_a, pair_b)
     return documents.join(
-        cc.withColumnRenamed("id", id_col), id_col, "left"
+        cc.withColumnRenamed("id", "doc_id"), "doc_id", "left"
     ).select(
-        id_col,
-        F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
+        "doc_id",
+        F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
     )
 
 

@@ -12,9 +12,9 @@ Scale notes baked into each operator:
 - `pii_scrub` is pure `regexp_replace`/`regexp_extract_all` column
   expressions — whole-stage codegen, zero shuffles, scan-bound.
 - `decontaminate` broadcasts the benchmark n-gram set (benchmarks are
-  MB-scale even when the corpus is 100 TB) so the corpus side never
-  shuffles: one semi join to find contaminated doc ids, one anti join
-  to drop them.
+  MB-scale even when the corpus is 100 TB) as one array row, so the
+  corpus side never shuffles: one `arrays_overlap` filter drops the
+  contaminated docs.
 - `shuffle_index` produces a total deterministic permutation without
   a single-partition global sort: range-repartition by hash key, a
   per-partition count pass, a cumulative-offset table (tiny: one row
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from elb_log_to_mysql_spark.operators.dedup import word_shingles
+from elb_log_to_mysql_spark.operators.dedup import word_shingles, ws_tokens
 from elb_log_to_mysql_spark.session import ensure_min_partitions
 
 # Patterns restricted to syntax shared by Java regex (Spark) and RE2
@@ -43,9 +43,7 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scrub(
-    df: DataFrame, text_col: str = "text", out_col: str = "clean_text"
-) -> DataFrame:
+def pii_scrub(df: DataFrame, out_col: str = "clean_text") -> DataFrame:
     """Redact PII spans and count redactions per category.
 
     Counts are taken on the ORIGINAL text (before any replacement so
@@ -58,85 +56,71 @@ def pii_scrub(
     for name, pat in PII_PATTERNS.items():
         out = out.withColumn(
             f"n_{name}",
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0))),
+            F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))),
         )
-    clean: Column = F.col(text_col)
+    clean: Column = F.col("text")
     for name, pat in PII_PATTERNS.items():
         clean = F.regexp_replace(clean, pat, f"<{name.upper()}>")
     return out.withColumn(out_col, clean)
 
 
-def decontaminate(
+def _bench_split(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_mod: int = 97,
-    ngram: int = 5,
-    strategy: str = "overlap",
+    bench_mod: int,
+    ngram: int,
     benchmark: DataFrame | None = None,
-) -> DataFrame:
-    """Drop training docs sharing any word n-gram with the benchmark
-    set. Returns the clean training docs.
+) -> tuple[DataFrame, DataFrame]:
+    """(bench_grams, train): the distinct benchmark word `ngram`-grams
+    (one `gram` column) and the training docs to screen against them.
 
     The benchmark set is either an explicit `benchmark` frame (the
     production shape: the eval suite is its own fixed corpus, and
     `documents` is pure training data — every row of it is screened)
     or, when `benchmark` is None, the in-corpus stand-in: every doc
     whose id ≡ 0 mod `bench_mod` is treated as benchmark and excluded
-    from the returned training set.
-
-    Two physical strategies, same semantics:
-
-    - 'overlap' (default): collect the deduplicated benchmark gram
-      set into ONE broadcast array row and filter the corpus with
-      `arrays_overlap` — zero corpus-side shuffles, no gram explode,
-      one pass over the corpus. Right whenever the benchmark set fits
-      in a broadcast (eval suites are MB-scale even at 100 TB corpus
-      scale).
-    - 'join': explode corpus grams and semi-join the (still
-      broadcast) gram set, then anti-join the contaminated ids —
-      the fallback when the benchmark gram set is itself too large
-      for a single array value.
-    """
+    from the training side."""
     # the shingle derivation is compute-dense; a small-file scan must
     # not pin it to one task (session.ensure_min_partitions is a no-op
     # on already-wide inputs)
     documents = ensure_min_partitions(documents)
-    gram_col = F.explode(word_shingles(text_col, ngram)).alias("gram")
+    gram_col = F.explode(word_shingles("text", ngram)).alias("gram")
     if benchmark is not None:
-        bench_grams = benchmark.select(gram_col).distinct()
-        train = documents
-    else:
-        is_bench = (F.col(id_col) % bench_mod) == 0
-        bench_grams = documents.filter(is_bench).select(gram_col).distinct()
-        train = documents.filter(~is_bench)
-    if strategy == "overlap":
-        bench_arr = bench_grams.agg(F.collect_set("gram").alias("_bench_grams"))
-        return (
-            train.join(F.broadcast(bench_arr))
-            .filter(
-                ~F.arrays_overlap(
-                    word_shingles(text_col, ngram), F.col("_bench_grams")
-                )
-            )
-            .drop("_bench_grams")
-        )
-    contaminated = (
-        train.select(F.col(id_col), gram_col)
-        .join(F.broadcast(bench_grams), "gram", "left_semi")
-        .select(id_col)
-        .distinct()
+        return benchmark.select(gram_col).distinct(), documents
+    is_bench = (F.col("doc_id") % bench_mod) == 0
+    return (
+        documents.filter(is_bench).select(gram_col).distinct(),
+        documents.filter(~is_bench),
     )
-    # contaminated ids are usually few but O(corpus) in the worst case
-    # (a benchmark gram that is a common phrase) — no broadcast hint;
-    # AQE broadcasts the set only when it is actually small
-    return train.join(contaminated, id_col, "left_anti")
+
+
+def decontaminate(
+    documents: DataFrame,
+    bench_mod: int = 97,
+    ngram: int = 5,
+    benchmark: DataFrame | None = None,
+) -> DataFrame:
+    """Drop training docs sharing any word n-gram with the benchmark
+    set (`_bench_split`: an explicit `benchmark` frame, or the
+    id ≡ 0 mod `bench_mod` stand-in). Returns the clean training docs.
+
+    The deduplicated benchmark gram set is collected into ONE
+    broadcast array row and the corpus is filtered with
+    `arrays_overlap` — zero corpus-side shuffles, no gram explode, one
+    pass over the corpus. Eval suites are MB-scale even at 100 TB
+    corpus scale; a gram set too large for one array value is
+    `decontaminate_bloom`'s case.
+    """
+    bench_grams, train = _bench_split(documents, bench_mod, ngram, benchmark)
+    bench_arr = bench_grams.agg(F.collect_set("gram").alias("_bench_grams"))
+    return (
+        train.join(F.broadcast(bench_arr))
+        .filter(~F.arrays_overlap(word_shingles("text", ngram), F.col("_bench_grams")))
+        .drop("_bench_grams")
+    )
 
 
 def contamination_score(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bench_mod: int = 97,
     ngram: int = 5,
     max_frac: float = 0.05,
@@ -151,34 +135,26 @@ def contamination_score(
     `keep` = (fraction <= max_frac); gram-less docs (shorter than the
     n-gram width) have nothing to leak and keep.
 
-    Same scale shape as `decontaminate`'s 'overlap' strategy: the
-    deduplicated benchmark gram set collapses to ONE broadcast array
-    row (eval suites are MB-scale at any corpus size) and the score
-    is an in-row `array_intersect` size — zero corpus-side shuffles,
-    one scan. The fraction is a single IEEE double division of two
-    ints, so the oracle replays it bit-exactly.
+    Same scale shape as `decontaminate`: the deduplicated benchmark
+    gram set collapses to ONE broadcast array row (eval suites are
+    MB-scale at any corpus size) and the score is an in-row
+    `array_intersect` size — zero corpus-side shuffles, one scan. The
+    fraction is a single IEEE double division of two ints, so the
+    oracle replays it bit-exactly.
 
     Returns (doc_id, n_grams, n_hit, contamination_frac, keep), one
     row per training doc (benchmark docs excluded, as in
     `decontaminate`).
     """
-    documents = ensure_min_partitions(documents)
-    gram_col = F.explode(word_shingles(text_col, ngram)).alias("gram")
-    if benchmark is not None:
-        bench_grams = benchmark.select(gram_col).distinct()
-        train = documents
-    else:
-        is_bench = (F.col(id_col) % bench_mod) == 0
-        bench_grams = documents.filter(is_bench).select(gram_col).distinct()
-        train = documents.filter(~is_bench)
+    bench_grams, train = _bench_split(documents, bench_mod, ngram, benchmark)
     bench_arr = bench_grams.agg(F.collect_set("gram").alias("_bench"))
-    grams = word_shingles(text_col, ngram)
+    grams = word_shingles("text", ngram)
     n_grams = F.size(grams)
     n_hit = F.size(F.array_intersect(grams, F.col("_bench")))
     return (
         train.join(F.broadcast(bench_arr))
         .select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             n_grams.cast("long").alias("n_grams"),
             n_hit.cast("long").alias("n_hit"),
             F.when(
@@ -194,8 +170,6 @@ def contamination_score(
 
 def decontaminate_fraction(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bench_mod: int = 97,
     ngram: int = 5,
     max_frac: float = 0.05,
@@ -204,10 +178,12 @@ def decontaminate_fraction(
     """Drop training docs whose benchmark n-gram overlap FRACTION
     exceeds `max_frac` (see `contamination_score`). Returns the
     surviving training docs with their original columns."""
-    keep_ids = contamination_score(
-        documents, id_col, text_col, bench_mod, ngram, max_frac, benchmark
-    ).filter("keep").select(F.col("doc_id").alias(id_col))
-    return documents.join(keep_ids, id_col, "left_semi")
+    keep_ids = (
+        contamination_score(documents, bench_mod, ngram, max_frac, benchmark)
+        .filter("keep")
+        .select("doc_id")
+    )
+    return documents.join(keep_ids, "doc_id", "left_semi")
 
 
 def _bloom_words(grams: DataFrame, num_bits: int, num_hashes: int) -> list[int]:
@@ -247,8 +223,6 @@ def _bloom_words(grams: DataFrame, num_bits: int, num_hashes: int) -> list[int]:
 
 def decontaminate_bloom(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bench_mod: int = 97,
     ngram: int = 5,
     num_bits: int = 1 << 20,
@@ -268,20 +242,16 @@ def decontaminate_bloom(
        (xxhash64/pmod/shiftleft/bitwiseAND inside exists), no Python,
        no explode, no shuffle. False negatives are impossible, so
        docs pruned here are definitively clean;
-    3. exact verification of the (few) candidates via the same
-       explode + broadcast semi-join as the 'join' strategy — bloom
-       false positives die here.
+    3. exact verification of the (few) candidates: explode their
+       grams, semi-join the (broadcast) benchmark gram set, anti-join
+       the contaminated ids — bloom false positives die here.
 
     At fpp ~1% the explode+join input shrinks from the whole corpus to
     ~(true contaminated + 1% of clean), which is what makes the exact
     check affordable at 100 TB.
     """
-    documents = ensure_min_partitions(documents)
     spark = documents.sparkSession
-    is_bench = (F.col(id_col) % bench_mod) == 0
-    gram_col = F.explode(word_shingles(text_col, ngram)).alias("gram")
-    bench_grams = documents.filter(is_bench).select(gram_col).distinct()
-    train = documents.filter(~is_bench)
+    bench_grams, train = _bench_split(documents, bench_mod, ngram)
 
     dense = _bloom_words(bench_grams, num_bits, num_hashes)
     bloom_df = spark.createDataFrame([(dense,)], "_bloom: array<bigint>")
@@ -301,19 +271,23 @@ def decontaminate_bloom(
         return cond
 
     probed = train.join(F.broadcast(bloom_df)).withColumn(
-        "_maybe", F.exists(word_shingles(text_col, ngram), gram_hits)
+        "_maybe", F.exists(word_shingles("text", ngram), gram_hits)
     ).drop("_bloom")
     clean_fast = probed.filter(~F.col("_maybe")).drop("_maybe")
     candidates = probed.filter(F.col("_maybe")).drop("_maybe")
 
     contaminated = (
-        candidates.select(F.col(id_col), gram_col)
+        candidates.select(
+            "doc_id", F.explode(word_shingles("text", ngram)).alias("gram")
+        )
         .join(F.broadcast(bench_grams), "gram", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )
-    # same worst-case-O(corpus) reasoning as `decontaminate`: no hint
-    verified_clean = candidates.join(contaminated, id_col, "left_anti")
+    # contaminated ids are usually few but O(corpus) in the worst case
+    # (a benchmark gram that is a common phrase) — no broadcast hint;
+    # AQE broadcasts the set only when it is actually small
+    verified_clean = candidates.join(contaminated, "doc_id", "left_anti")
     return clean_fast.unionByName(verified_clean)
 
 
@@ -389,7 +363,6 @@ def shuffle_index(
 def sequence_pack(
     df: DataFrame,
     key_col: str,
-    text_col: str = "text",
     seq_len: int = 2048,
     salt: str = "seed42",
 ) -> DataFrame:
@@ -404,7 +377,7 @@ def sequence_pack(
     prefix-sum, so there is no single-partition sort at any size;
     the assignment is a pure function of (key, salt, seq_len).
     """
-    n_tokens = F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("long")
+    n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
     out = _bucketed_global_cumsum(
         df.withColumn("n_tokens", n_tokens), key_col, salt, F.col("n_tokens"), "_start"
     )
@@ -581,7 +554,6 @@ def token_budget_sample(
     key_col: str,
     budgets: dict[str, int],
     salt: str = "seed42",
-    text_col: str = "text",
 ) -> DataFrame:
     """TOKEN-budget mixture sampling: per stratum, take documents in
     deterministic md5(key|salt) order until the stratum's token
@@ -603,7 +575,6 @@ def token_budget_sample(
     `tokens_before` column replays exactly in the SQL oracle's
     ROWS-window formulation.
     """
-    from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 
     # NULL text counts as 0 tokens: bare size() yields -1 for a NULL
     # array (legacy sizeOfNull), which would subtract from the running
@@ -611,8 +582,8 @@ def token_budget_sample(
     # stratum. Pinned to 0 here and as COALESCE(len(...), 0) in the
     # SQL oracles.
     n_tok = (
-        F.when(F.col(text_col).isNull(), F.lit(0))
-        .otherwise(F.size(ws_tokens(F.col(text_col))))
+        F.when(F.col("text").isNull(), F.lit(0))
+        .otherwise(F.size(ws_tokens(F.col("text"))))
         .cast("long")
     )
     base = ensure_min_partitions(df).select(
@@ -658,7 +629,6 @@ def token_budget_sample(
 def source_overlap(
     documents: DataFrame,
     strata_col: str = "source",
-    text_col: str = "text",
     ngram: int = 5,
 ) -> DataFrame:
     """Pairwise cross-source n-gram contamination matrix: for every
@@ -680,7 +650,7 @@ def source_overlap(
     grams = (
         docs.select(
             F.col(strata_col).alias("src"),
-            F.explode(word_shingles(text_col, ngram)).alias("gram"),
+            F.explode(word_shingles("text", ngram)).alias("gram"),
         )
         .select("src", F.substring(F.md5("gram"), 1, 16).alias("fp"))
         .distinct()
@@ -875,8 +845,6 @@ def incremental_accept(
     new_docs: DataFrame,
     existing_corpus: DataFrame | None,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     ngram: int = 5,
     near_threshold: float | None = None,
 ) -> DataFrame:
@@ -917,42 +885,30 @@ def incremental_accept(
     )
     from elb_log_to_mysql_spark.operators.textops import quality_filter
 
-    batch = new_docs.join(
-        benchmark.select(id_col), id_col, "left_anti"
-    )
+    batch = new_docs.join(benchmark.select("doc_id"), "doc_id", "left_anti")
     kept = batch.join(
-        quality_filter(batch).filter("keep").select(id_col),
-        id_col,
+        quality_filter(batch).filter("keep").select("doc_id"),
+        "doc_id",
         "left_semi",
     )
     surv = exact_dedup(
-        kept.withColumn("_fp", content_fingerprint(text_col)),
+        kept.withColumn("_fp", content_fingerprint("text")),
         ["_fp"],
-        [id_col],
+        ["doc_id"],
     )
     if existing_corpus is not None:
         ex_fp = (
             existing_corpus.select("_fp")
             if "_fp" in existing_corpus.columns
-            else existing_corpus.select(
-                content_fingerprint(text_col).alias("_fp")
-            )
+            else existing_corpus.select(content_fingerprint("text").alias("_fp"))
         )
         surv = surv.join(ex_fp, "_fp", "left_anti")
-    clean = decontaminate(
-        surv.drop("_fp"), id_col, text_col, ngram=ngram, benchmark=benchmark
-    )
+    clean = decontaminate(surv.drop("_fp"), ngram=ngram, benchmark=benchmark)
     if near_threshold is not None and existing_corpus is not None:
-        verdicts = incremental_dedup(
-            clean,
-            existing_corpus,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=near_threshold,
-        )
+        verdicts = incremental_dedup(clean, existing_corpus, threshold=near_threshold)
         clean = clean.join(
-            verdicts.filter("keep").select(F.col("doc_id").alias(id_col)),
-            id_col,
+            verdicts.filter("keep").select("doc_id"),
+            "doc_id",
             "left_semi",
         )
     return clean
@@ -1009,7 +965,6 @@ def curriculum_bins(
     documents: DataFrame,
     bins: int = 10,
     strata_col: str = "lang",
-    text_col: str = "text",
 ) -> DataFrame:
     """Length-curriculum binning: per stratum, rank documents by
     token count and cut into `bins` equal-width rank slices — the
@@ -1024,9 +979,8 @@ def curriculum_bins(
     slice boundaries are identical to the SQL replay's ROW_NUMBER
     formulation by construction.
     """
-    from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 
-    n_tok = F.size(ws_tokens(F.col(text_col)))
+    n_tok = F.size(ws_tokens(F.col("text")))
     base = ensure_min_partitions(documents).select(
         "doc_id", F.col(strata_col).alias("_st"), n_tok.alias("n_tokens")
     )
@@ -1198,8 +1152,6 @@ def curation_audit(
 def dataset_diff(
     old: DataFrame,
     new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Content-level diff of two corpus snapshots: per id, whether it
     was `added`, `removed`, `changed` (same id, different canonical
@@ -1218,14 +1170,10 @@ def dataset_diff(
     """
     from elb_log_to_mysql_spark.operators.dedup import content_fingerprint
 
-    o = old.select(
-        F.col(id_col), content_fingerprint(text_col).alias("_fp_old")
-    )
-    n = new.select(
-        F.col(id_col), content_fingerprint(text_col).alias("_fp_new")
-    )
-    return o.join(n, id_col, "full_outer").select(
-        id_col,
+    o = old.select("doc_id", content_fingerprint("text").alias("_fp_old"))
+    n = new.select("doc_id", content_fingerprint("text").alias("_fp_new"))
+    return o.join(n, "doc_id", "full_outer").select(
+        "doc_id",
         F.when(F.col("_fp_old").isNull(), F.lit("added"))
         .when(F.col("_fp_new").isNull(), F.lit("removed"))
         .when(F.col("_fp_old") != F.col("_fp_new"), F.lit("changed"))

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 from elb_log_to_mysql_spark.operators.similarity import similarity_topk_bruteforce
-from elb_log_to_mysql_spark.operators.textops import _tokens
 from elb_log_to_mysql_spark.session import ensure_min_partitions
 
 
@@ -32,20 +32,18 @@ def lexical_topk(
     documents: DataFrame,
     queries: DataFrame,
     k: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Top-k corpus documents per query document by DISTINCT-token
     overlap — the exact-integer lexical ranking leg. The query side
     (small) explodes and broadcasts; overlap aggregates on
     (query_id, doc_id) with partial aggregation; per-query top-k via
     window with doc_id tiebreak."""
-    toks = F.array_distinct(_tokens(F.col(text_col)))
+    toks = F.array_distinct(ws_tokens(F.col("text")))
     qt = queries.select(
-        F.col(id_col).alias("query_id"), F.explode(toks).alias("term")
+        F.col("doc_id").alias("query_id"), F.explode(toks).alias("term")
     )
     ct = ensure_min_partitions(documents).select(
-        F.col(id_col).alias("doc_id"), F.explode(toks).alias("term")
+        "doc_id", F.explode(toks).alias("term")
     )
     ov = (
         ct.join(F.broadcast(qt), "term")

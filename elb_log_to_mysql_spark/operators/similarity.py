@@ -62,8 +62,6 @@ def similarity_topk_bruteforce(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
@@ -73,10 +71,10 @@ def similarity_topk_bruteforce(
     neighbor id keeps the k-boundary deterministic.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     c = ensure_min_partitions(embeddings).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     # cosine runs as its own mapInPandas stage and the vectors are
     # dropped inside it — the rank shuffle moves only id/score triples
@@ -130,8 +128,6 @@ def similarity_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 4,
     n_tables: int = 8,
@@ -177,13 +173,15 @@ def similarity_topk_lsh(
         )
 
     qb = bucketize(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        queries.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+        ),
         "query_id",
         "q_vec",
     )
     cb = bucketize(
         ensure_min_partitions(embeddings).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
         ),
         "neighbor_id",
         "c_vec",
@@ -222,7 +220,7 @@ def similarity_topk_lsh(
         F.count(F.lit(1)).alias("_c")
     )
     stats = (
-        queries.select(F.col(id_col).alias("query_id"))
+        queries.select(F.col("vec_id").alias("query_id"))
         .distinct()
         .join(counts, "query_id", "left")
         .select(
@@ -303,8 +301,6 @@ def derive_lsh_params(
     queries: DataFrame,
     k: int = 10,
     floor: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_rows: int | None = 2048,
     query_sample: int = 64,
     max_planes: int = 16,
@@ -402,13 +398,13 @@ def derive_lsh_params(
     # ~the whole corpus skip the pointless global hash-order entirely
     # (ADVICE r14: the sort+limit were pure cost when limit >= n).
     cs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     if sample_rows is not None:
         cs = cs.orderBy(F.xxhash64(F.col("neighbor_id"))).limit(sample_rows)
     qs = (
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         )
         .orderBy(F.xxhash64(F.col("query_id")))
         .limit(query_sample)
@@ -485,8 +481,6 @@ def similarity_topk_lsh_auto(
     queries: DataFrame,
     k: int = 10,
     floor: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     with_stats: bool = False,
     params: dict | None = None,
@@ -501,14 +495,9 @@ def similarity_topk_lsh_auto(
     dict with the index, and pass it back via ``params`` — zero eager
     jobs per query batch.
     """
-    p = params or derive_lsh_params(
-        embeddings, queries, k=k, floor=floor,
-        id_col=id_col, vec_col=vec_col,
-    )
+    p = params or derive_lsh_params(embeddings, queries, k=k, floor=floor)
     if p["method"] == "brute":
-        out = similarity_topk_bruteforce(
-            embeddings, queries, k=k, id_col=id_col, vec_col=vec_col
-        )
+        out = similarity_topk_bruteforce(embeddings, queries, k=k)
         if not with_stats:
             return out
         # Brute scans the full corpus once per query — report the
@@ -521,7 +510,7 @@ def similarity_topk_lsh_auto(
             F.count(F.lit(1)).cast("long").alias("candidates")
         )
         stats = (
-            queries.select(F.col(id_col).alias("query_id"))
+            queries.select(F.col("vec_id").alias("query_id"))
             .distinct()
             .crossJoin(F.broadcast(cnt))
         )
@@ -530,8 +519,6 @@ def similarity_topk_lsh_auto(
         embeddings,
         queries,
         k=k,
-        id_col=id_col,
-        vec_col=vec_col,
         dim=dim,
         n_planes=p["n_planes"],
         n_tables=p["n_tables"],
@@ -542,8 +529,6 @@ def similarity_topk_lsh_auto(
 def embedding_near_dup(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "exact",
     dim: int = 64,
     n_planes: int = 2,
@@ -575,13 +560,13 @@ def embedding_near_dup(
     """
     if method == "lsh":
         return embedding_near_dup_lsh(
-            embeddings, threshold, id_col, vec_col, dim, n_planes, n_tables, seed
+            embeddings, threshold, dim, n_planes, n_tables, seed
         )
     a = ensure_min_partitions(embeddings).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a")
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a")
     )
     b = embeddings.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b")
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b")
     )
     return (
         with_pairwise_cosine(
@@ -599,8 +584,6 @@ def embedding_near_dup(
 def embedding_near_dup_lsh(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 2,
     n_tables: int = 16,
@@ -618,7 +601,7 @@ def embedding_near_dup_lsh(
     planes = _hyperplanes(n_tables, n_planes, dim, seed)
     bucketed = with_lsh_buckets(
         ensure_min_partitions(embeddings).select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
         ),
         "vec",
         planes,
@@ -757,8 +740,6 @@ def similarity_topk_ivf(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
     centroids=None,
 ) -> DataFrame:
@@ -786,7 +767,7 @@ def similarity_topk_ivf(
     centers = (
         np.asarray(centroids, dtype=np.float64)
         if centroids is not None
-        else train_ivf_centroids(embeddings, n_centroids, vec_col, seed)
+        else train_ivf_centroids(embeddings, n_centroids, seed=seed)
     )
 
     # One Arrow-batched matmul (its own mapInPandas stage) yields all
@@ -795,14 +776,14 @@ def similarity_topk_ivf(
     # total runtime; cell selection stays JVM-side over the output.
     corpus = with_center_distances(
         ensure_min_partitions(embeddings).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
         ),
         "c_vec",
         centers,
     ).select("neighbor_id", "c_vec", _nearest_cell_expr().alias("cell"))
     probed = with_center_distances(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         ),
         "q_vec",
         centers,
@@ -850,8 +831,6 @@ def build_ivf_index(
     embeddings: DataFrame,
     centroids=None,
     n_centroids: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     expected_probes: int = 8,
 ) -> dict:
     """Build-once IVF index artifacts for similarity_topk_ivf_auto's
@@ -871,7 +850,7 @@ def build_ivf_index(
 
     normed = with_unit_norm(
         ensure_min_partitions(embeddings).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_v")
         ),
         "_v",
         out="c_vec",
@@ -1087,8 +1066,6 @@ def similarity_topk_ivf_auto(
     k: int = 10,
     n_centroids: int = 16,
     floor_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids=None,
     with_stats: bool = False,
     index: dict | None = None,
@@ -1168,8 +1145,8 @@ def similarity_topk_ivf_auto(
     else:
         normed = with_unit_norm(
             ensure_min_partitions(embeddings).select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("_v"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("_v"),
             ),
             "_v",
             out="c_vec",
@@ -1198,7 +1175,7 @@ def similarity_topk_ivf_auto(
     qside = with_center_distances(
         with_unit_norm(
             queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("_v")
+                F.col("vec_id").alias("query_id"), F.col("embedding").alias("_v")
             ),
             "_v",
             out="q_vec",
@@ -1395,8 +1372,6 @@ def similarity_topk_filtered(
     selectivity_threshold: float = 0.25,
     over_fetch: int = 4,
     selectivity: float | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int | None = None,
     n_tables: int | None = None,
     index: dict | None = None,
@@ -1484,16 +1459,11 @@ def similarity_topk_filtered(
         ):
             # broad regime with no geometry in hand: derive it (one
             # tiny eager job) and re-decide on the REAL cost
-            lsh_params = derive_lsh_params(
-                embeddings, queries, k=k, id_col=id_col, vec_col=vec_col
-            )
+            lsh_params = derive_lsh_params(embeddings, queries, k=k)
             if _params_frac(lsh_params) >= s:
                 method = "pre"
     if method == "pre":
-        return similarity_topk_bruteforce(
-            embeddings.filter(predicate), queries, k=k,
-            id_col=id_col, vec_col=vec_col,
-        )
+        return similarity_topk_bruteforce(embeddings.filter(predicate), queries, k=k)
     if method != "post":
         raise ValueError(f"method must be auto|pre|post, got {method!r}")
     import math
@@ -1504,24 +1474,19 @@ def similarity_topk_filtered(
         else over_fetch * k
     )
     if index is not None:
-        ranked = similarity_topk_ivf_auto(
-            embeddings, queries, k=k_over,
-            id_col=id_col, vec_col=vec_col, index=index,
-        )
+        ranked = similarity_topk_ivf_auto(embeddings, queries, k=k_over, index=index)
     elif fixed_config:
         ranked = similarity_topk_lsh(
             embeddings, queries, k=k_over,
-            id_col=id_col, vec_col=vec_col,
             n_planes=n_planes if n_planes is not None else 3,
             n_tables=n_tables if n_tables is not None else 24,
         )
     else:
         ranked = similarity_topk_lsh_auto(
-            embeddings, queries, k=k_over,
-            id_col=id_col, vec_col=vec_col, params=lsh_params,
+            embeddings, queries, k=k_over, params=lsh_params
         )
     survivors = embeddings.filter(predicate).select(
-        F.col(id_col).alias("neighbor_id")
+        F.col("vec_id").alias("neighbor_id")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
@@ -1584,11 +1549,7 @@ def embedding_stats(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def embedding_quantize_int8(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Symmetric int8 quantization of an embedding column — the
     4×-storage-reduction pass an embedding store runs before serving
     ANN at corpus scale. Per vector: scale = 127/max|x| (one IEEE
@@ -1608,13 +1569,13 @@ def embedding_quantize_int8(
     n_sat aggregate into -1 on a NULL array while a SQL replay yields
     NULL — filtering in both engines is the only portable rule.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     maxabs = F.array_max(F.transform(v, F.abs))
     scale = F.when(maxabs > 0, F.lit(127.0) / maxabs).otherwise(F.lit(0.0))
     q = F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5)).cast("int"))
-    embeddings = embeddings.filter(F.col(vec_col).isNotNull())
+    embeddings = embeddings.filter(F.col("embedding").isNotNull())
     return ensure_min_partitions(embeddings).select(
-        F.col(id_col),
+        "vec_id",
         scale.alias("scale"),
         F.aggregate(q, F.lit(0).cast("long"), lambda a, x: a + x).alias("q_sum"),
         F.array_min(q).alias("q_min"),
@@ -1627,8 +1588,6 @@ def train_pq_codebooks(
     embeddings: DataFrame,
     m: int = 16,
     n_codes: int = 256,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     iterations: int = 10,
     max_train_rows: int = 100_000,
     sample_fraction: float | None = None,
@@ -1656,16 +1615,16 @@ def train_pq_codebooks(
         else embeddings
     )
     pdf = (
-        sampled.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull())
-        .orderBy(id_col)
+        sampled.select("vec_id", "embedding")
+        .filter(F.col("embedding").isNotNull())
+        .orderBy("vec_id")
         .limit(max_train_rows)
-        .select(vec_col)
+        .select("embedding")
         .toPandas()
     )
     import numpy as _np
 
-    x = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
+    x = _np.vstack(pdf["embedding"].to_numpy()).astype(_np.float64)
     norms = _np.linalg.norm(x, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     x = x / norms
@@ -1792,8 +1751,6 @@ def _shortlist_rerank(
     adaptive: bool,
     cap: int = 256,
     with_stats: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """Shared PQ/IVFPQ tail: cut the ADC candidate set to the rerank
     shortlist, fetch raw vectors for it, exact-cosine rerank to top-k.
@@ -1851,7 +1808,7 @@ def _shortlist_rerank(
 
     def fetch_cos(cand: DataFrame) -> DataFrame:
         fetched = embeddings.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
         ).join(F.broadcast(cand), "neighbor_id")
         return with_pairwise_cosine(
             fetched.join(
@@ -1982,8 +1939,6 @@ def similarity_topk_pq(
     queries: DataFrame,
     k: int = 10,
     rerank_factor: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebooks=None,
     m: int = 16,
     n_codes: int = 256,
@@ -2060,9 +2015,7 @@ def similarity_topk_pq(
     cb = (
         np.asarray(codebooks, dtype=np.float64)
         if codebooks is not None
-        else train_pq_codebooks(
-            embeddings, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col
-        )
+        else train_pq_codebooks(embeddings, m=m, n_codes=n_codes)
     )
 
     derived = rerank_factor is None
@@ -2072,7 +2025,7 @@ def similarity_topk_pq(
     # (same pass) — the per-candidate bound the adaptive cut needs.
     codes = with_pq_index_cols(
         ensure_min_partitions(embeddings).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_v")
         ),
         "_v",
         cb,
@@ -2091,7 +2044,7 @@ def similarity_topk_pq(
         )
     qside = with_pq_lut(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         ),
         "q_vec",
         cb,
@@ -2115,7 +2068,6 @@ def similarity_topk_pq(
     res = _shortlist_rerank(
         scored, embeddings, qside, k, rerank_factor,
         adaptive=use_cut, with_stats=with_stats,
-        id_col=id_col, vec_col=vec_col,
     )
     out, adm_stats = res if with_stats else (res, None)
     if derived_cache is not None:
@@ -2132,8 +2084,6 @@ def similarity_topk_ivfpq(
     n_centroids: int = 16,
     nprobe: int = 8,
     rerank_factor: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids=None,
     codebooks=None,
     m: int = 16,
@@ -2189,14 +2139,12 @@ def similarity_topk_ivfpq(
     centers = (
         np.asarray(centroids, dtype=np.float64)
         if centroids is not None
-        else train_ivf_centroids(embeddings, n_centroids, vec_col)
+        else train_ivf_centroids(embeddings, n_centroids)
     )
     cb = (
         np.asarray(codebooks, dtype=np.float64)
         if codebooks is not None
-        else train_pq_codebooks(
-            embeddings, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col
-        )
+        else train_pq_codebooks(embeddings, m=m, n_codes=n_codes)
     )
     dists_k = center_dists_fn(centers)
 
@@ -2209,7 +2157,7 @@ def similarity_topk_ivfpq(
     base_cols = ["neighbor_id", "codes"] + (["pq_err"] if use_cut else [])
     indexed = with_pq_index_cols(
         ensure_min_partitions(embeddings).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_v")
         ),
         "_v",
         cb,
@@ -2229,7 +2177,7 @@ def similarity_topk_ivfpq(
     lut_k = pq_lut_fn(cb)
     qside = arrow_stage(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         ),
         [
             ("lut", "array<array<double>>", lambda pdf: lut_k(pdf["q_vec"])),
@@ -2265,7 +2213,6 @@ def similarity_topk_ivfpq(
     res = _shortlist_rerank(
         scored, embeddings, qside, k, rerank_factor,
         adaptive=use_cut, with_stats=with_stats,
-        id_col=id_col, vec_col=vec_col,
     )
     out, adm_stats = res if with_stats else (res, None)
     if derived_cache is not None:
@@ -2279,8 +2226,6 @@ def ann_index_assign(
     embeddings: DataFrame,
     centroids,
     codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Materialize the stored IVF-PQ index rows for a vector frame:
     (id, cell, codes, qerr) — the coarse cell (argmin squared-L2 to
@@ -2304,7 +2249,7 @@ def ann_index_assign(
     codes_k, dists_k = pq_codes_fn(cb), center_dists_fn(centers)
     return arrow_stage(
         ensure_min_partitions(embeddings).select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
+            "vec_id", F.col("embedding").alias("_v")
         ),
         [
             ("_dists", "array<double>", lambda pdf: dists_k(pdf["_v"])),
@@ -2353,8 +2298,6 @@ def incremental_ann_index(
     batch: DataFrame,
     centroids,
     codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Accept a NEW embeddings batch against an existing IVF-PQ
     index: assign the batch's vectors to the existing cells/codes
@@ -2372,9 +2315,7 @@ def incremental_ann_index(
     one-row verdict; re-training itself stays an offline index build
     (train_ivf_centroids / train_pq_codebooks), never part of this
     update path."""
-    new_rows = ann_index_assign(
-        batch, centroids, codebooks, id_col=id_col, vec_col=vec_col
-    )
+    new_rows = ann_index_assign(batch, centroids, codebooks)
     return base_index.select(
         "vec_id", "cell", "codes", "qerr", F.lit(False).alias("is_new")
     ).unionByName(

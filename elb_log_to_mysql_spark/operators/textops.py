@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 from elb_log_to_mysql_spark.session import ensure_min_partitions, unpersist_on_gc
 
 # Tiny per-language stopword lists for the n-gram/stopword-hit
@@ -46,23 +47,6 @@ def _occurrence_hits(toks: Column, words: list[str]) -> Column:
     for w in words:
         removed = F.array_remove(removed, w)
     return F.size(toks) - F.size(removed)
-
-
-def _tokens(text: Column) -> Column:
-    """Lower-cased whitespace tokens as a CODEGEN-CAPABLE expression.
-
-    Exactly `filter(split(lower(text), '\\s+'), t -> t != '')`:
-    splitting on \\s+ can only produce empty strings at the two array
-    boundaries (any interior separator run is one match), so
-    array_remove(.., '') strips precisely those. The crucial
-    difference from the lambda-filter form: array_remove participates
-    in whole-stage codegen while a lambda HOF is a CodegenFallback
-    that forces the WHOLE enclosing stage into interpreted eval — the
-    Gopher gate measured 355 s cold / 28 s warm at 80x on the HOF
-    form purely from the interpreted tree's JIT/GC warm-up (SCALE.md
-    round-10); keeping the hot per-row path HOF-free is what fixes
-    it."""
-    return F.array_remove(F.split(F.lower(text), r"\s+"), "")
 
 
 def text_stats(documents: DataFrame) -> DataFrame:
@@ -177,7 +161,6 @@ def winnow_fingerprints(
     documents: DataFrame,
     k: int = 4,
     w: int = 5,
-    text_col: str = "text",
 ) -> DataFrame:
     """Winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003 —
     the MOSS algorithm): from each sliding window of `w` consecutive
@@ -202,7 +185,7 @@ def winnow_fingerprints(
     each selected fingerprint (string md5). Docs shorter than
     w + k - 1 tokens emit nothing (no full window exists).
     """
-    toks = _ws_tokens(F.col(text_col))
+    toks = _ws_tokens(F.col("text"))
 
     def _select(h: Column) -> Column:
         n_win = F.size(h) - (w - 1)
@@ -308,8 +291,6 @@ def chunk_documents(
     documents: DataFrame,
     chunk_tokens: int = 128,
     overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Sliding token-window chunking — the pre-tokenization step every
     LLM training/RAG corpus build applies before packing or embedding:
@@ -324,7 +305,7 @@ def chunk_documents(
     one window still yields exactly one chunk. Token-less documents
     yield no rows (explode of the empty chunk array).
 
-    Shape at scale: tokens come from the codegen `_tokens` expression,
+    Shape at scale: tokens come from the codegen `ws_tokens` expression,
     bound to a real column so the chunk-building HOF (array-per-row —
     the justified HOF class, see _word_ngram_structs) evaluates the
     tokenization once per document; the explode is a Generate in the
@@ -336,7 +317,7 @@ def chunk_documents(
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
     base = ensure_min_partitions(documents).select(
-        F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("t")
+        "doc_id", ws_tokens(F.col("text")).alias("t")
     ).filter(F.size("t") >= 1)
     n = F.size("t")
     n_chunks = F.floor(
@@ -395,7 +376,7 @@ def _word_ngram_structs(text: Column, n: int) -> Column:
     token tuple <-> "t1 t2 .. tn" string map is injective and counts
     match the string form exactly); human-facing consumers concat_ws
     the fields back to the gram string — same bytes as the old form."""
-    toks = _tokens(text)
+    toks = ws_tokens(text)
     m = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
     return F.arrays_zip(*[F.slice(toks, j + 1, m) for j in range(n)])
 
@@ -435,7 +416,7 @@ def repetition_filter(
     """
     docs = ensure_min_partitions(documents)
 
-    toks = _tokens(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     m = F.greatest(F.size(toks) - F.lit(1), F.lit(0))
     # arrays_zip pads the short third slice with null: position i has
     # w3 null exactly when no trigram starts there (the last bigram
@@ -540,7 +521,7 @@ def quality_filter(
     SCALE.md round-10). The HOF-free equivalents, provably identical
     per token-run semantics (tokens are maximal \\S+ runs):
 
-    - n_words:        size of the _tokens array (codegen CSE
+    - n_words:        size of the ws_tokens array (codegen CSE
                       evaluates the shared split once per row).
     - sum(len(tok)):  length(text with all \\s stripped) — removing
                       whitespace leaves exactly the concatenated
@@ -554,7 +535,7 @@ def quality_filter(
                       don't.
     """
     lt = F.lower(F.col("text"))
-    toks = _tokens(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     n = F.size(toks)
     n1 = F.greatest(n, F.lit(1))
     sum_len = F.length(F.regexp_replace(lt, r"\s+", ""))
@@ -659,7 +640,6 @@ def unigram_prevalence(documents: DataFrame) -> DataFrame:
     keys, and at corpus scale the vocab side is far too large to
     broadcast, so a shuffle join is the right plan, not a fallback.
     """
-    from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 
     toks = ensure_min_partitions(documents).select(
         "doc_id", "lang", F.explode(ws_tokens(F.col("text"))).alias("tok")
@@ -704,7 +684,6 @@ def bigram_condprob(documents: DataFrame) -> DataFrame:
     positions↔probs, Zipf-skewed on stopword contexts, the AQE
     skew-join case, same as unigram_prevalence.
     """
-    from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 
     toks_arr = ws_tokens(F.col("text"))
 
@@ -776,7 +755,6 @@ def lm_perplexity_filter(documents: DataFrame) -> DataFrame:
     Python.
     """
     from elb_log_to_mysql_spark.functions.numeric import davg
-    from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 
     toks_arr = ws_tokens(F.col("text"))
 
@@ -853,7 +831,6 @@ def bpe_pair_counts(documents: DataFrame, k: int = 40) -> DataFrame:
     chars are filtered BEFORE the position fan-out: Spark's
     `sequence(1, 0)` steps downward and would crash substring.
     """
-    from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 
     words = ensure_min_partitions(documents).select(
         F.explode(
@@ -938,9 +915,7 @@ def _bpe_apply_merge(sym: Column, pa: Column, pb: Column, merged: Column) -> Col
     )
 
 
-def bpe_merge_loop(
-    documents: DataFrame, n_merges: int = 3, text_col: str = "text"
-) -> DataFrame:
+def bpe_merge_loop(documents: DataFrame, n_merges: int = 3) -> DataFrame:
     """Tokenizer training's OUTER loop (Sennrich et al. 2016), not just
     its first count pass (`bpe_pair_counts`): iteratively count
     adjacent symbol pairs, merge the global argmax, re-segment, and
@@ -974,7 +949,7 @@ def bpe_merge_loop(
     n_occurrences) — the ordered merge list IS the trained tokenizer.
     Deterministic: integer counts, total tiebreak.
     """
-    merge_rows, _ = _bpe_train(documents, n_merges, text_col)
+    merge_rows, _ = _bpe_train(documents, n_merges)
     if not merge_rows:
         # no mergeable pair ever existed (e.g. a corpus with no
         # [a-z0-9]{2,} tokens, or n_merges=0): the oracle's b_i CTEs
@@ -990,14 +965,13 @@ def bpe_merge_loop(
     return out
 
 
-def _bpe_train(documents, n_merges, text_col):
+def _bpe_train(documents, n_merges):
     """Shared BPE trainer behind `bpe_merge_loop` (returns the merge
     list) and `bpe_encode` (returns the corpus token table after the
     merges are applied). Returns (merge_rows, words) where merge_rows
     is a list of 1-row DataFrames (step, pair_a, pair_b, merged,
     n_occurrences) and words is the distinct-word frequency table
     with its symbol arrays re-segmented by every applied merge."""
-    from elb_log_to_mysql_spark.operators.dedup import ws_tokens
 
     w = F.col("w")
     words = (
@@ -1005,7 +979,7 @@ def _bpe_train(documents, n_merges, text_col):
         .select(
             F.explode(
                 F.filter(
-                    ws_tokens(F.col(text_col)),
+                    ws_tokens(F.col("text")),
                     lambda t: (F.length(t) >= 2) & t.rlike("^[a-z0-9]+$"),
                 )
             ).alias("w")
@@ -1079,7 +1053,6 @@ def bpe_encode(
     documents: DataFrame,
     n_merges: int = 3,
     k: int = 40,
-    text_col: str = "text",
 ) -> DataFrame:
     """Tokenizer training's third act — ENCODE: apply the learned
     merge list back to the corpus and emit the resulting vocabulary
@@ -1105,7 +1078,7 @@ def bpe_encode(
     tokenizer at this merge budget would ship. Deterministic:
     integer counts, total tiebreak (token is unique per row).
     """
-    _, words = _bpe_train(documents, n_merges, text_col)
+    _, words = _bpe_train(documents, n_merges)
     return (
         words.select(F.explode("s").alias("token"), "freq")
         .groupBy("token")
@@ -1127,7 +1100,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25 lexical retrieval: top-k documents per query term.
 
@@ -1153,7 +1125,7 @@ def bm25_topk(
     # 8 parquet scans at r15 measurement; cache lifetime is GC-scoped).
     toks = (
         ensure_min_partitions(documents)
-        .select("doc_id", _tokens(F.col(text_col)).alias("t"))
+        .select("doc_id", ws_tokens(F.col("text")).alias("t"))
         .filter(F.size("t") > 0)
         .persist()
     )

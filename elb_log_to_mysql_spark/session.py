@@ -162,15 +162,16 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
 _SCAN_PARTITIONS_CACHE: dict[tuple, int] = {}
 
 
-def ensure_min_partitions(df, target: int | None = None):
+def ensure_min_partitions(df):
     """Spread a narrow input across the cluster for compute-dense
     derivations (hashing, shingling, vector math).
 
     A small parquet file arrives as ONE input split, so every
     downstream expression runs on one core no matter how wide the
     cluster is. Repartition ONLY when the scan is narrower than the
-    target: at real scale the source already has thousands of splits
-    and this is a no-op — it never adds a shuffle to a big read.
+    session's `defaultParallelism`: at real scale the source already
+    has thousands of splits and this is a no-op — it never adds a
+    shuffle to a big read.
 
     The partition-count probe (`df.rdd`) forces plan analysis + RDD
     conversion, so its result is memoized by the scan's file set
@@ -180,7 +181,7 @@ def ensure_min_partitions(df, target: int | None = None):
     partitioning is exactly the file scan's.
     """
     sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
+    target = sc.defaultParallelism
     try:
         # Keyed by (app id, file set): a new session/JVM or an
         # overwritten table path must never reuse a stale probe.

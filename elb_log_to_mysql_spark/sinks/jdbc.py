@@ -194,31 +194,26 @@ def write_jdbc_idempotent(
     it with headroom while staying well under MySQL's row limits
     (equality predicates only — no index needed on this column).
 
-    The frame is persisted for the duration of the write unless the
-    caller already did: this sink makes TWO passes (lineage-key
-    distinct, then the append), and under foreachBatch each pass
-    re-runs the whole upstream plan — for the ALB ingest that is the
-    entire parse chain, doubling the per-batch scan (measured as 2x
-    numInputRows in streaming progress before this guard)."""
-    caller_persisted = df.storageLevel.useMemory or df.storageLevel.useDisk
-    if not caller_persisted:
-        df = df.persist()
-    try:
-        files = distinct_source_files(df, source_col)
-        jdbc_delete_files(
-            df.sparkSession, url, files, table=table, source_col=source_col,
-            driver=driver,
-            user=write_kwargs.get("user"),
-            password=write_kwargs.get("password"),
-        )
-        write_kwargs.setdefault(
-            "create_table_column_types",
-            f"{source_col} VARCHAR({LINEAGE_VARCHAR_LEN})",
-        )
-        write_jdbc(df, url, table=table, driver=driver, **write_kwargs)
-    finally:
-        if not caller_persisted:
-            df.unpersist()
+    The sink makes TWO passes over `df` (lineage-key distinct, then
+    the append) and caches nothing itself: a caller whose plan is
+    costly hands it a frame over its own cache. Both ALB ingests pass
+    `sources/alb.py:parse_and_classify` rows, whose parse cache both
+    passes read, so each batch is held in the block manager once. The
+    lineage pass then plans as an aggregate over that cache (Spark's
+    outer-join elimination drops the UA join from a `distinct` of the
+    file column), and only the append runs the broadcast UA join."""
+    files = distinct_source_files(df, source_col)
+    jdbc_delete_files(
+        df.sparkSession, url, files, table=table, source_col=source_col,
+        driver=driver,
+        user=write_kwargs.get("user"),
+        password=write_kwargs.get("password"),
+    )
+    write_kwargs.setdefault(
+        "create_table_column_types",
+        f"{source_col} VARCHAR({LINEAGE_VARCHAR_LEN})",
+    )
+    write_jdbc(df, url, table=table, driver=driver, **write_kwargs)
     return files
 
 

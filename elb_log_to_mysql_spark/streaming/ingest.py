@@ -57,11 +57,13 @@ def stream_alb_to_jdbc(
     # idempotent sink makes two passes (lineage-key distinct + write)
     # and UA classification two more (distinct agents + join), so an
     # unpersisted plan would re-run from_csv 3-4x per batch (visible
-    # as 2-3x numInputRows in streaming progress). The distinct-agent
-    # join runs the ~300-regex uap walk once per DISTINCT agent per
-    # batch, and the micro-batch plan carries a broadcast join instead
-    # of a ~600-arm CASE that Catalyst re-analyzes every trigger. The
-    # parse cache is released per micro-batch.
+    # as 2-3x numInputRows in streaming progress). The sink caches
+    # nothing itself, so the parse cache is the batch's one cached
+    # copy. The distinct-agent join runs the ~300-regex uap walk once
+    # per DISTINCT agent per batch, and the micro-batch plan carries a
+    # broadcast join instead of a ~600-arm CASE that Catalyst
+    # re-analyzes every trigger. The parse cache is released per
+    # micro-batch.
     def sink(batch_df, _batch_id: int) -> None:
         rows, parsed = parse_and_classify(batch_df)
         try:

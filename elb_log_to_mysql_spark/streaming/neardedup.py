@@ -65,8 +65,6 @@ _CFG = (SHINGLE_N, NUM_HASHES, BANDS)
 def hot_bucket_blocklist(
     documents,
     max_bucket: int = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(band_idx, band_hash) keys whose occupancy exceeds
     `max_bucket` over a reference corpus — the static skew guard for
@@ -83,7 +81,7 @@ def hot_bucket_blocklist(
     enough to trip it are near-duplicates of each other by definition;
     route them to the batch dedup (which caps per-bucket work) rather
     than the incremental stream."""
-    banded = band_rows(shingle_sets(documents, id_col, text_col))
+    banded = band_rows(shingle_sets(documents))
     # Band keys are opaque hashes: a blocklist built under different
     # band parameters would anti-join NOTHING and silently disable the
     # skew guard. The band config rides IN the frame as literal
@@ -100,8 +98,6 @@ def hot_bucket_blocklist(
 
 def stream_band_collisions(
     documents,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     event_time: str | None = None,
     horizon: str = "24 hours",
     blocklist: DataFrame | None = None,
@@ -128,7 +124,7 @@ def stream_band_collisions(
     The module docstring states what these bounds do not do.
     """
     carry = (event_time,) if event_time else ()
-    banded = band_rows(shingle_sets(documents, id_col, text_col, carry))
+    banded = band_rows(shingle_sets(documents, carry))
     if blocklist is not None:
         if not set(_CFG_COLS) <= set(blocklist.columns):
             raise ValueError(
@@ -193,8 +189,6 @@ def stream_band_collisions(
 def verify_candidate_pairs(
     candidates: DataFrame,
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
 ) -> DataFrame:
     """Exact-Jaccard verification of streamed candidate pairs against
@@ -216,8 +210,6 @@ def verify_candidate_pairs(
         .distinct()
     )
     sh = shingle_sets(
-        documents.join(cand_ids, F.col(id_col) == F.col("_cand_doc_id"), "left_semi"),
-        id_col,
-        text_col,
+        documents.join(cand_ids, F.col("doc_id") == F.col("_cand_doc_id"), "left_semi")
     ).persist()
     return unpersist_on_gc(verify_pairs(cand, sh, threshold), sh)

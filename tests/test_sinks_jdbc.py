@@ -8,6 +8,8 @@ MySQL in production differs only by URL + driver jar.
 
 from __future__ import annotations
 
+import functools
+import gc
 import tempfile
 
 import pytest
@@ -344,3 +346,52 @@ def test_stream_ingest_crash_after_write_before_commit(spark, tmp_path, monkeypa
     want = sorted(_read_back(spark, clean_url, "elb_log_data").collect())
     assert len(want) == 18
     assert got == want
+
+
+def test_alb_sink_caches_each_batch_once(spark, tmp_path, monkeypatch):
+    """`run_etl` hands the sink `parse_and_classify` rows, and the sink
+    caches nothing itself: during its lineage pass the ingest has added
+    exactly one CacheManager entry, the parse cache (no join in its
+    plan). The lineage `distinct` reads that cache directly — Spark's
+    outer-join elimination drops the UA join from it."""
+    from elb_log_to_mysql_spark import main as main_mod
+    from elb_log_to_mysql_spark.sinks import jdbc
+
+    src = tmp_path / "logs"
+    _gzip_logs(src, n_files=2, n_lines=5)
+    url = _derby_url()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    cached = cm.getClass().getDeclaredField("cachedData")
+    cached.setAccessible(True)
+    identity = spark._jvm.System.identityHashCode
+
+    def entries():
+        seq = cached.get(cm)
+        return {identity(seq.apply(i)): seq.apply(i) for i in range(seq.size())}
+
+    gc.collect()
+    before = set(entries())
+    seen = {}
+    real = jdbc.distinct_source_files
+
+    def lineage_pass(df, source_col="log_source_file"):
+        seen["added"] = [
+            e.plan().toString() for k, e in entries().items() if k not in before
+        ]
+        seen["plan"] = (
+            df.select(source_col).distinct()._jdf.queryExecution()
+            .optimizedPlan().toString()
+        )
+        return real(df, source_col)
+
+    monkeypatch.setattr(jdbc, "distinct_source_files", lineage_pass)
+    monkeypatch.setattr(
+        main_mod,
+        "write_jdbc_idempotent",
+        functools.partial(jdbc.write_jdbc_idempotent, driver=DERBY_DRIVER),
+    )
+    assert main_mod.run_etl(spark, str(src / "*.gz"), url) == 10
+    assert len(seen["added"]) == 1, seen["added"]
+    assert "Join" not in seen["added"][0]
+    assert "InMemoryRelation" in seen["plan"]
+    assert "Join" not in seen["plan"]

@@ -89,9 +89,10 @@ def drain(
     committed = {"n": 0}
 
     # parse ONCE per micro-batch into a persisted frame, classify UA
-    # over the distinct agents, multi-pass sink reads the persisted
-    # data — the exact shape streaming/ingest.py:stream_alb_to_jdbc
-    # runs (and the fix for the r8 throughput dip: see SCALE.md)
+    # over the distinct agents; both passes of the sink (which caches
+    # nothing itself) read that one parse cache — the exact shape
+    # streaming/ingest.py:stream_alb_to_jdbc runs (and the fix for
+    # the r8 throughput dip: see SCALE.md)
     def sink(batch_df, _batch_id: int) -> None:
         if fail_after_batches is not None and committed["n"] >= fail_after_batches:
             raise RuntimeError("injected mid-stream failure")
