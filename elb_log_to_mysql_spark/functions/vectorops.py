@@ -248,7 +248,6 @@ def minhash_sig_rows(
     frame,
     num_hashes: int = 64,
     seed: int = 42,
-    shingles_col: str = "shingles",
     carry: tuple[str, ...] = (),
 ):
     """(doc_id, sig[, carry...]) frame via a mapInPandas signer.
@@ -266,7 +265,7 @@ def minhash_sig_rows(
     docstring); batch near_dedup and the streaming signer share this
     path, so signatures are bit-identical across both.
 
-    `frame` must contain `doc_id`, an array<long> `shingles_col`, and
+    `frame` must contain `doc_id`, an array<long> `shingles`, and
     any `carry` columns, which pass through untouched.
     """
     from pyspark.sql import types as T
@@ -282,13 +281,13 @@ def minhash_sig_rows(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            sigs = minhash_matrix(pdf[shingles_col], num_hashes, a_co, b_co)
+            sigs = minhash_matrix(pdf["shingles"], num_hashes, a_co, b_co)
             out = {"doc_id": pdf["doc_id"], "sig": list(sigs)}
             for c in carry:
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    return frame.select("doc_id", shingles_col, *carry).mapInPandas(
+    return frame.select("doc_id", "shingles", *carry).mapInPandas(
         _sign, schema=schema
     )
 

@@ -43,8 +43,9 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scrub(df: DataFrame, out_col: str = "clean_text") -> DataFrame:
-    """Redact PII spans and count redactions per category.
+def pii_scrub(df: DataFrame) -> DataFrame:
+    """Redact PII spans into `clean_text` and count redactions per
+    category.
 
     Counts are taken on the ORIGINAL text (before any replacement so
     categories don't shadow each other); replacements then apply in
@@ -61,7 +62,7 @@ def pii_scrub(df: DataFrame, out_col: str = "clean_text") -> DataFrame:
     clean: Column = F.col("text")
     for name, pat in PII_PATTERNS.items():
         clean = F.regexp_replace(clean, pat, f"<{name.upper()}>")
-    return out.withColumn(out_col, clean)
+    return out.withColumn("clean_text", clean)
 
 
 def _bench_split(

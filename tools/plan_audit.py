@@ -11,6 +11,7 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 
@@ -52,6 +53,12 @@ def main() -> None:
     for name in sorted(QUERIES):
         if name in SKIP:
             continue
+        # Each row starts from a clean cache: the previous result (and
+        # the caches tied to its lifetime) is dropped and every cached
+        # frame goes, so no row shows a frame an earlier entry cached.
+        df = r = None
+        gc.collect()
+        spark.catalog.clearCache()
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         r = plan_report(df)
